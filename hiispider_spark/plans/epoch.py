@@ -30,6 +30,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hiispider_spark import frames
 from hiispider_spark.functions.canon import canonical_url_col, host_col
 from hiispider_spark.operators import politeness as pol
 from hiispider_spark.operators import seen as seen_ops
@@ -71,7 +72,7 @@ class EpochConfig:
     follow_links: bool = True
     # per-epoch summary counters. frontier_size comes from manifest
     # footer counts (O(1), no job — catalog.row_count); n_granted is one
-    # count over the persisted slice. Cheap enough to default on.
+    # count over the checkpointed slice. Cheap enough to default on.
     collect_stats: bool = True
     # host-level negative cache (O-7): hosts with ≥ threshold failures
     # in one epoch are embargoed for neg_cache_ttl_s
@@ -260,26 +261,36 @@ def run_epoch(
         _t0 = t
 
     frontier = cat.read("frontier")
-    # Materialization discipline (r4): every persisted frame is
-    # guaranteed materialized BEFORE the concurrent write pool starts —
-    # by the dequeue collect (sl), the fused politeness+fetch+failed
-    # job (bucketed, fetched, fetched_meta, failed), the extract count
-    # (extracted_new), and the inserted collect (hashed, inserted).
-    # Between those serial jobs there are NO redundant eager counts:
-    # an intermediate count only moves the same work one job earlier
-    # (measured wall-neutral at sandbox scale, one fewer scheduling
-    # round per dropped count — which is what matters at 1000
-    # executors). The sibling-race the old per-stage counts guarded
-    # against can only occur across CONCURRENT jobs; the write jobs
-    # (submitted eagerly, overlapping the later serial phases) only
-    # ever consume frames ALREADY materialized by a serial job — each
-    # _submit below sits after the count/collect that filled its
-    # inputs' caches — so no persisted frame is first-computed by two
-    # jobs at once.
-    sl = dequeue_topk(
+    # Checkpoint boundaries: every frame reused across jobs is a lazy
+    # local checkpoint (frames.cut), not a persist(). A persisted frame
+    # is an InMemoryRelation embedding its whole upstream plan, nested
+    # caches included, and Spark re-prints that plan on the driver at
+    # every query start and AQE re-plan. On the crawl_discover
+    # benchmark (seed 7) that was 16 MB of SQL plan events in an
+    # ordinary epoch and 167 MB in a fold epoch, whose frontier write
+    # alone posted five 18 MB AQE updates; with checkpoints, 1.0 and
+    # 2.2 MB. A checkpointed frame is a leaf LogicalRDD, so each
+    # downstream plan holds only its own operators.
+    #
+    # Every frame is filled BEFORE the concurrent write pool reads it,
+    # by a serial driver-thread job: the dequeue collect (sl), the fused
+    # politeness+fetch+failed job and the checkpoint calls before it
+    # (bucketed, fetched, fetched_meta, failed), the extract count
+    # (extracted_new), and the inserted checkpoint + collect (hashed,
+    # inserted). Under AQE a lazy checkpoint call itself runs the
+    # frame's shuffle stages; only its final stage waits for the first
+    # scan. There are NO redundant eager counts between those jobs: an
+    # intermediate count only moves the same work one job earlier, at
+    # the price of one more scheduling round. The write jobs (submitted
+    # eagerly, overlapping the later serial phases) only consume frames
+    # a serial job already filled — each _submit sits after the
+    # count/collect that filled its inputs — so no frame is first
+    # computed by two concurrent jobs. All blocks are released at epoch
+    # end (frames.release; unpersist() is a no-op on a checkpoint).
+    sl = frames.cut(dequeue_topk(
         frontier, ts, cfg.k_per_partition, aging_weight=cfg.aging_weight
-    ).persist()
-    # one job materializes the persist AND yields the dequeue count plus
+    ))
+    # one job fills the checkpoint AND yields the dequeue count plus
     # the touched buckets (bounded by P rows — the only driver collect
     # in the pipeline besides counters); everything the epoch rewrites
     # lives in these buckets + the buckets of inserted links
@@ -306,17 +317,17 @@ def run_epoch(
     )
     bucketed_raw = None
     if cfg.max_inflight is not None:
-        # the cap collects per-bucket grant counts → persist its input
-        bucketed_raw = bucketed.persist()
+        # the cap collects per-bucket grant counts → checkpoint its input
+        bucketed_raw = frames.cut(bucketed)
         bucketed_raw.count()
         bucketed = pol.apply_global_cap(bucketed_raw, cfg.max_inflight)
-    # persisted but NOT eagerly counted: the first downstream
-    # materialization (the failed/fetched_meta job below) computes the
-    # politeness stage once into the cache, and every later consumer —
-    # including the concurrent write jobs — reads the cached blocks.
-    # An eager count here was one extra scheduling round per epoch
-    # whose only effect was moving the same work one job earlier.
-    bucketed = bucketed.persist()
+    # checkpointed but NOT eagerly counted: the first downstream scan
+    # (the fetch and failed checkpoints below) fills it once, and every
+    # later consumer — including the concurrent write jobs — reads the
+    # checkpointed blocks. An eager count here was one extra scheduling
+    # round per epoch whose only effect was moving the same work one
+    # job earlier.
+    bucketed = frames.cut(bucketed)
     granted = bucketed.filter(F.col("granted")).select(*FRONTIER_COLS)
     deferred = bucketed.filter(~F.col("granted")).select(*FRONTIER_COLS)
 
@@ -325,29 +336,30 @@ def run_epoch(
     # memory store across many concurrent tasks GC-thrashes; streaming
     # to local disk scales linearly with cores.
     fetched, _ = fetch_join(granted, pages)
-    fetched = with_content_sha1(fetched).persist(StorageLevel.DISK_ONLY)
+    fetched = frames.cut(
+        with_content_sha1(fetched), StorageLevel.DISK_ONLY
+    )
     # narrow twin of the fetch result: requeue/failed/lineage/page-cache
     # only need frontier columns + digest + length — reading those
-    # through the html-bearing DISK_ONLY cache re-scans ~KB-wide rows
-    # once PER CONSUMER (measured as the write phase's hidden cost);
-    # a slim in-memory projection is scanned instead
-    fetched_meta = fetched.select(
+    # through the html-bearing DISK_ONLY checkpoint re-scans ~KB-wide
+    # rows once PER CONSUMER (measured as the write phase's hidden
+    # cost); a slim in-memory projection is scanned instead
+    fetched_meta = frames.cut(fetched.select(
         *FRONTIER_COLS, "content_sha1", F.length("html").alias("html_len")
-    ).persist()
-    # failed re-derived from PERSISTED frames — the tuple's own
-    # anti-join references the pre-persist plan and would run the
-    # broadcast join against the page store a second time. Persisted
-    # itself: three downstream jobs (frontier backoff, lineage,
-    # neg_cache) would otherwise each recompute the anti-join.
-    failed = granted.join(
-        fetched_meta.select("url"), "url", "left_anti"
-    ).persist()
-    # ONE job materializes politeness + fetch + sha1 + the slim meta
-    # twin + failed (the fused sched/fetch stage) AND yields both
-    # counts: computing the failed branch scans fetched_meta, whose
-    # projection pulls the DISK_ONLY fetched cache into existence
-    # through the whole upstream chain; the fetched branch then reads
-    # the just-filled cache. Folding the two counts into one union-agg
+    ))
+    # failed re-derived from CHECKPOINTED frames — the tuple's own
+    # anti-join references the pre-checkpoint plan and would run the
+    # join against the page store a second time. Checkpointed itself:
+    # three downstream jobs (frontier backoff, lineage, neg_cache)
+    # would otherwise each recompute the anti-join.
+    failed = frames.cut(
+        granted.join(fetched_meta.select("url"), "url", "left_anti")
+    )
+    # The checkpoint calls above already ran the shuffle and broadcast
+    # stages (politeness, the fetch join, and the failed anti-join's
+    # exchange, whose scan of fetched_meta fills it and the DISK_ONLY
+    # fetched blocks behind it); ONE job then fills what is left AND
+    # yields both counts. Folding the two counts into one union-agg
     # job drops a full scheduling round per epoch (the count was cheap
     # but its job round-trip was not — the per-epoch fixed constant is
     # what caps scaling efficiency). Stats arithmetic still closes as
@@ -368,9 +380,9 @@ def run_epoch(
     # submitted NOW, from a driver thread, so it back-fills executor
     # slots while the epoch's remaining serial phases (extract, link
     # discovery) run — instead of serializing the whole write pool
-    # after them. Inputs are all persisted-and-materialized frames
-    # (the r4 materialization discipline), so no concurrent-first-use
-    # race exists; per-table writes stage into distinct _staged keys
+    # after them. Inputs are all checkpointed-and-filled frames (the
+    # checkpoint boundaries above), so no concurrent-first-use race
+    # exists; per-table writes stage into distinct _staged keys
     # (GIL-safe, one committing thread at the end — catalog notes).
     from concurrent.futures import ThreadPoolExecutor
 
@@ -495,13 +507,15 @@ def run_epoch(
     )
     _submit("page_cache", cache_job)
 
-    extracted_new = run_extraction(modified, e).persist(StorageLevel.DISK_ONLY)
+    extracted_new = frames.cut(
+        run_extraction(modified, e), StorageLevel.DISK_ONLY
+    )
     n_extracted = extracted_new.count()
     _mark("extract")
 
     # lineage (per-bucket metrics) and the extracted append consume the
-    # just-materialized extract cache (+ already-persisted sl/meta/
-    # failed) — overlap them with link discovery below
+    # just-filled extract checkpoint (+ already-filled sl/meta/failed)
+    # — overlap them with link discovery below
     lin = build_lineage(sl, fetched_meta, extracted_new, failed, e, ts)
     _submit(
         "extracted", lambda: cat.stage_append("extracted", extracted_new)
@@ -521,8 +535,8 @@ def run_epoch(
     if cfg.follow_links:
         from hiispider_spark.functions.siphash import url_hash_udf
 
-        # canonicalize + hash + bucket once, cache — the probe's two
-        # branches (bloom-definite-new ∪ exact-checked) both read this.
+        # canonicalize + hash + bucket once, checkpoint — the probe's
+        # two branches (bloom-definite-new ∪ exact-checked) read this.
         # Builders take column NAMES: memoized plan-build (canon.py
         # module notes), and withColumns batches the py4j round-trips.
         links = explode_items(extracted_new).select(
@@ -532,7 +546,7 @@ def run_epoch(
             from hiispider_spark.operators import scope as sco
 
             links = sco.filter_in_scope(links, url_col="link")
-        hashed = (
+        hashed = frames.cut(
             links
             .select(canonical_url_col("link").alias("url"))
             .dropDuplicates(["url"])
@@ -546,18 +560,18 @@ def run_epoch(
             .withColumn(
                 "part_id", part_id_col("host", "salt", cfg.n_partitions)
             )
-            .persist()
         )
-        # persisted, lazily materialized: the inserted job below is the
-        # first (and, with the trap agg's broadcast subtree, second)
-        # consumer — both inside ONE job, so the cache fills once and
-        # no concurrent-first-use race exists (the write pool starts
-        # only after the inserted collect)
+        # checkpointed, lazily filled: the inserted checkpoint call
+        # below (which runs the probe's shuffle stages) is the first
+        # consumer, with the trap agg's broadcast subtree the second —
+        # both inside ONE query on the driver thread, and no write job
+        # reads hashed (the frontier/seen writes start only after the
+        # inserted collect)
         candidates = hashed
         if cfg.trap_guard:
             from hiispider_spark.operators import traps as tr
 
-            # one agg pass over the (persisted) candidate set; the
+            # one agg pass over the (checkpointed) candidate set; the
             # flagged host list is tiny → broadcast anti-join, so trap
             # URLs never reach the bloom probe or the frontier
             tstats = tr.host_trap_stats(hashed, min_urls=cfg.trap_min_urls)
@@ -566,7 +580,7 @@ def run_epoch(
             candidates, cat.read("seen_set"), cat.read("seen_exact"),
             cfg.bloom_m_bits,
         )
-        inserted = new_frontier_entries(
+        inserted = frames.cut(new_frontier_entries(
             frontier, unseen, ts,
             cfg.n_partitions, cfg.n_salts, cfg.interval_s,
             # candidates already passed the seen-set exact check, and
@@ -577,7 +591,7 @@ def run_epoch(
             # re-deduping would shuffle the candidate set again.
             assume_new=True,
             assume_unique=True,
-        ).persist()
+        ))
         ins_per_part = inserted.groupBy("part_id").count().collect()
         ins_parts = sorted(r.part_id for r in ins_per_part)
         n_inserted = int(sum(r["count"] for r in ins_per_part))
@@ -647,9 +661,16 @@ def run_epoch(
         # of delta-append + immediate compact — identical end state,
         # half the write bytes, and the O(delta-buckets) rewrite moves
         # into the overlapped write pool instead of running serially
-        # after it. The upper bound can fold at most one epoch earlier
-        # than the post-write exact counts — strictly tighter on the
-        # invariants the bounds protect (read fan-in, resolve key-set).
+        # after it. n_dequeued + n_inserted over-counts the delta rows:
+        # deferred and embargoed rows are dequeued but never written.
+        # The exact pre-write row count is n_granted + n_denied +
+        # n_inserted (requeued + backoff = granted). Under heavy
+        # deferral (politeness grants a small share of a large slice)
+        # the bound can exceed compact_delta_rows on EVERY epoch while
+        # the real delta rows stay far below it, so the frontier folds
+        # every epoch: each one rewrites its delta-bearing buckets
+        # instead of appending a small delta. The end state is the same;
+        # the cost is write amplification only.
         fold_frontier = (
             cat.delta_count("frontier") + 1 >= cfg.compact_every
             or cat.delta_row_count("frontier") + n_dequeued + n_inserted
@@ -796,14 +817,12 @@ def run_epoch(
         # compaction just superseded this table's delta files and the
         # rewritten bucket dirs' old versions; reclaim them now (O(files)
         # driver-side, no job). Safe here: the commit landed and every
-        # frame this epoch materialized is persisted or consumed.
+        # frame this epoch materialized is checkpointed or consumed.
         cat.vacuum()
-    for df in (
+    frames.release(
         sl, bucketed, bucketed_raw, fetched, fetched_meta, failed,
         extracted_new, hashed, inserted,
-    ):
-        if df is not None:
-            df.unpersist()
+    )
     return stats
 
 

@@ -29,7 +29,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hiispider_spark import schemas
+from hiispider_spark import frames, schemas
 
 _MANIFEST = "manifest.json"
 
@@ -548,7 +548,9 @@ class IcebergLike:
         if not entry.get("deltas"):
             return []
         delta_rows = self._entry_delta_rows(entry)
-        latest = self._delta_latest(name, entry).persist()
+        # checkpoint, not persist: the bucket rewrite's plan then starts
+        # from a leaf instead of re-printing the delta resolve
+        latest = frames.cut(self._delta_latest(name, entry))
         try:
             dparts = sorted(
                 r[0] for r in latest.select(part_col).distinct().collect()
@@ -564,7 +566,7 @@ class IcebergLike:
                 name, resolved, part_col, dparts, clear_deltas=True
             )
         finally:
-            latest.unpersist()
+            frames.release(latest)
         return dparts
 
     def stage_upsert_fold(
@@ -599,7 +601,10 @@ class IcebergLike:
             prior = self._delta_latest(name, entry)
             latest = self._resolve(name, prior, df.select(*prior.columns),
                                    n_rows)
-        latest = latest.persist()
+        # checkpoint, not persist: ``df`` carries the epoch's whole
+        # upstream plan, which a cached relation would embed in the
+        # resolved write's plan (and re-print at every AQE re-plan)
+        latest = frames.cut(latest)
         try:
             dparts = sorted(
                 r[0] for r in latest.select(part_col).distinct().collect()
@@ -622,7 +627,7 @@ class IcebergLike:
                 name, resolved, part_col, dparts, clear_deltas=True
             )
         finally:
-            latest.unpersist()
+            frames.release(latest)
         return dparts
 
     def stage_append(self, name: str, df: DataFrame) -> None:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hiispider_spark.session import get_spark
@@ -8,6 +10,14 @@ from hiispider_spark.sources.synth import SynthConfig, synth_pages, synth_robots
 SF_DIR = "/root/testdata/sf0.001"
 # tiny corpus for fast operator tests (n_hosts floors at 10)
 TINY = SynthConfig(n_pages=400, n_docs=500)
+
+# The session factory's default driver heap is 48g. In local mode the
+# JVM grows its heap toward that cap rather than collecting, so on a
+# 16 GB host the kernel OOM-kills the suite's JVM part-way through (seen
+# at the test that starts a second session in a subprocess). The test
+# corpora are tiny; 6g is ample. setdefault keeps an explicit
+# SPARK_DRIVER_MEM, and subprocess sessions inherit the value.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

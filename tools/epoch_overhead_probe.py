@@ -6,8 +6,10 @@ efficiency (BENCH/BASELINE.md): it does not shrink with cores, so
 every millisecond cut here raises crawl_eff at the high-core end.
 
 Usage: python tools/epoch_overhead_probe.py [n_epochs=4] [cpus=8]
-Prints per-epoch wall + phase walls; compare medians across code
-changes (same box, same session shape).
+Prints per-epoch wall, the context's persistent-RDD count after the
+epoch (it must stay at its pre-epoch value: a frame whose checkpoint
+blocks were not released shows as growth) and phase walls; compare
+medians across code changes (same box, same session shape).
 """
 
 import sys
@@ -42,6 +44,8 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="overhead_probe_")
     cat = IcebergLike(spark, root)
     bootstrap(spark, cat, synth_seeds(spark, sf, tiny), cfg)
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    print(f"persistent RDDs before epoch 1: {persistent().size()}")
     walls = []
     for _ in range(n_epochs):
         t0 = time.time()
@@ -49,7 +53,9 @@ def main() -> None:
         w = time.time() - t0
         walls.append(w)
         print(
-            f"epoch {st['epoch']}: wall={w:.2f}s phases={st['phase_walls']}"
+            f"epoch {st['epoch']}: wall={w:.2f}s "
+            f"persistent_rdds={persistent().size()} "
+            f"phases={st['phase_walls']}"
         )
     warm = sorted(walls[1:]) if len(walls) > 1 else walls
     print(f"median warm epoch wall: {warm[len(warm) // 2]:.2f}s")
