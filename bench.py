@@ -188,10 +188,6 @@ def run_crawl(
             # count) — benchmark the default-on config
             collect_stats=True,
             epoch_seconds=epoch_seconds,
-            # merge-on-read state commits (the default): the 100 TB
-            # write shape — O(changed rows) per epoch for all three
-            # keyed state tables
-            state_deltas=True,
         )
         _warm_python_workers(spark, cpus)
         if warmup is None:

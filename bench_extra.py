@@ -171,7 +171,6 @@ def run_epoch_probe(n_epochs: int = 3) -> None:
             bloom_m_bits=1 << 24,
             collect_stats=True,
             epoch_seconds=600.0,
-            state_deltas=True,
         )
         cat = IcebergLike(spark, root)
         bootstrap(spark, cat, seeds, cfg)

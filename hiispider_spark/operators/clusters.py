@@ -25,7 +25,9 @@ Two algorithms, selected by the ``algorithm`` parameter:
   nothing wider;
 - per-iteration ``localCheckpoint`` truncates lineage exactly like the
   deep-iteration path in linkgraph.py (r2 lesson: unpersisted
-  iterative lineage re-plans under AQE and crawls);
+  iterative lineage re-plans under AQE and crawls); each superseded
+  checkpoint is released (``frames.release``) once its successor is
+  filled, so only the returned state's blocks stay;
 - convergence is detected from the SAME aggregation that builds the
   next state (label delta / edge-set delta) — one bounded ``take(1)``
   per round, never a full collect.
@@ -35,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from hiispider_spark import frames
 
 
 def _star_contract(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
@@ -83,6 +87,7 @@ def _star_contract(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
         changed = bool(
             nxt.exceptAll(cur).take(1) or cur.exceptAll(nxt).take(1)
         )
+        frames.release(cur)  # superseded; nxt is already filled
         cur = nxt
         if not changed:
             break
@@ -153,6 +158,7 @@ def dedup_clusters(
                 merged.filter(F.col("label") != F.col("_old")).take(1)
             )
             merged.unpersist()
+            frames.release(labels)  # superseded; new_labels is filled
             labels = new_labels
             if converged:
                 break

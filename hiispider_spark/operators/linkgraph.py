@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hiispider_spark import frames
+
 HREF_RE = r'href="([^"]*)"'
 HOST_RE = r"://([^/]*)"
 
@@ -92,7 +94,9 @@ def host_pagerank(
     # shape, n_iter ≤ 5) stay lazy over the checkpointed edges and
     # materialize in one job at the end. Values are identical either
     # way: each step rounds to 10 dp, so checkpointing never changes a
-    # value.
+    # value. A superseded step's checkpoint is released once the next
+    # one is filled, and deg's once the last step is: the result reads
+    # only the edge set and the final contributions.
     truncate = n_iter > 5
     deg = edges.groupBy("src").agg(
         F.count("*").cast("double").alias("d")
@@ -112,21 +116,25 @@ def host_pagerank(
     rank_of_c = F.round(
         F.lit(base) + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0)), 10
     )
-    for i in range(n_iter):
+    for _ in range(n_iter):
         if contrib is None:
             ranked = edges.withColumn("rank", F.lit(1.0 / n))
         else:
             ranked = edges.join(
                 F.broadcast(contrib), edges["src"] == contrib["host"], "left"
             ).withColumn("rank", rank_of_c)
-        contrib = (
+        nxt = (
             ranked.join(F.broadcast(deg), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") / F.col("d")).alias("c"))
             .select(F.col("dst").alias("host"), "c")
         )
         if truncate:
-            contrib = contrib.localCheckpoint(eager=True)
+            nxt = nxt.localCheckpoint(eager=True)
+            frames.release(contrib)  # None on the first step
+        contrib = nxt
+    if truncate:
+        frames.release(deg)
     out = nodes.join(F.broadcast(contrib), "host", "left").select(
         "host", F.round(rank_of_c, 6).alias("rank")
     )

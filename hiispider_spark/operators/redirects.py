@@ -28,7 +28,8 @@ f_r(f_r(x))``), so ``max_hops`` is covered in ceil(log2(max_hops))
 rounds — same logarithmic-round discipline as the star contraction in
 clusters.py. Per round: one shuffle hash join on the current node,
 state rows stay (string, string, int); ``localCheckpoint`` truncates
-iterative lineage (r2 lesson). At 10^10 the join key becomes
+iterative lineage (r2 lesson), and each superseded round's checkpoint
+is released once the next one is filled. At 10^10 the join key becomes
 url_hash with strings resolved once at the end; the sandbox keeps raw
 URLs because alias tables are tiny relative to the frontier
 (10^6-10^8 redirect rows per crawl snapshot).
@@ -45,6 +46,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hiispider_spark import frames
 
 
 def resolve_redirects(
@@ -73,6 +76,10 @@ def resolve_redirects(
         .localCheckpoint()
     )
     state = jump.select(F.col("src").alias("s"), "cur", "hops")
+    # the checkpoint behind ``jump``: released when the next round's
+    # state becomes the jump map (the result reads only the last state
+    # and the last jump map)
+    jump_ckpt = jump
     rounds = max(1, math.ceil(math.log2(max(2, max_hops))))
     for _ in range(rounds):
         m = jump.select(
@@ -90,6 +97,8 @@ def resolve_redirects(
         if not state.filter("moved").take(1):
             break
         # the doubled state is also the next round's jump map
+        frames.release(jump_ckpt)
+        jump_ckpt = state
         jump = state.select(F.col("s").alias("src"), "cur", "hops")
     # rows whose cur still has an outgoing edge never terminated
     open_src = jump.select(F.col("src").alias("open_s")).distinct()

@@ -85,20 +85,17 @@ class EpochConfig:
     # total grants per epoch across ALL hosts, waterfilled across
     # buckets — None keeps per-host budgets only (golden fixtures)
     max_inflight: int | None = None
-    # Merge-on-read state commits (default — the 10^10 write shape):
-    # each epoch appends a delta file of only the CHANGED rows for every
-    # keyed state table — frontier (requeued + backoff + denied +
-    # inserted; deferred/embargoed rows are byte-unchanged so the base
-    # stays authoritative), page_cache (fetched digests), politeness
-    # (touched hosts) — instead of rewriting every touched bucket. At a
-    # 10^10-row frontier where every bucket dequeues every epoch,
-    # partition-level overwrite still writes O(table) for each of them;
-    # deltas write O(epoch work). Reads resolve newest-wins
+    # State commits are merge-on-read: each epoch appends a delta file
+    # of only the CHANGED rows of every keyed state table — frontier
+    # (requeued + backoff + denied + inserted; deferred/embargoed rows
+    # are byte-unchanged, so the base stays authoritative), page_cache
+    # (fetched digests), politeness (touched hosts) — so an epoch writes
+    # O(epoch work), never O(table). Reads resolve newest-wins
     # (catalog.MERGE_KEYS, size-gated broadcast anti-join); compaction
     # folds deltas into bucket files when EITHER the file-set count
     # (read fan-in) or the accumulated delta rows (resolve key-set /
-    # broadcast size) passes its bound. False = partition-level
-    # overwrite commits (byte-identical state, more write amplification).
+    # broadcast size) passes its bound.
+    # Only True is accepted; the field stays for perfbench/crawl.py.
     state_deltas: bool = True
     compact_every: int = 8
     compact_delta_rows: int = 4_000_000
@@ -151,6 +148,13 @@ class EpochConfig:
     recrawl_min_s: float = 60.0
     recrawl_max_s: float = 604800.0
 
+    def __post_init__(self) -> None:
+        if not self.state_deltas:
+            raise ValueError(
+                "state_deltas=False (partition-overwrite state commits) "
+                "was removed; epochs always commit merge-on-read deltas"
+            )
+
     @classmethod
     def production(cls, **overrides) -> "EpochConfig":
         """Every scale guard ON — the configuration a 10^10-URL
@@ -172,7 +176,6 @@ class EpochConfig:
             max_inflight=1 << 20,        # global in-flight cap
             politeness_impl="column",    # JVM twin (fetch is a join)
             boot_stagger_s=300,          # spread the first-fetch wave
-            state_deltas=True,           # merge-on-read state commits
             collect_stats=True,
         )
         base.update(overrides)
@@ -184,10 +187,10 @@ class EpochConfig:
 #: fan-in: a fixed coalesce(P) writes P near-empty files at sandbox
 #: scale (measured ~1k rows/file — scan setup dominates), while one
 #: giant file at 10^10 scale would serialize the write. The epoch
-#: KNOWS its delta row counts before writing (n_dequeued, n_inserted,
-#: n_fetched are already materialized), so the file count derives from
-#: them: ceil(rows / ROWS_PER_DELTA_FILE), capped at the table's
-#: partition count.
+#: KNOWS its delta row counts before writing (the fetched, failed,
+#: denied and inserted counts are already materialized), so the file
+#: count derives from them: ceil(rows / ROWS_PER_DELTA_FILE), capped at
+#: the table's partition count.
 ROWS_PER_DELTA_FILE = 500_000
 
 
@@ -222,14 +225,11 @@ def bootstrap(
     all_parts = list(range(cfg.n_partitions))
     cat.stage_overwrite_parts("frontier", frontier, "part_id", all_parts)
     frontier_c = cat.read_staged("frontier")  # materialized once on disk
-    if cfg.state_deltas:
-        # seen_exact ≡ frontier membership: reference the frontier's
-        # bucket files instead of writing a url_hash copy of the table
-        cat.stage_append_ref(
-            "seen_exact", cat.staged_part_rels("frontier"), replace=True
-        )
-    else:
-        cat.stage_overwrite("seen_exact", frontier_c.select("url_hash"))
+    # seen_exact ≡ frontier membership: reference the frontier's bucket
+    # files instead of writing a url_hash copy of the table
+    cat.stage_append_ref(
+        "seen_exact", cat.staged_part_rels("frontier"), replace=True
+    )
     cat.stage_overwrite_parts(
         "seen_set",
         seen_ops.build_partition_blooms(frontier_c, cfg.bloom_m_bits),
@@ -302,7 +302,7 @@ def run_epoch(
     # host-level negative cache: embargoed hosts drop out before any
     # downstream shuffle (O-7 — "avoid known-dead work early")
     neg_cache = cat.read("neg_cache")
-    eligible, embargoed = filter_embargoed(sl, neg_cache, ts)
+    eligible, _ = filter_embargoed(sl, neg_cache, ts)
 
     # politeness: robots prefix rules then per-host token buckets
     allowed, denied = pol.split_robots(eligible, robots)
@@ -329,7 +329,6 @@ def run_epoch(
     # job earlier.
     bucketed = frames.cut(bucketed)
     granted = bucketed.filter(F.col("granted")).select(*FRONTIER_COLS)
-    deferred = bucketed.filter(~F.col("granted")).select(*FRONTIER_COLS)
 
     # fetch = join against the page store; sha1 change detection.
     # DISK_ONLY: these rows carry html bytes — unrolling them into the
@@ -359,20 +358,23 @@ def run_epoch(
     # stages (politeness, the fetch join, and the failed anti-join's
     # exchange, whose scan of fetched_meta fills it and the DISK_ONLY
     # fetched blocks behind it); ONE job then fills what is left AND
-    # yields both counts. Folding the two counts into one union-agg
-    # job drops a full scheduling round per epoch (the count was cheap
+    # yields all three counts. Folding the counts into one union-agg
+    # job drops a full scheduling round per count (the count was cheap
     # but its job round-trip was not — the per-epoch fixed constant is
     # what caps scaling efficiency). Stats arithmetic still closes as
-    # granted = fetched ⊎ failed.
+    # granted = fetched ⊎ failed; the denied count sizes the frontier
+    # delta exactly (see the fold trigger).
     _counts = dict(
         failed.select(F.lit("f").alias("k"))
         .unionByName(fetched_meta.select(F.lit("m").alias("k")))
+        .unionByName(denied.select(F.lit("d").alias("k")))
         .groupBy("k")
         .count()
         .collect()
     )
     n_failed = int(_counts.get("f", 0))
     n_fetched = int(_counts.get("m", 0))
+    n_denied = int(_counts.get("d", 0))
     _mark("politeness_fetch")
 
     # Eager write scheduling (guide §2.6 "overlap independent jobs"):
@@ -456,56 +458,23 @@ def run_epoch(
     # extract + link-discovery phases below. Same frames, same staged
     # bytes as the post-phase pool they replace.
     new_state = pol.next_politeness_state(bucketed, ts, cfg.n_partitions)
-    if cfg.state_deltas:
-        # delta = exactly this epoch's changed keys: fetched digests /
-        # touched hosts. O(slice) rows, a handful of files; no carried
-        # read, no per-table parts collect.
-        cache_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "page_cache",
-            cache_rows.coalesce(_delta_files(n_fetched, cfg.n_partitions)),
-        )
-        politeness_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "politeness", new_state.coalesce(1)
-        )
-    else:
-        # fetched rows replace their digests, the rest of the touched
-        # buckets carry; untouched buckets never open
-        def cache_job() -> None:
-            cache_next = cache_rows.unionByName(
-                cat.read_parts("page_cache", touched).join(
-                    fetched_meta.select("url_hash"), "url_hash", "left_anti"
-                )
-            )
-            cat.stage_overwrite_parts(
-                "page_cache", cache_next, "part_id", touched
-            )
-
-        # updated hosts replace; only their host-hash buckets rewrite
-        # (manifest-pruned paths), every other bucket carries by
-        # reference. pol_parts is a tiny collect over this epoch's
-        # hosts — computed inside the write thread.
-        def politeness_job() -> None:
-            pol_parts = sorted(
-                r.part_id
-                for r in new_state.select("part_id").distinct().collect()
-            )
-            carried = cat.read_parts("politeness", pol_parts).join(
-                new_state.select("host"), "host", "left_anti"
-            )
-            cat.stage_overwrite_parts(
-                "politeness", new_state.unionByName(carried), "part_id",
-                pol_parts,
-            )
-
     neg_next = next_neg_cache(
         neg_cache, failed, ts, cfg.neg_cache_fail_threshold, cfg.neg_cache_ttl_s
     )
-    _submit("politeness", politeness_job)
+    # deltas = exactly this epoch's changed keys: fetched digests /
+    # touched hosts. O(slice) rows, a handful of files; no carried read,
+    # no per-table parts collect.
+    _submit("politeness", lambda: cat.stage_append_delta(
+        "politeness", new_state.coalesce(1)
+    ))
     _submit(
         "neg_cache",
         lambda: cat.stage_overwrite("neg_cache", neg_next.coalesce(1)),
     )
-    _submit("page_cache", cache_job)
+    _submit("page_cache", lambda: cat.stage_append_delta(
+        "page_cache",
+        cache_rows.coalesce(_delta_files(n_fetched, cfg.n_partitions)),
+    ))
 
     extracted_new = frames.cut(
         run_extraction(modified, e), StorageLevel.DISK_ONLY
@@ -637,101 +606,48 @@ def run_epoch(
             .select(*FRONTIER_COLS)
         )
     backoff = requeue_failed(failed.select(*FRONTIER_COLS), ts)
-    touched_all = sorted(set(touched) | set(ins_parts))
-    if cfg.state_deltas:
-        # merge-on-read commit: ONLY the rows this epoch changed —
-        # requeued/backoff (schedule advanced), denied (state flips to
-        # robots_denied, leaving the pending pool), inserted (new).
-        # deferred/embargoed rows went back byte-unmodified — their
-        # base-file copies stay authoritative, so they don't appear here.
-        frontier_delta = (
-            requeued.select(*FRONTIER_COLS)
-            .unionByName(backoff.select(*FRONTIER_COLS))
-            .unionByName(denied.select(*FRONTIER_COLS))
+    # merge-on-read commit: ONLY the rows this epoch changed —
+    # requeued/backoff (schedule advanced), denied (state flips to
+    # robots_denied, leaving the pending pool), inserted (new).
+    # deferred/embargoed rows went back byte-unmodified — their
+    # base-file copies stay authoritative, so they don't appear here.
+    frontier_delta = (
+        requeued.select(*FRONTIER_COLS)
+        .unionByName(backoff.select(*FRONTIER_COLS))
+        .unionByName(denied.select(*FRONTIER_COLS))
+    )
+    if inserted is not None:
+        frontier_delta = frontier_delta.unionByName(
+            inserted.select(*FRONTIER_COLS)
         )
-        if inserted is not None:
-            frontier_delta = frontier_delta.unionByName(
-                inserted.select(*FRONTIER_COLS)
-            )
-        # fold-on-write: when the pre-write accounting already proves
-        # the compaction bound will trip this epoch (prior staged delta
-        # rows/file-sets plus this epoch's upper bound n_dequeued +
-        # n_inserted ≥ the same bounds compact() checks post-write),
-        # write the resolved buckets ONCE via stage_upsert_fold instead
-        # of delta-append + immediate compact — identical end state,
-        # half the write bytes, and the O(delta-buckets) rewrite moves
-        # into the overlapped write pool instead of running serially
-        # after it. n_dequeued + n_inserted over-counts the delta rows:
-        # deferred and embargoed rows are dequeued but never written.
-        # The exact pre-write row count is n_granted + n_denied +
-        # n_inserted (requeued + backoff = granted). Under heavy
-        # deferral (politeness grants a small share of a large slice)
-        # the bound can exceed compact_delta_rows on EVERY epoch while
-        # the real delta rows stay far below it, so the frontier folds
-        # every epoch: each one rewrites its delta-bearing buckets
-        # instead of appending a small delta. The end state is the same;
-        # the cost is write amplification only.
-        fold_frontier = (
-            cat.delta_count("frontier") + 1 >= cfg.compact_every
-            or cat.delta_row_count("frontier") + n_dequeued + n_inserted
-            >= cfg.compact_delta_rows
-        )
-        if not fold_frontier:
-            # the 3-way union stacks ~3×P partitions → 3×P files; merge
-            # narrow (no shuffle) down to a row-count-derived file count
-            # (delta rows ≈ dequeued slice + inserts, already counted)
-            frontier_delta = frontier_delta.coalesce(
-                _delta_files(n_dequeued + n_inserted, cfg.n_partitions)
-            )
-        new_frontier = None
-    else:
-        # partition-level overwrite: only buckets this epoch touched
-        # (dequeued from, or inserted into) are rewritten; all other
-        # buckets carry over by manifest reference. ``resident`` = rows
-        # of touched buckets that were NOT dequeued — read via
-        # manifest-pruned bucket paths, never a full-table scan.
-        resident = cat.read_parts("frontier", touched_all).join(
-            sl.select("url_hash"), "url_hash", "left_anti"
-        )
-        new_frontier = (
-            resident.select(*FRONTIER_COLS)
-            .unionByName(requeued.select(*FRONTIER_COLS))
-            .unionByName(backoff.select(*FRONTIER_COLS))
-            .unionByName(denied.select(*FRONTIER_COLS))
-            .unionByName(deferred)
-            .unionByName(embargoed.select(*FRONTIER_COLS))  # retry post-TTL
-        )
-        if inserted is not None:
-            new_frontier = new_frontier.unionByName(
-                inserted.select(*FRONTIER_COLS)
-            )
-        new_frontier = new_frontier.repartition(cfg.n_partitions, "part_id")
-
+    # exact delta row count: requeued + backoff = granted = fetched ⊎
+    # failed, plus denied and inserted
+    n_delta = n_fetched + n_failed + n_denied + n_inserted
+    # fold-on-write: when this epoch's delta would trip a compaction
+    # bound, write the resolved buckets ONCE (stage_upsert_fold) instead
+    # of a delta that compaction immediately rewrites — same end state,
+    # half the write bytes, and the rewrite runs in the write pool.
+    # Since n_delta is exact, a delta that is appended can never trip
+    # the frontier's bounds afterwards.
+    fold_frontier = (
+        cat.delta_count("frontier") + 1 >= cfg.compact_every
+        or cat.delta_row_count("frontier") + n_delta >= cfg.compact_delta_rows
+    )
     # frontier + seen writes are the last to become schedulable (they
     # need the inserted set); everything else is already in flight
-    if cfg.state_deltas and fold_frontier:
-        frontier_job = lambda: cat.stage_upsert_fold(  # noqa: E731
-            "frontier", frontier_delta, "part_id",
-            n_rows=n_dequeued + n_inserted,
-        )
-    elif cfg.state_deltas:
-        frontier_job = lambda: cat.stage_append_delta(  # noqa: E731
-            "frontier", frontier_delta, n_new_keys=n_inserted
-        )
+    if fold_frontier:
+        _submit("frontier", lambda: cat.stage_upsert_fold(
+            "frontier", frontier_delta, "part_id", n_rows=n_delta
+        ))
     else:
-        frontier_job = lambda: cat.stage_overwrite_parts(  # noqa: E731
-            "frontier", new_frontier, "part_id", touched_all
-        )
-    _submit("frontier", frontier_job)
+        # the 3-way union stacks ~3×P partitions → 3×P files; merge
+        # narrow (no shuffle) down to a row-count-derived file count
+        _submit("frontier", lambda: cat.stage_append_delta(
+            "frontier",
+            frontier_delta.coalesce(_delta_files(n_delta, cfg.n_partitions)),
+            n_new_keys=n_inserted,
+        ))
     if cfg.follow_links and ins_parts:  # nothing new discovered → no-op
-        if not cfg.state_deltas:
-            # bare 8-byte hashes: a handful of files is plenty, and
-            # the driver-side commit cost is per file. (In delta
-            # mode seen_exact comes for free — a manifest reference
-            # to the frontier delta files, added after the pool.)
-            _submit("seen_exact", lambda: cat.stage_append(
-                "seen_exact", inserted.select("url_hash").coalesce(8)
-            ))
         _submit("seen_set", lambda: cat.stage_overwrite_parts(
             "seen_set",
             seen_ops.merge_partition_blooms(
@@ -748,46 +664,35 @@ def run_epoch(
             f.result()
     finally:
         pool.shutdown(wait=False)
-    if cfg.state_deltas:
-        if fold_frontier:
-            # the fold wrote resolved bucket files and cleared every
-            # frontier delta inside the pool — swap seen_exact to
-            # reference exactly those bucket files (same move the
-            # post-hoc compact branch makes) and record the fold as
-            # this epoch's frontier compaction.
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_part_rels("frontier"),
-                replace=True,
-            )
-            compacted.append("frontier")
-        elif ins_parts:
-            # seen_exact ⊇ frontier membership and frontier rows are
-            # never deleted → the just-written frontier delta (which
-            # contains every inserted row's url_hash, plus harmless
-            # already-seen duplicates) IS this epoch's seen_exact
-            # append. Zero extra bytes written, one fewer write job.
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-            )
-        # fold deltas into base bucket files inside this transaction
-        # when either bound trips: file-set count (read fan-in) or
-        # accumulated delta rows (resolve key-set / broadcast size)
-        for tbl in ("frontier", "page_cache", "politeness"):
-            if (
-                cat.delta_count(tbl) >= cfg.compact_every
-                or cat.delta_row_count(tbl) >= cfg.compact_delta_rows
-            ):
-                cat.compact(tbl)
-                compacted.append(tbl)
-                if tbl == "frontier":
-                    # membership ≡ the compacted frontier: swap
-                    # seen_exact to reference exactly those bucket
-                    # files — stays O(table) refs, never grows stale
-                    cat.stage_append_ref(
-                        "seen_exact",
-                        cat.staged_part_rels("frontier"),
-                        replace=True,
-                    )
+    if fold_frontier:
+        # the fold wrote resolved bucket files and cleared every
+        # frontier delta inside the pool — membership ≡ the folded
+        # frontier, so seen_exact swaps to reference exactly those
+        # bucket files (stays O(table) refs, never grows stale); the
+        # fold is this epoch's frontier compaction.
+        cat.stage_append_ref(
+            "seen_exact", cat.staged_part_rels("frontier"), replace=True
+        )
+        compacted.append("frontier")
+    elif ins_parts:
+        # seen_exact ⊇ frontier membership and frontier rows are never
+        # deleted → the just-written frontier delta (which contains
+        # every inserted row's url_hash, plus harmless already-seen
+        # duplicates) IS this epoch's seen_exact append. Zero extra
+        # bytes written, no write job.
+        cat.stage_append_ref(
+            "seen_exact", cat.staged_delta_rels("frontier")[-1:]
+        )
+    # fold the other state tables' deltas into base bucket files inside
+    # this transaction when either bound trips: file-set count (read
+    # fan-in) or accumulated delta rows (resolve key-set / broadcast size)
+    for tbl in ("page_cache", "politeness"):
+        if (
+            cat.delta_count(tbl) >= cfg.compact_every
+            or cat.delta_row_count(tbl) >= cfg.compact_delta_rows
+        ):
+            cat.compact(tbl)
+            compacted.append(tbl)
     _mark("writes")
 
     stats = {

@@ -51,8 +51,8 @@ MERGE_KEYS = {
 }
 
 #: Time layout: sort rows by these columns WITHIN each bucket file at
-#: every partition-level write (bootstrap, overwrite commits, and —
-#: the one that matters at scale — compaction). The frontier's hottest
+#: every partition-level write (bootstrap and — the one that matters
+#: at scale — compaction and fold-on-write). The frontier's hottest
 #: read is the dequeue's ``next_fetch_ts <= epoch_ts`` scan: with rows
 #: time-sorted, parquet row-group min/max stats make most of a
 #: 10^10-row frontier's not-yet-due tail skippable at the footer
@@ -270,9 +270,7 @@ class IcebergLike:
         if entry is None or "parts" not in entry:
             return self.read(name).filter(F.col(part_col).isin(list(parts)))
         rels = [entry["parts"][str(p)] for p in parts if str(p) in entry["parts"]]
-        base = self._read_rels(name, rels) if rels else (
-            schemas.empty_frame(self.spark, schemas.ALL_TABLES[name])
-        )
+        base = self._read_rels(name, rels)
         if entry.get("deltas"):
             # a key's bucket never changes across versions, so pruning
             # deltas by part_col before resolution is exact
@@ -325,7 +323,7 @@ class IcebergLike:
         """Partition-level overwrite: replace only ``touched_parts``;
         untouched partitions carry over **by manifest reference** — no
         read, no rewrite (the Iceberg dynamic-partition-overwrite
-        analogue). An epoch that touches 2 of 10k frontier buckets
+        analogue). A fold whose deltas touch 2 of 10k frontier buckets
         writes 2 bucket directories, not the 10^10-row table.
 
         ``df`` may contain rows outside ``touched_parts`` — they are
@@ -547,27 +545,10 @@ class IcebergLike:
         entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
         if not entry.get("deltas"):
             return []
-        delta_rows = self._entry_delta_rows(entry)
-        # checkpoint, not persist: the bucket rewrite's plan then starts
-        # from a leaf instead of re-printing the delta resolve
-        latest = frames.cut(self._delta_latest(name, entry))
-        try:
-            dparts = sorted(
-                r[0] for r in latest.select(part_col).distinct().collect()
-            )
-            rels = [
-                entry["parts"][str(p)] for p in dparts if str(p) in entry["parts"]
-            ]
-            base = self._read_rels(name, rels) if rels else (
-                schemas.empty_frame(self.spark, schemas.ALL_TABLES[name])
-            )
-            resolved = self._resolve(name, base, latest, delta_rows)
-            self.stage_overwrite_parts(
-                name, resolved, part_col, dparts, clear_deltas=True
-            )
-        finally:
-            frames.release(latest)
-        return dparts
+        return self._fold(
+            name, entry, self._delta_latest(name, entry), part_col,
+            self._entry_delta_rows(entry),
+        )
 
     def stage_upsert_fold(
         self,
@@ -576,53 +557,58 @@ class IcebergLike:
         part_col: str = "part_id",
         n_rows: int | None = None,
     ) -> list[int]:
-        """Delta-mode upsert that FOLDS in the same write: the staged
-        end-state is identical to ``stage_append_delta(df)`` followed by
-        ``compact(name)`` — delta-bearing buckets rewritten resolved,
-        every delta cleared — but the changed rows are written ONCE,
-        straight into resolved bucket files, instead of twice (a delta
-        file set that the compaction immediately rewrites). The epoch
-        calls this when its pre-write accounting already knows the
-        compaction bound will trip: writing the delta first doubles the
-        write bytes and serializes an O(delta-buckets) rewrite after the
-        write pool — measured as the single largest non-scaling term of
-        a bound-tripping epoch (the write path is disk-bound, so it does
-        not shrink with cores). ``n_rows``: upper bound on ``df``'s row
-        count (keeps the resolve's broadcast gate decidable without a
-        job). Returns the rewritten partition ids."""
+        """Upsert ``df`` and fold in the same write: stages exactly the
+        end state of ``stage_append_delta(df)`` + ``compact(name)``, but
+        writes the changed rows once, straight into resolved bucket
+        files, instead of as a delta file set that the compaction
+        rewrites at once. The epoch calls this when its pre-write row
+        count shows the compaction bound will trip (the write path is
+        disk-bound, so the doubled write does not shrink with cores).
+        ``n_rows``: upper bound on ``df``'s row count (keeps the
+        resolve's broadcast gate decidable without a job). Returns the
+        rewritten partition ids."""
         if name not in MERGE_KEYS:
             raise KeyError(f"no merge key registered for table {name!r}")
         entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
+        if not entry.get("deltas"):
+            return self._fold(name, entry, df, part_col, n_rows)
+        # this epoch's rows are newest — they shadow prior deltas;
+        # _resolve(prior, df) = prior minus df's keys, union df
+        prior = self._delta_latest(name, entry)
         prior_rows = self._entry_delta_rows(entry)
-        latest = df
-        if entry.get("deltas"):
-            # this epoch's rows are newest — they shadow prior deltas;
-            # _resolve(prior, df) = prior minus df's keys, union df
-            prior = self._delta_latest(name, entry)
-            latest = self._resolve(name, prior, df.select(*prior.columns),
-                                   n_rows)
-        # checkpoint, not persist: ``df`` carries the epoch's whole
-        # upstream plan, which a cached relation would embed in the
-        # resolved write's plan (and re-print at every AQE re-plan)
+        latest = self._resolve(name, prior, df.select(*prior.columns), n_rows)
+        total = (
+            prior_rows + n_rows
+            if prior_rows is not None and n_rows is not None
+            else None
+        )
+        return self._fold(name, entry, latest, part_col, total)
+
+    def _fold(
+        self,
+        name: str,
+        entry: dict[str, Any],
+        latest: DataFrame,
+        part_col: str,
+        latest_rows: int | None,
+    ) -> list[int]:
+        """The body of ``compact`` and ``stage_upsert_fold``: rewrite
+        every bucket ``latest`` (newest row per key, at most
+        ``latest_rows`` rows) touches as base resolved with ``latest``,
+        and clear ``entry``'s deltas. ``latest`` is checkpointed, not
+        persisted: a cached relation would embed its whole upstream
+        plan in the rewrite's plan and re-print it at every AQE
+        re-plan."""
         latest = frames.cut(latest)
         try:
             dparts = sorted(
                 r[0] for r in latest.select(part_col).distinct().collect()
             )
-            rels = [
-                entry["parts"][str(p)]
-                for p in dparts
-                if str(p) in entry.get("parts", {})
-            ]
-            base = self._read_rels(name, rels) if rels else (
-                schemas.empty_frame(self.spark, schemas.ALL_TABLES[name])
+            parts = entry.get("parts", {})
+            rels = [parts[str(p)] for p in dparts if str(p) in parts]
+            resolved = self._resolve(
+                name, self._read_rels(name, rels), latest, latest_rows
             )
-            total = (
-                prior_rows + n_rows
-                if prior_rows is not None and n_rows is not None
-                else (n_rows if not entry.get("deltas") else None)
-            )
-            resolved = self._resolve(name, base, latest, total)
             self.stage_overwrite_parts(
                 name, resolved, part_col, dparts, clear_deltas=True
             )

@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hiispider_spark import frames
 from hiispider_spark.plans.epoch import EpochConfig, run_epoch
 from hiispider_spark.sources.catalog import IcebergLike
 
@@ -147,6 +148,7 @@ def stream_cdx_frontier(
             _locked_batch(batch, batch_id)
 
     def _locked_batch(batch: DataFrame, batch_id: int) -> None:
+        inserted = None
         try:
             seeds = cdx_seeds(read_cdxj(batch))
             rows = build_frontier(
@@ -154,36 +156,25 @@ def stream_cdx_frontier(
                 stagger_s=cfg.boot_stagger_s,
             )
             existing = cat.read("frontier")
-            inserted = (
+            # checkpoint, not persist (frames module notes): the count
+            # below fills it, the frontier and seen_set writes read it
+            inserted = frames.cut(
                 rows.join(
                     existing.select("url_hash"), "url_hash", "left_anti"
-                )
-                .select(*existing.columns)
-                .persist()
+                ).select(*existing.columns)
             )
             per_part = inserted.groupBy("part_id").count().collect()
             n = int(sum(r["count"] for r in per_part))
             if n:
                 parts = sorted(r.part_id for r in per_part)
-                if cfg.state_deltas:
-                    cat.stage_append_delta(
-                        "frontier",
-                        inserted.coalesce(_delta_files(n, cfg.n_partitions)),
-                        n_new_keys=n,
-                    )
-                    cat.stage_append_ref(
-                        "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-                    )
-                else:
-                    merged = cat.read_parts("frontier", parts).unionByName(
-                        inserted
-                    )
-                    cat.stage_overwrite_parts(
-                        "frontier", merged, "part_id", parts
-                    )
-                    cat.stage_append(
-                        "seen_exact", inserted.select("url_hash").coalesce(8)
-                    )
+                cat.stage_append_delta(
+                    "frontier",
+                    inserted.coalesce(_delta_files(n, cfg.n_partitions)),
+                    n_new_keys=n,
+                )
+                cat.stage_append_ref(
+                    "seen_exact", cat.staged_delta_rels("frontier")[-1:]
+                )
                 cat.stage_overwrite_parts(
                     "seen_set",
                     seen_ops.merge_partition_blooms(
@@ -196,11 +187,12 @@ def stream_cdx_frontier(
                 )
                 # ingest is not a crawl tick: the epoch counter stays
                 cat.commit(epoch=cat.epoch)
-            inserted.unpersist()
             stats.append({"batch": int(batch_id), "n_inserted": n})
         except BaseException:
             cat.rollback_staged()
             raise
+        finally:
+            frames.release(inserted)
 
     query = (
         spark.readStream.option("pathGlobFilter", glob)

@@ -1,15 +1,18 @@
 """Merge-on-read frontier delta commits (the true 10^10 write shape).
 
-Partition-level overwrite still rewrites O(frontier) when every bucket
+Partition-level overwrite rewrites O(frontier) when every bucket
 dequeues every epoch (the steady state of a real crawl). Delta commits
-write only the epoch's CHANGED rows (requeued + backoff + inserted);
-reads resolve newest-key-wins with a broadcast anti-join; compaction
-folds deltas back into bucket files. These tests pin:
+write only the epoch's CHANGED rows (requeued + backoff + denied +
+inserted); reads resolve newest-key-wins with a broadcast anti-join;
+compaction folds deltas back into bucket files. These tests pin:
 
-- exact equivalence with the overwrite path over multiple epochs,
+- exact equivalence with the partition-overwrite commit path this one
+  replaced, over three epochs, against state frozen from that path in
+  tests/golden/commit_state_tiny.json,
 - write amplification: a delta epoch adds ONE delta file set and leaves
   every base bucket file untouched,
 - compaction preserves state and clears deltas inside the transaction,
+- the fold trigger counts the frontier delta's rows exactly,
 - catalog-level upsert semantics (newest delta wins, inserts land,
   untouched base rows survive), staged invisibility + rollback,
 - refusing a partition overwrite that would silently drop deltas.
@@ -17,24 +20,35 @@ folds deltas back into bucket files. These tests pin:
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
 import tempfile
 from dataclasses import replace
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from hiispider_spark import schemas
 from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
 from hiispider_spark.schemas import FRONTIER
-from hiispider_spark.sources.catalog import IcebergLike
+from hiispider_spark.sources.catalog import MERGE_KEYS, IcebergLike
 
-CFG = EpochConfig(
+DELTA_CFG = EpochConfig(
     k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17,
-    epoch_seconds=60.0, state_deltas=False,
+    epoch_seconds=60.0, compact_every=100,
 )
-DELTA_CFG = replace(CFG, state_deltas=True, compact_every=100)
+
+#: Per-epoch state of three DELTA_CFG epochs on the tiny corpus, frozen
+#: from the partition-overwrite commit path (``state_deltas=False``)
+#: before that path was removed; see ``_commit_state`` for the content.
+GOLDEN = Path(__file__).parent / "golden" / "commit_state_tiny.json"
+GOLDEN_STATS = (
+    "n_dequeued", "n_fetched", "n_extracted", "n_granted", "frontier_size",
+)
+STATE_TABLES = ("frontier", "page_cache", "politeness")
 
 
 def _mk_cat(spark, seeds, cfg, prefix):
@@ -57,104 +71,152 @@ def _manifest_entry(cat, name="frontier"):
         return json.load(f)["tables"][name]
 
 
-@pytest.fixture()
-def two_cats(spark, tiny_seeds):
-    a = _mk_cat(spark, tiny_seeds, CFG, "fd_ow_")
-    b = _mk_cat(spark, tiny_seeds, DELTA_CFG, "fd_mor_")
-    yield a, b
-    shutil.rmtree(a.root, ignore_errors=True)
-    shutil.rmtree(b.root, ignore_errors=True)
+def _table_rows(df, cols):
+    def val(v):
+        return str(v) if isinstance(v, datetime.datetime) else v
+
+    rows = [[val(r[c]) for c in cols] for r in df.select(*cols).collect()]
+    return sorted(rows, key=json.dumps)
 
 
-def test_delta_epochs_match_overwrite_epochs(
-    spark, two_cats, tiny_pages, tiny_robots
-):
-    ow, mor = two_cats
-    for _ in range(3):
-        st_ow = run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
-        st_mor = run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
-        for k in ("n_dequeued", "n_fetched", "n_extracted", "frontier_size"):
-            assert st_ow[k] == st_mor[k], k
-    assert _frontier_rows(ow) == _frontier_rows(mor)
-    # downstream facts identical too
-    ex_a = ow.read("extracted").select("url_hash", "epoch", "content_sha1")
-    ex_b = mor.read("extracted").select("url_hash", "epoch", "content_sha1")
-    assert ex_a.exceptAll(ex_b).count() == 0
-    assert ex_b.exceptAll(ex_a).count() == 0
-
-
-def test_delta_epoch_writes_only_delta(spark, two_cats, tiny_pages, tiny_robots):
-    _, mor = two_cats
-    before = _manifest_entry(mor)
-    st = run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
-    assert st["n_dequeued"] > 0
-    after = _manifest_entry(mor)
-    assert after["parts"] == before["parts"]  # no bucket file rewritten
-    assert len(after.get("deltas", [])) == len(before.get("deltas", [])) + 1
-    # the delta holds only changed rows — strictly fewer than the table
-    dl = spark.read.schema(FRONTIER).parquet(
-        os.path.join(mor.root, after["deltas"][-1])
+def _commit_state(cat, stats):
+    """Committed state after an epoch: its counters, every keyed state
+    table's rows, the seen_exact hash set and the extracted facts."""
+    state = {"stats": {k: stats[k] for k in GOLDEN_STATS}}
+    for t in STATE_TABLES:
+        state[t] = _table_rows(cat.read(t), schemas.ALL_TABLES[t].fieldNames())
+    state["seen_exact"] = sorted(
+        {r.url_hash for r in cat.read("seen_exact").collect()}
     )
-    assert 0 < dl.count() < mor.read("frontier").count()
+    state["extracted"] = _table_rows(
+        cat.read("extracted"), ["url_hash", "epoch", "content_sha1"]
+    )
+    return state
 
 
-def test_all_state_tables_delta_commit(spark, two_cats, tiny_pages, tiny_robots):
+def _golden_text(states):
+    """Canonical JSON of per-epoch states: sorted keys, one table row
+    per line, so a diff of the golden file reads row by row."""
+    def value(v):
+        if isinstance(v, list) and v:
+            rows = ",\n".join(f"   {json.dumps(r)}" for r in v)
+            return f"[\n{rows}\n  ]"
+        return json.dumps(v, sort_keys=True)
+
+    epochs = [
+        " {\n"
+        + ",\n".join(f"  {json.dumps(k)}: {value(st[k])}" for k in sorted(st))
+        + "\n }"
+        for st in states
+    ]
+    return "[\n" + ",\n".join(epochs) + "\n]\n"
+
+
+@pytest.fixture(scope="module")
+def delta_run(spark, tiny_seeds, tiny_pages, tiny_robots):
+    """Three DELTA_CFG epochs on one catalog (read-only for the tests):
+    per epoch its stats, committed state and the manifest entries of
+    the keyed state tables before and after it."""
+    cat = _mk_cat(spark, tiny_seeds, DELTA_CFG, "fd_mor_")
+
+    def entries():
+        with open(os.path.join(cat.root, "manifest.json")) as f:
+            tables = json.load(f)["tables"]
+        return {t: tables.get(t) for t in STATE_TABLES}
+
+    epochs = []
+    try:
+        for _ in range(3):
+            before = entries()
+            st = run_epoch(spark, cat, tiny_pages, tiny_robots, DELTA_CFG)
+            epochs.append({
+                "stats": st, "state": _commit_state(cat, st),
+                "before": before, "after": entries(),
+            })
+        yield cat, epochs
+    finally:
+        shutil.rmtree(cat.root, ignore_errors=True)
+
+
+@pytest.fixture()
+def mor(spark, tiny_seeds):
+    cat = _mk_cat(spark, tiny_seeds, DELTA_CFG, "fd_mor1_")
+    yield cat
+    shutil.rmtree(cat.root, ignore_errors=True)
+
+
+def test_delta_epochs_match_overwrite_epochs(delta_run):
+    """Stats, frontier, page_cache, politeness, seen_exact and the
+    extracted facts of every epoch equal, byte for byte, what the
+    partition-overwrite commit path produced for the same epochs."""
+    _, epochs = delta_run
+    got = _golden_text([ep["state"] for ep in epochs])
+    assert got == GOLDEN.read_text()
+
+
+def test_delta_epoch_writes_only_delta(delta_run):
+    cat, epochs = delta_run
+    for ep in epochs:
+        assert ep["stats"]["n_dequeued"] > 0
+        before, after = ep["before"]["frontier"], ep["after"]["frontier"]
+        assert after["parts"] == before["parts"]  # no bucket file rewritten
+        assert len(after.get("deltas", [])) == len(before.get("deltas", [])) + 1
+        # the delta holds only changed rows — strictly fewer than the table
+        dl = cat.spark.read.schema(FRONTIER).parquet(
+            os.path.join(cat.root, after["deltas"][-1])
+        )
+        assert 0 < dl.count() < ep["stats"]["frontier_size"]
+
+
+def test_all_state_tables_delta_commit(delta_run):
     """page_cache and politeness get the same merge-on-read treatment
     as the frontier: a delta epoch appends one delta per table, leaves
-    every base bucket untouched, and reads resolve identically to the
-    overwrite twin."""
-    ow, mor = two_cats
-    for _ in range(2):
-        run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
-        before = {t: _manifest_entry(mor, t) if t in
-                  json.load(open(os.path.join(mor.root, "manifest.json")))["tables"]
-                  else None
-                  for t in ("page_cache", "politeness")}
-        run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
+    every base bucket untouched, and reads resolve to the overwrite
+    path's rows (golden), one row per key."""
+    _, epochs = delta_run
+    golden = json.loads(GOLDEN.read_text())
+    for ep, want in zip(epochs, golden):
         for t in ("page_cache", "politeness"):
-            after = _manifest_entry(mor, t)
-            if before[t] is not None:
-                assert after["parts"] == before[t]["parts"], t
+            before, after = ep["before"][t], ep["after"][t]
+            if before is not None:
+                assert after["parts"] == before["parts"], t
                 assert len(after.get("deltas", [])) == len(
-                    before[t].get("deltas", [])
+                    before.get("deltas", [])
                 ) + 1, t
-    for t in ("page_cache", "politeness"):
-        key = "url_hash" if t == "page_cache" else "host"
-        a = {tuple(r) for r in ow.read(t).collect()}
-        b = {tuple(r) for r in mor.read(t).collect()}
-        assert a == b, t
-        # newest-wins resolution: one row per key
-        n_keys = mor.read(t).select(key).distinct().count()
-        assert mor.read(t).count() == n_keys, t
+            assert ep["state"][t] == want[t], t
+            # newest-wins resolution: one row per key
+            key = schemas.ALL_TABLES[t].fieldNames().index(MERGE_KEYS[t])
+            keys = [row[key] for row in ep["state"][t]]
+            assert len(keys) == len(set(keys)), t
 
 
-def test_seen_exact_by_reference(spark, two_cats, tiny_pages, tiny_robots):
-    """In delta mode seen_exact is manifest references into frontier
-    files (zero extra bytes written) — membership must still equal the
-    overwrite twin's materialized seen_exact after epochs + compaction."""
-    ow, mor = two_cats
+def test_seen_exact_by_reference(spark, tiny_seeds, tiny_pages, tiny_robots):
+    """seen_exact is manifest references into frontier files (zero
+    extra bytes written) — membership must still equal the overwrite
+    path's materialized seen_exact (golden) after epochs + compaction."""
     compact_cfg = replace(DELTA_CFG, compact_every=2)
-    for _ in range(3):
-        run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
-        run_epoch(spark, mor, tiny_pages, tiny_robots, compact_cfg)
-    a = {r.url_hash for r in ow.read("seen_exact").collect()}
-    b = {r.url_hash for r in mor.read("seen_exact").collect()}
-    assert a == b
-    # every referenced path belongs to the frontier's directory tree
-    entry = _manifest_entry(mor, "seen_exact")
-    assert entry["paths"]
-    assert all(p.startswith("frontier/") for p in entry["paths"])
+    cat = _mk_cat(spark, tiny_seeds, compact_cfg, "fd_seen_")
+    try:
+        for _ in range(3):
+            run_epoch(spark, cat, tiny_pages, tiny_robots, compact_cfg)
+        got = sorted({r.url_hash for r in cat.read("seen_exact").collect()})
+        assert got == json.loads(GOLDEN.read_text())[-1]["seen_exact"]
+        # every referenced path belongs to the frontier's directory tree
+        entry = _manifest_entry(cat, "seen_exact")
+        assert entry["paths"]
+        assert all(p.startswith("frontier/") for p in entry["paths"])
+    finally:
+        shutil.rmtree(cat.root, ignore_errors=True)
 
 
-def test_row_count_from_manifest(spark, two_cats, tiny_pages, tiny_robots):
-    """catalog.row_count is exact with zero jobs in BOTH commit modes."""
-    ow, mor = two_cats
-    for _ in range(2):
-        st_ow = run_epoch(spark, ow, tiny_pages, tiny_robots, CFG)
-        st_mor = run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
-        assert st_ow["frontier_size"] == ow.read("frontier").count()
-        assert st_mor["frontier_size"] == mor.read("frontier").count()
-        assert st_ow["frontier_size"] == st_mor["frontier_size"]
+def test_row_count_from_manifest(delta_run):
+    """catalog.row_count is exact with zero jobs, and equals the
+    overwrite path's frontier size (golden) every epoch."""
+    _, epochs = delta_run
+    golden = json.loads(GOLDEN.read_text())
+    for ep, want in zip(epochs, golden):
+        assert ep["stats"]["frontier_size"] == len(ep["state"]["frontier"])
+        assert ep["stats"]["frontier_size"] == want["stats"]["frontier_size"]
 
 
 def test_compaction_preserves_state_and_clears_deltas(
@@ -260,6 +322,44 @@ def test_epoch_fold_on_write_matches_post_hoc_compaction(
     finally:
         shutil.rmtree(a.root, ignore_errors=True)
         shutil.rmtree(b.root, ignore_errors=True)
+
+
+def test_fold_trigger_counts_delta_rows_exactly(
+    spark, tiny_seeds, tiny_pages, tiny_robots
+):
+    """Under heavy deferral (one grant per host) most of the dequeued
+    slice goes back unchanged and never reaches the frontier delta, so
+    n_dequeued + n_inserted over-counts it. The row-count fold trigger
+    must use the delta's exact size: a compact_delta_rows bound between
+    the two appends a delta, a bound at the exact size folds."""
+    heavy = replace(DELTA_CFG, host_max_parallel=1)
+    cats = []
+
+    def first_epoch(cfg, tag):
+        cat = _mk_cat(spark, tiny_seeds, cfg, f"fd_defer_{tag}_")
+        cats.append(cat)
+        n0 = cat.row_count("frontier")
+        return cat, run_epoch(spark, cat, tiny_pages, tiny_robots, cfg), n0
+
+    try:
+        probe, st, n0 = first_epoch(heavy, "probe")
+        assert "frontier" not in st["compacted"]
+        exact = _manifest_entry(probe)["delta_rows"][-1]
+        upper = st["n_dequeued"] + (st["frontier_size"] - n0)  # + inserted
+        assert st["n_granted"] < st["n_dequeued"]  # deferral happened
+        assert exact + 1 <= upper, (exact, upper)
+
+        below, st, _ = first_epoch(
+            replace(heavy, compact_delta_rows=exact + 1), "below"
+        )
+        assert "frontier" not in st["compacted"]
+        assert _manifest_entry(below)["delta_rows"] == [exact]
+
+        _, st, _ = first_epoch(replace(heavy, compact_delta_rows=exact), "at")
+        assert "frontier" in st["compacted"]
+    finally:
+        for cat in cats:
+            shutil.rmtree(cat.root, ignore_errors=True)
 
 
 def test_resolve_broadcast_size_gate(spark, tiny_seeds):
@@ -411,7 +511,7 @@ def test_empty_delta_roundtrip(spark, tiny_seeds):
 
 
 def test_frontier_buckets_time_sorted_with_stats(
-    spark, two_cats, tiny_pages, tiny_robots
+    spark, mor, tiny_pages, tiny_robots
 ):
     """Time layout (catalog.SORT_COLS): every frontier bucket file —
     bootstrap AND compaction output — is sorted by next_fetch_ts with
@@ -421,7 +521,6 @@ def test_frontier_buckets_time_sorted_with_stats(
     (dequeue re-sorts in its window); this pins the STORAGE layout."""
     import pyarrow.parquet as pq
 
-    _, mor = two_cats
     run_epoch(spark, mor, tiny_pages, tiny_robots, DELTA_CFG)
     mor.compact("frontier")
     mor.commit(epoch=mor.epoch)

@@ -1,7 +1,8 @@
 """Round-2 scale-shape guards:
 
-- partition-level commit: an epoch that touches 2 of 8 buckets rewrites
-  only those bucket directories; the rest carry by manifest reference,
+- partition-level commit: a fold epoch whose frontier delta touches 2
+  of 8 buckets rewrites only those bucket directories; the rest carry
+  by manifest reference,
 - the conditional-GET cache is a compact state table (the extracted
   history is never re-read, let alone re-aggregated, inside an epoch),
 - the bloom probe is co-partitioned (no treeAggregate of the unioned
@@ -25,11 +26,9 @@ from hiispider_spark.operators.frontier import build_frontier
 from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
 from hiispider_spark.sources.catalog import IcebergLike
 
-# these guards pin the partition-OVERWRITE commit shape; the (default)
-# delta mode's write-amplification guards live in test_frontier_deltas
 CFG = EpochConfig(
     k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17,
-    epoch_seconds=60.0, state_deltas=False,
+    epoch_seconds=60.0,
 )
 FAR = "2030-01-01 00:00:00"
 
@@ -43,9 +42,13 @@ def cat(spark, tiny_seeds):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def _frontier_parts(cat) -> dict[str, str]:
+def _frontier_entry(cat) -> dict:
     with open(os.path.join(cat.root, "manifest.json")) as f:
-        return json.load(f)["tables"]["frontier"]["parts"]
+        return json.load(f)["tables"]["frontier"]
+
+
+def _frontier_parts(cat) -> dict[str, str]:
+    return _frontier_entry(cat)["parts"]
 
 
 def test_epoch_rewrites_only_touched_buckets(spark, cat, tiny_pages, tiny_robots):
@@ -59,10 +62,14 @@ def test_epoch_rewrites_only_touched_buckets(spark, cat, tiny_pages, tiny_robots
     cat.stage_overwrite_parts("frontier", fr, "part_id", list(range(8)))
     cat.commit(epoch=0)
     before = _frontier_parts(cat)
+    n_rows = cat.read("frontier").count()
 
-    cfg = replace(CFG, follow_links=False)
+    # compact_every=1: the frontier delta folds in the epoch's own write
+    cfg = replace(CFG, compact_every=1, follow_links=False)
     st = run_epoch(spark, cat, tiny_pages, tiny_robots, cfg)
     assert st["n_dequeued"] > 0
+    assert "frontier" in st["compacted"]
+    assert not _frontier_entry(cat).get("deltas")
     after = _frontier_parts(cat)
     changed = {p for p in after if after[p] != before.get(p)}
     assert changed == {"1", "3"}
@@ -70,7 +77,7 @@ def test_epoch_rewrites_only_touched_buckets(spark, cat, tiny_pages, tiny_robots
         if p not in changed:
             assert after[p] == before[p]  # carried by reference, same files
     # total membership preserved: untouched rows still readable
-    assert cat.read("frontier").count() == fr.count()
+    assert cat.read("frontier").count() == n_rows
 
 
 def test_extracted_history_not_read_inside_epoch(
