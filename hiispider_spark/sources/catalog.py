@@ -95,6 +95,9 @@ class IcebergLike:
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._staged: dict[str, dict[str, Any]] = {}
+        # version dirs allocated since the last commit/rollback: the
+        # files rollback_staged deletes
+        self._written: set[str] = set()
         self.manifest = self._load_manifest()
         # Single-writer transaction lock. ``_staged`` is TRANSACTION-
         # GLOBAL: commit() publishes everything staged and
@@ -233,13 +236,9 @@ class IcebergLike:
         )
 
     @staticmethod
-    def _entry_delta_rows(entry: dict[str, Any]) -> int | None:
-        """Accumulated delta row count of an entry (None on a legacy
-        manifest missing counts)."""
-        counts = entry.get("delta_rows")
-        if counts is None or len(counts) != len(entry.get("deltas", [])):
-            return None
-        return int(sum(counts))
+    def _entry_delta_rows(entry: dict[str, Any]) -> int:
+        """Accumulated delta row count of an entry (0 without deltas)."""
+        return int(sum(entry["delta_rows"])) if entry.get("deltas") else 0
 
     def _read_entry(self, name: str, entry: dict[str, Any] | None) -> DataFrame:
         if entry and entry.get("deltas"):
@@ -298,6 +297,8 @@ class IcebergLike:
         if staged:
             ver = max(ver, staged["next_version"])
         rel = os.path.join(name, f"v{ver:06d}")
+        with self._staged_mutex:
+            self._written.add(rel)
         return rel, os.path.join(self.root, rel)
 
     def stage_overwrite(self, name: str, df: DataFrame) -> None:
@@ -391,18 +392,12 @@ class IcebergLike:
                     parts.pop(str(p), None)  # partition emptied
                     part_rows.pop(str(p), None)
             next_version = int(rel.rsplit("v", 1)[1]) + 1
-        # exact key count while every live partition has a footer count
-        # (keyed tables hold one row per key); None on legacy carry-over
-        key_count = (
-            sum(part_rows.values())
-            if set(part_rows) >= set(parts)
-            else None
-        )
         with self._staged_mutex:
             self._staged[name] = {
                 "parts": parts,
                 "part_rows": part_rows,
-                "key_count": key_count,
+                # exact: keyed tables hold one row per key
+                "key_count": sum(part_rows[p] for p in parts),
                 "next_version": next_version,
             }
 
@@ -433,7 +428,6 @@ class IcebergLike:
         rel, absdir = self._new_version_dir(name)
         df.write.mode("overwrite").parquet(absdir)
         n = _dir_row_count(absdir)
-        prev_dr = prev.get("delta_rows")
         prev_kc = prev.get("key_count")
         with self._staged_mutex:
             self._staged[name] = {
@@ -441,10 +435,8 @@ class IcebergLike:
                 "part_rows": dict(prev.get("part_rows", {})),
                 "deltas": list(prev.get("deltas", [])) + [rel],
                 "delta_rows": (
-                    list(prev_dr or []) + [n]
-                    if prev_dr is not None or not prev.get("deltas")
-                    else None  # legacy deltas without counts stay unknown
-                ),
+                    prev["delta_rows"] if prev.get("deltas") else []
+                ) + [n],
                 # delta keys already in the table update in place; only
                 # the caller knows how many are genuinely new (e.g. the
                 # epoch's inserted count) — without it the exact size
@@ -481,15 +473,10 @@ class IcebergLike:
             raise ValueError(f"table {name!r} is parts-form; refs need paths")
         rows = [_dir_row_count(os.path.join(self.root, r)) for r in rels]
         paths = [] if replace else list(prev.get("paths", []))
-        prev_pr = [] if replace else prev.get("path_rows")
         with self._staged_mutex:
             self._staged[name] = {
                 "paths": paths + list(rels),
-                "path_rows": (
-                    list(prev_pr or []) + rows
-                    if prev_pr is not None or not paths
-                    else None
-                ),
+                "path_rows": (prev["path_rows"] if paths else []) + rows,
                 "next_version": prev.get("next_version", 1),
             }
 
@@ -512,26 +499,23 @@ class IcebergLike:
     def delta_row_count(self, name: str) -> int:
         """Accumulated pending delta rows (staged view, manifest footer
         counts — no job). Upper bound on the resolve key-set size; the
-        row-volume compaction trigger. 0 when unknown (legacy)."""
+        row-volume fold trigger."""
         entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
-        return self._entry_delta_rows(entry) or 0
+        return self._entry_delta_rows(entry)
 
     def row_count(self, name: str) -> int | None:
         """Exact table size from manifest bookkeeping — O(1), no job.
 
         Keyed (parts-form) tables: ``key_count`` (footer sums, kept
         exact across delta commits via the caller-supplied new-key
-        count). Paths-form tables: sum of per-file-set counts. None when
-        a legacy manifest predates the counters."""
+        count; None after a delta appended without it). Paths-form
+        tables: sum of per-file-set counts."""
         entry = self._staged.get(name) or self.manifest["tables"].get(name)
         if entry is None:
             return 0
         if "parts" in entry:
             return entry.get("key_count")
-        pr = entry.get("path_rows")
-        if pr is None or len(pr) != len(entry.get("paths", [])):
-            return None
-        return int(sum(pr))
+        return int(sum(entry["path_rows"]))
 
     def compact(self, name: str, part_col: str = "part_id") -> list[int]:
         """Fold pending deltas into partition-level base files.
@@ -539,8 +523,12 @@ class IcebergLike:
         Only partitions that appear in some delta row are rewritten
         (resolved base∪delta for those buckets); every other bucket
         carries over by manifest reference. Runs inside the current
-        transaction — staged, atomic with the epoch's commit. Returns
-        the rewritten partition ids.
+        transaction — staged, atomic with the next commit. Returns the
+        rewritten partition ids.
+
+        The crawl epoch no longer calls this: it folds every keyed state
+        table on write (``stage_upsert_fold``). It stays the reference
+        end state for that fold and a maintenance entry point.
         """
         entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
         if not entry.get("deltas"):
@@ -564,6 +552,9 @@ class IcebergLike:
         rewrites at once. The epoch calls this when its pre-write row
         count shows the compaction bound will trip (the write path is
         disk-bound, so the doubled write does not shrink with cores).
+        ``df`` must hold one row per merge key: a delta's keys are
+        resolved newest-wins, but rows of one write have no order, so
+        duplicates raise ``ValueError`` and nothing is staged.
         ``n_rows``: upper bound on ``df``'s row count (keeps the
         resolve's broadcast gate decidable without a job). Returns the
         rewritten partition ids."""
@@ -575,12 +566,9 @@ class IcebergLike:
         # this epoch's rows are newest — they shadow prior deltas;
         # _resolve(prior, df) = prior minus df's keys, union df
         prior = self._delta_latest(name, entry)
-        prior_rows = self._entry_delta_rows(entry)
         latest = self._resolve(name, prior, df.select(*prior.columns), n_rows)
         total = (
-            prior_rows + n_rows
-            if prior_rows is not None and n_rows is not None
-            else None
+            None if n_rows is None else self._entry_delta_rows(entry) + n_rows
         )
         return self._fold(name, entry, latest, part_col, total)
 
@@ -598,12 +586,27 @@ class IcebergLike:
         and clear ``entry``'s deltas. ``latest`` is checkpointed, not
         persisted: a cached relation would embed its whole upstream
         plan in the rewrite's plan and re-print it at every AQE
-        re-plan."""
+        re-plan. The job that collects the touched buckets also checks
+        that ``latest`` is key-unique: a key's bucket never changes, so
+        after one shuffle by bucket every key count is exact."""
+        from pyspark.sql import functions as F
+
+        key = MERGE_KEYS[name]
         latest = frames.cut(latest)
         try:
-            dparts = sorted(
-                r[0] for r in latest.select(part_col).distinct().collect()
+            per_part = (
+                latest.select(part_col, key)
+                .repartition(part_col)
+                .groupBy(part_col)
+                .agg(F.count("*").alias("n"), F.countDistinct(key).alias("k"))
+                .collect()
             )
+            if any(r["n"] != r["k"] for r in per_part):
+                raise ValueError(
+                    f"fold of table {name!r}: duplicate {key!r} values in "
+                    "one write"
+                )
+            dparts = sorted(r[part_col] for r in per_part)
             parts = entry.get("parts", {})
             rels = [parts[str(p)] for p in dparts if str(p) in parts]
             resolved = self._resolve(
@@ -623,15 +626,12 @@ class IcebergLike:
         df.write.mode("overwrite").parquet(absdir)
         prev = self._staged.get(name) or self.manifest["tables"].get(name, {})
         paths = list(prev.get("paths", []))
-        prev_pr = prev.get("path_rows")
         with self._staged_mutex:
             self._staged[name] = {
                 "paths": paths + [rel],
                 "path_rows": (
-                    list(prev_pr or []) + [_dir_row_count(absdir)]
-                    if prev_pr is not None or not paths
-                    else None  # legacy appends without counts stay unknown
-                ),
+                    prev["path_rows"] if paths else []
+                ) + [_dir_row_count(absdir)],
                 "next_version": int(rel.rsplit("v", 1)[1]) + 1,
             }
 
@@ -667,6 +667,7 @@ class IcebergLike:
         os.replace(tmp, self._manifest_path())
         self.manifest = new
         self._staged = {}
+        self._written = set()
 
     def vacuum(self) -> list[str]:
         """Delete version directories (and partition subdirectories)
@@ -728,23 +729,15 @@ class IcebergLike:
     def rollback_staged(self) -> None:
         """Drop staged (uncommitted) writes — crash-recovery analogue.
 
-        The survivor set spans ALL tables' committed paths: a staged
-        by-reference entry (stage_append_ref) may point at files that
-        are committed under their owning table.
+        Deletes every version directory allocated since the last commit:
+        the staged ones, those a later stage of the same table
+        superseded, and those of writes that failed before staging.
+        Committed files are never among them (version numbers are
+        fresh), and by-reference entries (stage_append_ref) write none.
 
         Acquires ``write_lock`` (see :meth:`commit`)."""
         with self.write_lock:
-            self._rollback_staged_locked()
-
-    def _rollback_staged_locked(self) -> None:
-        committed: set[str] = set()
-        for cname in self.manifest["tables"]:
-            committed |= set(
-                self._entry_paths(self.manifest["tables"].get(cname, {}))
-            )
-        for _name, entry in self._staged.items():
-            for rel in self._entry_paths(entry):
-                p = os.path.join(self.root, rel)
-                if os.path.exists(p) and rel not in committed:
-                    shutil.rmtree(p, ignore_errors=True)
-        self._staged = {}
+            for rel in self._written:
+                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+            self._written = set()
+            self._staged = {}

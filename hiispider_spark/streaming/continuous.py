@@ -59,20 +59,11 @@ def crawl_stream(
         # (e.g. stream_cdx_frontier): IcebergLike staging is
         # transaction-global, so an unserialized concurrent commit
         # would publish this epoch's half-staged tables early — and
-        # either stream's rollback would wipe the other's staged work
+        # either stream's rollback would wipe the other's staged work.
+        # A failed epoch rolls itself back (run_epoch owns its
+        # transaction), so the next trigger starts from clean state.
         with cat.write_lock:
-            try:
-                stats.append(run_epoch(spark, cat, pages, robots, cfg))
-            except BaseException:
-                # a failed epoch must not leave its staged appends
-                # behind: IcebergLike._staged survives in-process, so a
-                # retry (or the next trigger) would commit the dead
-                # attempt's files alongside its own, duplicating
-                # extracted/lineage rows. Crash-replay across PROCESS
-                # restarts already discards staged state; this extends
-                # the guarantee within-process.
-                cat.rollback_staged()
-                raise
+            stats.append(run_epoch(spark, cat, pages, robots, cfg))
 
     query = (
         spark.readStream.format("rate")

@@ -6,7 +6,8 @@ buys and that a regression back to ``persist()`` (or to ``unpersist()``
 on a checkpoint, which does nothing) would lose:
 
 - no block leak: every RDD an epoch checkpoints is released by the
-  epoch's end, fold and compaction epochs included; the same holds for
+  epoch's end, fold epochs included (where a folding table writes its
+  change set once, never also as a delta); the same holds for
   a CDX ingest batch, successful or failing, and for the iterative
   operators (cluster assignment, redirect resolution, deep PageRank),
   which keep only the checkpoints their returned frame reads;
@@ -38,8 +39,8 @@ CFG = EpochConfig(
 )
 
 #: optimized-plan treeString length bound for every frame the frontier
-#: delta append and fold receive (page_cache and politeness deltas
-#: included). Measured on this config: at most 4 918 characters with
+#: delta append and fold receive (page_cache and politeness appends and
+#: folds included). Measured on this config: at most 4 918 characters with
 #: checkpoint boundaries (the frontier fold), against 1.39 M (frontier
 #: delta) and 2.94 M (frontier fold) with the persist() boundaries they
 #: replaced. About 2x headroom over the checkpointed maximum.
@@ -71,7 +72,19 @@ def _checkpoints_read_by(df) -> set[int]:
     }
 
 
-def test_epochs_release_every_checkpoint(spark, cat, tiny_pages, tiny_robots):
+def test_epochs_release_every_checkpoint(
+    spark, cat, tiny_pages, tiny_robots, monkeypatch
+):
+    # (epoch, table) of every delta append: a keyed table that folds
+    # writes its change set once, into the folded buckets, never also
+    # as a delta
+    appended: list[tuple[int, str]] = []
+
+    def spy(self, name, *a, _orig=IcebergLike.stage_append_delta, **kw):
+        appended.append((self.epoch + 1, name))
+        return _orig(self, name, *a, **kw)
+
+    monkeypatch.setattr(IcebergLike, "stage_append_delta", spy)
     # compared as id sets, not bare sizes: the context cleaner may drop
     # an earlier test's RDD mid-epoch, and a leak always adds an id
     for _ in range(4):
@@ -80,9 +93,13 @@ def test_epochs_release_every_checkpoint(spark, cat, tiny_pages, tiny_robots):
         after = _persistent_rdd_ids(spark)
         assert after - before == set(), (st["epoch"], after - before)
         assert len(after) <= len(before)
-    # the cadence exercised both the fold and the post-hoc compaction
+        both = {t for e, t in appended if e == st["epoch"]} & set(
+            st["compacted"]
+        )
+        assert both == set(), (st["epoch"], both)
+    # the cadence folded all three keyed tables (epochs 2 and 4)
     assert cat.epoch == 4
-    assert "frontier" in st["compacted"] and "page_cache" in st["compacted"]
+    assert set(st["compacted"]) == {"frontier", "page_cache", "politeness"}
 
 
 def test_write_plans_stay_bounded(
@@ -101,7 +118,7 @@ def test_write_plans_stay_bounded(
         monkeypatch.setattr(IcebergLike, meth, record)
     for _ in range(2):
         run_epoch(spark, cat, tiny_pages, tiny_robots, CFG)
-    # epoch 1 appends three deltas; epoch 2 folds the frontier
+    # epoch 1 appends three deltas; epoch 2 folds all three tables
     assert ("stage_upsert_fold", "frontier") in {(m, t) for _, m, t, _ in seen}
     assert len(seen) == 6, seen
     assert max(n for *_, n in seen) < MAX_PLAN_CHARS, seen

@@ -66,46 +66,42 @@ def test_stream_matches_batch_loop(spark, tiny_pages, tiny_seeds, tiny_robots):
 def test_failed_epoch_rolls_back_staged(
     spark, tiny_pages, tiny_seeds, tiny_robots, monkeypatch
 ):
-    """A run_epoch failure mid-epoch must not leave staged appends
-    behind — IcebergLike._staged survives in-process, so without the
-    rollback the NEXT trigger would commit the dead attempt's files
-    alongside its own (duplicate extracted/lineage rows)."""
-    import hiispider_spark.streaming.continuous as cont
-
+    """A run_epoch failure mid-trigger must not leave staged appends
+    behind — IcebergLike._staged survives in-process, so a leftover
+    would be committed by the NEXT trigger alongside its own (duplicate
+    extracted/lineage rows). The epoch rolls itself back, after its
+    other writes finished staging; the stream adds no rollback."""
     root = tempfile.mkdtemp(prefix="cont_fail_")
     try:
         cat = IcebergLike(spark, root)
         bootstrap(spark, cat, tiny_seeds, CFG)
 
         calls = []
+        stage_append = IcebergLike.stage_append
 
-        def boom(spark_, cat_, pages_, robots_, cfg_):
-            calls.append(1)
-            cat_.stage_append(
-                "lineage_t",
-                spark_.range(3).selectExpr(
-                    "cast(id as int) as part_id",
-                    "id as url_hash",
-                    "cast(id as int) as v",
-                ),
-            )
-            raise RuntimeError("simulated mid-epoch failure")
+        def boom(self, name, df):
+            if name == "extracted":
+                calls.append(1)
+                raise RuntimeError("simulated mid-epoch failure")
+            return stage_append(self, name, df)
 
-        monkeypatch.setattr(cont, "run_epoch", boom)
+        monkeypatch.setattr(IcebergLike, "stage_append", boom)
         query, stats = crawl_stream(
             spark, cat, tiny_pages, tiny_robots, CFG,
             max_epochs=1, trigger_s=0.3,
         )
         try:
-            deadline = time.time() + 60
-            while not calls and time.time() < deadline:
+            # the failed batch stops the query
+            deadline = time.time() + 120
+            while query.isActive and time.time() < deadline:
                 time.sleep(0.3)
-            time.sleep(1.0)  # let foreachBatch unwind
+            error = query.exception()
         finally:
             query.stop()
-        assert calls, "fake epoch never ran"
+        assert calls, "the epoch never reached its extracted write"
+        assert error is not None and "simulated" in str(error)
         assert cat._staged == {}  # dead attempt's appends dropped
-        assert stats == []
+        assert stats == [] and cat.epoch == 0
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -12,9 +12,10 @@ compaction folds deltas back into bucket files. These tests pin:
 - write amplification: a delta epoch adds ONE delta file set and leaves
   every base bucket file untouched,
 - compaction preserves state and clears deltas inside the transaction,
-- the fold trigger counts the frontier delta's rows exactly,
+- the fold trigger counts each keyed table's change-set rows exactly,
 - catalog-level upsert semantics (newest delta wins, inserts land,
-  untouched base rows survive), staged invisibility + rollback,
+  untouched base rows survive), staged invisibility + rollback, a fold
+  refusing duplicate keys, missing manifest counts raising,
 - refusing a partition overwrite that would silently drop deltas.
 """
 
@@ -297,8 +298,9 @@ def test_epoch_fold_on_write_matches_post_hoc_compaction(
 ):
     """A run_epoch whose pre-write accounting trips the compaction bound
     takes the fold-on-write path (no delta files ever written) and must
-    land the same frontier AND seen_exact state as the delta+compact
-    flow it replaces; the fold is reported via the compacted stat."""
+    land the same frontier, page_cache, politeness AND seen_exact state
+    as the delta-only flow; the fold is reported via the compacted
+    stat."""
     compact_cfg = replace(DELTA_CFG, compact_every=2)
     a = _mk_cat(spark, tiny_seeds, DELTA_CFG, "fd_fw_nc_")
     b = _mk_cat(spark, tiny_seeds, compact_cfg, "fd_fw_c_")
@@ -313,6 +315,10 @@ def test_epoch_fold_on_write_matches_post_hoc_compaction(
         assert any("frontier" in st["compacted"] for st in sts[1:])
         assert len(_manifest_entry(b).get("deltas", [])) <= 1
         assert _frontier_rows(a) == _frontier_rows(b)
+        for t in ("page_cache", "politeness"):
+            assert any(t in st["compacted"] for st in sts[1:]), t
+            cols = schemas.ALL_TABLES[t].fieldNames()
+            assert _table_rows(a.read(t), cols) == _table_rows(b.read(t), cols)
         sa = {r.url_hash for r in a.read("seen_exact").collect()}
         sb = {r.url_hash for r in b.read("seen_exact").collect()}
         assert sa == sb
@@ -324,14 +330,18 @@ def test_epoch_fold_on_write_matches_post_hoc_compaction(
         shutil.rmtree(b.root, ignore_errors=True)
 
 
+@pytest.mark.parametrize("table", STATE_TABLES)
 def test_fold_trigger_counts_delta_rows_exactly(
-    spark, tiny_seeds, tiny_pages, tiny_robots
+    spark, tiny_seeds, tiny_pages, tiny_robots, table
 ):
-    """Under heavy deferral (one grant per host) most of the dequeued
-    slice goes back unchanged and never reaches the frontier delta, so
-    n_dequeued + n_inserted over-counts it. The row-count fold trigger
-    must use the delta's exact size: a compact_delta_rows bound between
-    the two appends a delta, a bound at the exact size folds."""
+    """Every keyed state table decides its fold before writing, from the
+    exact row count of its change set: a compact_delta_rows bound one
+    above it appends a delta of exactly that many rows, a bound at it
+    folds. The counts: frontier requeued + backoff + denied + inserted,
+    page_cache the fetched pages, politeness the hosts the politeness
+    stage touched. Under heavy deferral (one grant per host) most of
+    the dequeued slice goes back unchanged and never reaches the
+    frontier delta, so n_dequeued + n_inserted over-counts it."""
     heavy = replace(DELTA_CFG, host_max_parallel=1)
     cats = []
 
@@ -343,20 +353,26 @@ def test_fold_trigger_counts_delta_rows_exactly(
 
     try:
         probe, st, n0 = first_epoch(heavy, "probe")
-        assert "frontier" not in st["compacted"]
-        exact = _manifest_entry(probe)["delta_rows"][-1]
-        upper = st["n_dequeued"] + (st["frontier_size"] - n0)  # + inserted
-        assert st["n_granted"] < st["n_dequeued"]  # deferral happened
-        assert exact + 1 <= upper, (exact, upper)
+        assert table not in st["compacted"]
+        exact = _manifest_entry(probe, table)["delta_rows"][-1]
+        if table == "frontier":
+            upper = st["n_dequeued"] + (st["frontier_size"] - n0)  # + inserted
+            assert st["n_granted"] < st["n_dequeued"]  # deferral happened
+            assert exact + 1 <= upper, (exact, upper)
+        elif table == "page_cache":
+            assert exact == st["n_fetched"]
+        else:  # the table starts empty: one row per touched host
+            assert exact == probe.read("politeness").count()
 
         below, st, _ = first_epoch(
             replace(heavy, compact_delta_rows=exact + 1), "below"
         )
-        assert "frontier" not in st["compacted"]
-        assert _manifest_entry(below)["delta_rows"] == [exact]
+        assert table not in st["compacted"]
+        assert _manifest_entry(below, table)["delta_rows"] == [exact]
 
-        _, st, _ = first_epoch(replace(heavy, compact_delta_rows=exact), "at")
-        assert "frontier" in st["compacted"]
+        at, st, _ = first_epoch(replace(heavy, compact_delta_rows=exact), "at")
+        assert table in st["compacted"]
+        assert not _manifest_entry(at, table).get("deltas")
     finally:
         for cat in cats:
             shutil.rmtree(cat.root, ignore_errors=True)
@@ -404,6 +420,60 @@ def test_resolve_broadcast_size_gate(spark, tiny_seeds):
         assert plan_big  # plan still builds past the gate
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("pending_delta", [False, True])
+def test_upsert_fold_rejects_duplicate_keys(spark, tiny_seeds, pending_delta):
+    """stage_upsert_fold promises the end state of stage_append_delta +
+    compact, which keeps one row per key. Rows of one write have no
+    newest-wins order, so duplicate merge keys raise and stage nothing
+    (they used to land both rows in the bucket files)."""
+    from hiispider_spark.operators.frontier import build_frontier
+
+    root = tempfile.mkdtemp(prefix="fd_dup_")
+    try:
+        cat = IcebergLike(spark, root)
+        fr = build_frontier(tiny_seeds, n_partitions=8)
+        cat.stage_overwrite_parts("frontier", fr, "part_id", list(range(8)))
+        cat.commit(epoch=0)
+        if pending_delta:
+            cat.stage_append_delta("frontier", cat.read("frontier").limit(4))
+            cat.commit(epoch=1)
+        manifest = cat.manifest
+        files = sorted(os.listdir(os.path.join(root, "frontier")))
+        some = cat.read("frontier").orderBy("url_hash").limit(3)
+        dup = some.unionByName(some.withColumn("retry_count", F.lit(7)))
+        with pytest.raises(ValueError, match="frontier"):
+            cat.stage_upsert_fold("frontier", dup, "part_id", n_rows=6)
+        assert cat._staged == {} and cat.manifest == manifest
+        assert sorted(os.listdir(os.path.join(root, "frontier"))) == files
+        # key-unique rows still fold
+        cat.stage_upsert_fold("frontier", some, "part_id", n_rows=3)
+        cat.commit(epoch=cat.epoch + 1)
+        assert cat.read("frontier").count() == fr.count()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_missing_manifest_counts_are_errors(spark, tmp_path):
+    """Every manifest entry carries its row counts; one without them is
+    corrupt. A missing count must raise, not read as 0 (a 0 pending
+    delta-row count would silently disable the row-bound fold trigger)
+    or as an unknown table size."""
+    tables = {
+        "frontier": {"parts": {"0": "frontier/v000001/_pid=0"},
+                     "part_rows": {"0": 5}, "key_count": 5,
+                     "deltas": ["frontier/v000002"], "next_version": 3},
+        "lineage": {"paths": ["lineage/v000001"], "next_version": 2},
+    }
+    with open(tmp_path / "manifest.json", "w") as f:
+        json.dump({"snapshot_id": 1, "epoch": 1, "tables": tables}, f)
+    cat = IcebergLike(spark, str(tmp_path))
+    with pytest.raises(KeyError, match="delta_rows"):
+        cat.delta_row_count("frontier")
+    with pytest.raises(KeyError, match="path_rows"):
+        cat.row_count("lineage")
+    assert cat.delta_row_count("page_cache") == 0  # no entry, no deltas
 
 
 def test_catalog_delta_upsert_semantics(spark):
