@@ -6,8 +6,9 @@ idiomatic Spark DataFrame pipeline:
 
 - partitioned priority frontier over versioned parquet ("Iceberg-like")
   tables, keyed by salted host-hash to break hot-domain skew,
-- a distributed URL-seen set built from per-partition Bloom filters
-  unioned via ``RDD.treeAggregate`` with an exact anti-join backstop,
+- a distributed URL-seen set of per-bucket Bloom filters, each probed
+  only by its own bucket's candidates (the filters are never unioned),
+  with an exact anti-join as the authority,
 - URL canonicalization + 64-bit SipHash in vectorized Arrow pandas UDFs,
 - per-host politeness (robots.txt rules + crawl-delay token buckets)
   enforced inside ``groupBy(host).applyInPandas`` batches,

@@ -149,17 +149,6 @@ def shingles_col(text: Column, k: int = 5) -> Column:
     )
 
 
-def minhash_signature_cols(shingles: Column, n_hashes: int = 32) -> list[Column]:
-    """n_hashes min-hash values, each = min over shingles of
-    xxhash64(shingle, seed_i). Pure Column expressions — JVM-side."""
-    return [
-        F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))
-        ).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-
-
 def _stack_bands(banded: DataFrame, bands: int, extra: list[str] | None = None
                  ) -> DataFrame:
     """(doc_id, band_0..band_{B-1}[, extra]) → one row per (doc, band):

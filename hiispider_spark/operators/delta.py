@@ -203,10 +203,3 @@ def compute_delta(
     prev = keyed(previous_items).select("norm_hash")
     return cur.join(prev, "norm_hash", "left_anti").drop("norm_hash")
 
-
-def delta_vs_previous_epoch(all_items: DataFrame, epoch: int) -> DataFrame:
-    """Convenience: delta of epoch ``epoch`` vs ``epoch - 1`` within the
-    exploded items table."""
-    cur = all_items.filter(F.col("epoch") == epoch)
-    prev = all_items.filter(F.col("epoch") == epoch - 1)
-    return compute_delta(cur, prev)

@@ -1,32 +1,33 @@
-"""Distributed URL-seen set: per-partition Bloom filters unioned via
-``RDD.treeAggregate`` + an exact anti-join backstop (SURVEY.md §2 O-20).
+"""Distributed URL-seen set: one Bloom filter per frontier bucket,
+probed co-partitioned, with an exact anti-join as the authority
+(SURVEY.md §2 O-20).
 
 The reference approximates "seen" with page-cache existence plus a Redis
 negative cache [hs: hiispider/pagegetter.py †] — fine at feed-poller
-scale, impossible at a 10^10-URL frontier. BASELINE.json:6 mandates
+scale, impossible at a 10^10-URL frontier. BASELINE.json:6 asks for
 "a distributed URL-seen set built from per-partition bloom/cuckoo
-filters unioned via treeAggregate".
+filters unioned via treeAggregate". The per-partition filters are
+here; the union is never formed, on the driver or anywhere else. A
+URL's bits live only in its own bucket's filter, so each candidate is
+probed against that one filter (a better fpp than the union's).
 
 Design:
-- every partition builds its filter **vectorized** (numpy bitwise ops
-  over the whole partition's url_hash array — no per-row Python),
-- filters are fixed-size byte arrays → union is bitwise OR, associative
-  and commutative, so ``treeAggregate(depth=2)`` combines P partial
-  filters in O(log P) driver rounds instead of P-way reduce at the
-  driver (the reason bloom beats cuckoo here: trivial lossless union),
-- membership is a broadcast of the unioned bytes + an Arrow
-  ``pandas_udf`` doing the k probes vectorized,
+- each bucket's filter is built **vectorized** (numpy bitwise ops over
+  its url_hash array, no per-row Python), stored as one ``seen_set``
+  row of ``array<long>`` words, and updated by ORing in only the
+  epoch's new URLs,
+- :func:`filter_unseen_partitioned` is the one probe,
 - Bloom is a *prefilter only*: false positives would drop URLs, and the
   north rule requires URL-seen membership to match the reference
   exactly, so the authority is an exact anti-join on ``url_hash``
   against ``seen_exact`` — at scale the bloom cuts that join's probe
-  side by ~(1 - fpp), e.g. 99% at fpp=0.01.
+  side by ~(1 - fpp), e.g. 99% at fpp=0.01,
+- Bloom, not cuckoo: OR is a lossless merge, and nothing removes a URL
+  from the seen set, the one thing a cuckoo filter would add.
 
 Sizing at 10^10 URLs (SURVEY.md §7): k=7, m/n ≈ 10 bits/key → fpp≈0.008;
-10^10 keys ≈ 12.5 GB of filter total, split across P partitions'
-``seen_set`` rows (e.g. P=10k → 1.25 MB per row) — each executor only
-materializes the union lazily per query, or probes per-partition
-filters co-partitioned with the frontier bucket.
+10^10 keys ≈ 12.5 GB of filter total, split across P buckets'
+``seen_set`` rows (e.g. P=10k → 1.25 MB per row).
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -76,6 +77,28 @@ def estimated_fpp(n_items: int, m_bits: int, k: int = DEFAULT_K) -> float:
     return (1.0 - math.exp(-k * n_items / m_bits)) ** k
 
 
+def check_m_bits(m_bits: int) -> None:
+    # positions are masked with m_bits - 1 and stored as 64-bit words
+    if m_bits < 64 or m_bits & (m_bits - 1):
+        raise ValueError(
+            f"bloom m_bits must be a power of two >= 64, got {m_bits}"
+        )
+
+
+_SIZE_MISMATCH = (
+    "seen_set filter of partition %d has %d words, but bloom_m_bits=%d "
+    "needs %d: the stored filters were built with another bloom_m_bits"
+)
+
+
+def _check_words(partition_id, words: np.ndarray, m_bits: int) -> None:
+    # a filter probed at a smaller width gives false negatives
+    if len(words) != m_bits // 64:
+        raise ValueError(
+            _SIZE_MISMATCH % (partition_id, len(words), m_bits, m_bits // 64)
+        )
+
+
 def build_partition_blooms(
     df: DataFrame,
     m_bits: int = DEFAULT_M_BITS,
@@ -86,6 +109,7 @@ def build_partition_blooms(
     ``df`` must carry (part_id, url_hash); each frontier bucket gets one
     filter built in a single vectorized pass over its url_hash array.
     """
+    check_m_bits(m_bits)
     out_schema = T.StructType(
         [
             T.StructField("partition_id", T.IntegerType(), False),
@@ -141,6 +165,7 @@ def merge_partition_blooms(
     Same bits by construction: OR of the same positions; ``fpp`` uses
     the same formula ``estimated_fpp`` already applies to fresh rows.
     """
+    check_m_bits(m_bits)
     out_schema = T.StructType(
         [
             T.StructField("partition_id", T.IntegerType(), False),
@@ -151,18 +176,14 @@ def merge_partition_blooms(
     )
 
     def merge(key, old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
+        bloom = np.zeros(m_bits // 8, dtype=np.uint8)
+        n_old = 0
         if len(old):
-            bloom = (
-                np.asarray(old["bloom"].iloc[0], dtype=np.int64)
-                .view(np.uint8)
-                .copy()
-            )
-            for b in old["bloom"].iloc[1:]:  # defensive: ≤1 row/partition
-                bloom |= np.asarray(b, dtype=np.int64).view(np.uint8)
+            for b in old["bloom"]:  # defensive: ≤1 row/partition
+                words = np.asarray(b, dtype=np.int64)
+                _check_words(key[0], words, m_bits)
+                bloom |= words.view(np.uint8)
             n_old = int(old["n_items"].sum())
-        else:
-            bloom = np.zeros(m_bits // 8, dtype=np.uint8)
-            n_old = 0
         if len(new):
             h = new["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             _insert(bloom, h, m_bits, k)
@@ -181,48 +202,6 @@ def merge_partition_blooms(
         .cogroup(new_items.select("part_id", "url_hash").groupby("part_id"))
         .applyInPandas(merge, out_schema)
     )
-
-
-def union_blooms_tree(
-    seen_set: DataFrame, m_bits: int = DEFAULT_M_BITS, depth: int = 2
-) -> bytes:
-    """Union all per-partition filters via ``RDD.treeAggregate`` —
-    the BASELINE.json:6 mandated combine. Bitwise OR is associative and
-    commutative, so tree depth only changes latency, never the result."""
-    n_bytes = m_bits // 8
-
-    def seq(acc: np.ndarray, row) -> np.ndarray:
-        words = np.asarray(row.bloom, dtype=np.int64).view(np.uint8)
-        return acc | words
-
-    def comb(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        return a | b
-
-    zero = np.zeros(n_bytes, dtype=np.uint8)
-    out = seen_set.select("bloom").rdd.treeAggregate(zero, seq, comb, depth=depth)
-    return out.tobytes()
-
-
-def might_contain_udf(
-    spark: SparkSession,
-    bloom_bytes: bytes,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-):
-    """Vectorized membership probe against a broadcast unioned filter.
-
-    Returns a pandas_udf usable as ``filter(~udf(col("url_hash")))`` to
-    prefilter "definitely unseen" URLs before the exact anti-join.
-    """
-    bc = spark.sparkContext.broadcast(bloom_bytes)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(url_hash: pd.Series) -> pd.Series:
-        bloom = np.frombuffer(bc.value, dtype=np.uint8)
-        h = url_hash.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(_contains(bloom, h, m_bits, k), index=url_hash.index)
-
-    return might_contain
 
 
 def bloom_might_contain_col(
@@ -270,6 +249,25 @@ def _bloom_probe_build(h, bloom, m_bits: int, k: int):
     return cond
 
 
+@lru_cache(maxsize=32)
+def _checked_bloom_col(m_bits: int):
+    # the stored filter, or a failed query if it is not m_bits wide;
+    # memoized like _bloom_probe_named (built once per epoch)
+    n_words = m_bits // 64
+    return (
+        F.when(F.size("bloom") == n_words, F.col("bloom"))
+        .otherwise(
+            F.raise_error(
+                F.format_string(
+                    _SIZE_MISMATCH, "partition_id", F.size("bloom"),
+                    F.lit(m_bits), F.lit(n_words),
+                )
+            )
+        )
+        .alias("bloom")
+    )
+
+
 def filter_unseen_partitioned(
     candidates: DataFrame,
     seen_set: DataFrame,
@@ -284,9 +282,8 @@ def filter_unseen_partitioned(
     same salted bucket function the frontier uses — a seen URL's bloom
     bits live exactly in its own bucket's filter, so probing only that
     bucket is equivalent to probing the global union (with *better*
-    fpp). Never a treeAggregate of the union onto the driver (a ~12 GB
-    collect per epoch at 10^10 sizing; union_blooms_tree remains for
-    ad-hoc membership queries).
+    fpp). The union of the filters is never formed: at 10^10 sizing it
+    would be a ~12 GB collect per epoch.
 
     ``broadcast_filters=True`` (default): join each candidate to its
     bucket's filter row with a broadcast hash join and evaluate
@@ -301,11 +298,12 @@ def filter_unseen_partitioned(
 
     Bloom semantics unchanged: no false negatives, so bloom-negative
     rows are definitely unseen; bloom-positive rows go to the exact
-    anti-join authority.
+    anti-join authority — for filters built at ``m_bits`` only, so
+    both arms fail on a filter row of another size.
     """
     if broadcast_filters:
         blooms = seen_set.select(
-            F.col("partition_id").alias("part_id"), "bloom"
+            F.col("partition_id").alias("part_id"), _checked_bloom_col(m_bits)
         )
         flagged = candidates.join(F.broadcast(blooms), "part_id", "left")
         flagged = flagged.withColumn(
@@ -323,10 +321,11 @@ def filter_unseen_partitioned(
         def probe(key, cand: pd.DataFrame, blooms: pd.DataFrame) -> pd.DataFrame:
             if cand.empty or blooms.empty:
                 return cand.assign(_maybe_seen=np.zeros(len(cand), dtype=bool))
-            words = np.asarray(blooms["bloom"].iloc[0], dtype=np.int64)
-            bloom = words.view(np.uint8)
-            for b in blooms["bloom"].iloc[1:]:  # defensive: ≤1 row per bucket
-                bloom = bloom | np.asarray(b, dtype=np.int64).view(np.uint8)
+            bloom = np.zeros(m_bits // 8, dtype=np.uint8)
+            for b in blooms["bloom"]:  # defensive: ≤1 row per bucket
+                words = np.asarray(b, dtype=np.int64)
+                _check_words(key[0], words, m_bits)
+                bloom |= words.view(np.uint8)
             h = cand["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             return cand.assign(_maybe_seen=_contains(bloom, h, m_bits, k))
 
@@ -343,28 +342,3 @@ def filter_unseen_partitioned(
     )
     return definitely_new.unionByName(checked)
 
-
-def filter_unseen(
-    new_urls: DataFrame,
-    seen_exact: DataFrame,
-    spark: SparkSession | None = None,
-    bloom_bytes: bytes | None = None,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """URLs (with url_hash) not yet seen (O-20).
-
-    Bloom has no false negatives, so ``might_contain == False`` proves
-    a URL unseen — those rows skip the join entirely. Only the bloom
-    positives (true hits + fpp false alarms) probe the exact anti-join,
-    which keeps membership exact. At 10^10 scale this cuts the join's
-    probe side to (hit-rate + fpp) of the candidates.
-    """
-    if bloom_bytes is None or spark is None:
-        return new_urls.join(seen_exact, "url_hash", "left_anti")
-    probe = might_contain_udf(spark, bloom_bytes, m_bits, k)
-    flagged = new_urls.withColumn("_maybe_seen", probe(F.col("url_hash")))
-    definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    needs_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    checked = needs_check.join(seen_exact, "url_hash", "left_anti")
-    return definitely_new.unionByName(checked)

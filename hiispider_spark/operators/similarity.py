@@ -47,10 +47,6 @@ def norm_col(a: Column) -> Column:
     )
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def _as_double(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 

@@ -159,6 +159,7 @@ class EpochConfig:
                 "state_deltas=False (partition-overwrite state commits) "
                 "was removed; epochs always commit merge-on-read deltas"
             )
+        seen_ops.check_m_bits(self.bloom_m_bits)
 
     @classmethod
     def production(cls, **overrides) -> "EpochConfig":
@@ -544,10 +545,9 @@ def run_epoch(
 
         # discovered out-links → canonicalize → unseen → new entries
         # (O-20/O-21). Candidates get their salted bucket up front so the
-        # bloom probe is CO-PARTITIONED: each bucket's candidates meet that
-        # bucket's filter row in a cogroup — no treeAggregate of the full
-        # filter onto the driver (a ~12 GB collect per epoch at 10^10
-        # sizing; union_blooms_tree remains for ad-hoc membership queries).
+        # bloom probe is CO-PARTITIONED: each bucket's candidates meet only
+        # that bucket's filter row — the union of the filters is never
+        # formed (a ~12 GB collect per epoch at 10^10 sizing).
         inserted = None
         ins_parts: list[int] = []
         if cfg.follow_links:

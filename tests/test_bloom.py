@@ -1,11 +1,14 @@
-"""Bloom seen-set: no false negatives, treeAggregate union, exactness."""
+"""Bloom seen-set: no false negatives, per-bucket filters, exactness of
+the co-partitioned probe, and the filter-width checks."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from hiispider_spark.operators import seen
+from hiispider_spark.plans.epoch import EpochConfig
 
 M = 1 << 17  # 128 Kbit for tests
 K = 7
@@ -33,37 +36,47 @@ def test_fpp_within_2x_estimate():
     assert fp <= max(2 * est, 0.01)
 
 
-def test_partition_blooms_and_tree_union(spark):
+def test_partition_blooms_match_direct_insert(spark):
     n = 4000
     df = spark.range(n).select(
         (F.col("id") % 8).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    blooms = seen.build_partition_blooms(df, M, K)
-    assert blooms.count() == 8
-    unioned = seen.union_blooms_tree(blooms, M)
-    # union must contain every inserted key (no false negatives survive OR)
-    h = np.array([r.url_hash for r in df.collect()], dtype=np.int64)
-    bl = np.frombuffer(unioned, dtype=np.uint8)
-    assert seen._contains(bl, h, M, K).all()
-    # and equals the filter built by inserting everything directly
-    direct = np.zeros(M // 8, dtype=np.uint8)
-    seen._insert(direct, h, M, K)
-    assert bytes(direct) == unioned
+    blooms = seen.build_partition_blooms(df, M, K).collect()
+    assert sorted(r.partition_id for r in blooms) == list(range(8))
+    by_part: dict[int, list[int]] = {}
+    for r in df.collect():
+        by_part.setdefault(r.part_id, []).append(r.url_hash)
+    for r in blooms:
+        h = np.array(by_part[r.partition_id], dtype=np.int64)
+        got = np.asarray(r.bloom, dtype=np.int64).view(np.uint8)
+        # each bucket's filter holds its own keys (no false negatives)
+        assert seen._contains(got, h, M, K).all()
+        # and equals the filter built by inserting them directly
+        direct = np.zeros(M // 8, dtype=np.uint8)
+        seen._insert(direct, h, M, K)
+        assert bytes(direct) == bytes(got)
+        assert r.n_items == len(h)
 
 
 def test_filter_unseen_exactness(spark):
-    all_urls = spark.range(1000).select(F.xxhash64("id").alias("url_hash"))
-    seen_exact = all_urls.filter(F.col("url_hash") % 2 == 0)
-    blooms = seen.build_partition_blooms(
-        seen_exact.withColumn("part_id", F.lit(0)), M, K
+    all_urls = spark.range(1000).select(
+        (F.col("id") % 4).cast("int").alias("part_id"),
+        F.xxhash64("id").alias("url_hash"),
     )
-    bloom_bytes = seen.union_blooms_tree(blooms, M)
-    got = seen.filter_unseen(all_urls, seen_exact, spark, bloom_bytes, M, K)
-    expected = all_urls.join(seen_exact, "url_hash", "left_anti")
-    assert sorted(r.url_hash for r in got.collect()) == sorted(
-        r.url_hash for r in expected.collect()
+    seen_part = all_urls.filter(F.col("url_hash") % 2 == 0)
+    seen_exact = seen_part.select("url_hash")
+    blooms = seen.build_partition_blooms(seen_part, M, K)
+    expected = sorted(
+        r.url_hash
+        for r in all_urls.join(seen_exact, "url_hash", "left_anti").collect()
     )
+    for broadcast_filters in (True, False):
+        got = seen.filter_unseen_partitioned(
+            all_urls, blooms, seen_exact, M, K,
+            broadcast_filters=broadcast_filters,
+        )
+        assert sorted(r.url_hash for r in got.collect()) == expected
 
 
 def test_jvm_probe_matches_numpy(spark):
@@ -120,3 +133,46 @@ def test_filter_unseen_partitioned_modes_agree(spark):
     sb = sorted(r.url_hash for r in b.collect())
     sw = sorted(r.url_hash for r in want.collect())
     assert sa == sb == sw
+
+
+@pytest.mark.parametrize("m_bits", [3 << 20, 1000, 32, 0])
+def test_m_bits_must_be_power_of_two(spark, m_bits):
+    """Positions are masked with m_bits - 1: another width would raise
+    the fpp above the stored estimate or fail inside the UDF."""
+    df = spark.range(10).select(
+        F.lit(0).alias("part_id"), F.xxhash64("id").alias("url_hash")
+    )
+    with pytest.raises(ValueError, match="power of two"):
+        EpochConfig(bloom_m_bits=m_bits)
+    with pytest.raises(ValueError, match="power of two"):
+        seen.build_partition_blooms(df, m_bits, K)
+    with pytest.raises(ValueError, match="power of two"):
+        seen.merge_partition_blooms(
+            seen.build_partition_blooms(df, M, K), df, m_bits, K
+        )
+
+
+def test_filters_of_another_width_are_rejected(spark):
+    """Filters stored at M and read at M/2 would be probed in their lower
+    half: false negatives that skip the exact anti-join. Both probe arms
+    and the merge fail instead."""
+    base = spark.range(400).select(
+        (F.col("id") % 4).cast("int").alias("part_id"),
+        F.xxhash64("id").alias("url_hash"),
+    )
+    blooms = seen.build_partition_blooms(base, M, K)
+    seen_exact = base.select("url_hash")
+    for broadcast_filters in (True, False):
+        probe = seen.filter_unseen_partitioned(
+            base, blooms, seen_exact, M // 2, K,
+            broadcast_filters=broadcast_filters,
+        )
+        with pytest.raises(Exception, match="built with another bloom_m_bits"):
+            probe.collect()
+    merged = seen.merge_partition_blooms(blooms, base, M // 2, K)
+    with pytest.raises(Exception, match="built with another bloom_m_bits"):
+        merged.collect()
+    # the width they were built at still probes exactly
+    assert seen.filter_unseen_partitioned(
+        base, blooms, seen_exact, M, K
+    ).count() == 0

@@ -129,19 +129,30 @@ def test_lineage_accounts_for_every_epoch(golden_run):
 
 def test_seen_set_matches_frontier(golden_run):
     """URL-seen membership == frontier membership (never-delete design),
-    and the bloom filters contain every seen hash (no false negatives)."""
-    import numpy as np
-
+    and every frontier row is a hit in its OWN bucket's filter — the
+    filter the epoch's co-partitioned probe reads (no false negatives,
+    no hash inserted into the wrong bucket)."""
     from hiispider_spark.operators import seen as seen_ops
 
     cat, _ = golden_run
     fr = sorted(r.url_hash for r in cat.read("frontier").select("url_hash").collect())
     se = sorted(r.url_hash for r in cat.read("seen_exact").distinct().collect())
     assert fr == se
-    bloom = seen_ops.union_blooms_tree(cat.read("seen_set"), CFG.bloom_m_bits)
-    bl = np.frombuffer(bloom, dtype=np.uint8)
-    h = np.array(se, dtype=np.int64)
-    assert seen_ops._contains(bl, h, CFG.bloom_m_bits, seen_ops.DEFAULT_K).all()
+    probed = (
+        cat.read("frontier")
+        .select("part_id", "url_hash")
+        .join(
+            cat.read("seen_set"), F.col("part_id") == F.col("partition_id")
+        )
+        .select(
+            seen_ops.bloom_might_contain_col(
+                "url_hash", "bloom", CFG.bloom_m_bits
+            ).cast("int").alias("hit")
+        )
+        .agg(F.count("*").alias("n"), F.sum("hit").alias("hits"))
+        .first()
+    )
+    assert probed.n == probed.hits == len(fr)
 
 
 def test_robots_denied_never_fetched(golden_run):

@@ -155,3 +155,29 @@ def test_failed_epoch_leaves_catalog_as_found(
         assert set(st["compacted"]) == {"frontier", "page_cache", "politeness"}
     got = json.loads(_golden_text([_commit_state(cat, st)]))[0]
     assert got == json.loads(GOLDEN.read_text())[1]
+
+
+def test_epoch_rejects_filters_of_another_width(
+    spark, after_epoch_1, tiny_pages, tiny_robots, tmp_path
+):
+    """The config is not stored with the catalog: resuming filters built
+    at 2^17 bits with bloom_m_bits=2^16 would probe their lower half, and
+    a seen URL would skip the exact anti-join as "definitely new". The
+    epoch fails on the filter rows instead and leaves no trace."""
+    root = str(tmp_path / "cat")
+    shutil.copytree(after_epoch_1[APPEND], root)
+    cat = IcebergLike(spark, root)
+    with open(os.path.join(root, "manifest.json"), "rb") as f:
+        manifest = f.read()
+    tree = _file_tree(root)
+
+    before = _persistent_rdd_ids(spark)
+    narrow = replace(APPEND, bloom_m_bits=APPEND.bloom_m_bits // 2)
+    with pytest.raises(Exception, match="built with another bloom_m_bits"):
+        run_epoch(spark, cat, tiny_pages, tiny_robots, narrow)
+
+    assert _persistent_rdd_ids(spark) - before == set()
+    with open(os.path.join(root, "manifest.json"), "rb") as f:
+        assert f.read() == manifest
+    assert _file_tree(root) == tree
+    assert cat.epoch == 1 and not cat._staged

@@ -5,8 +5,6 @@
   by manifest reference,
 - the conditional-GET cache is a compact state table (the extracted
   history is never re-read, let alone re-aggregated, inside an epoch),
-- the bloom probe is co-partitioned (no treeAggregate of the unioned
-  filter onto the driver inside run_epoch),
 - filter_unseen_partitioned is exactly the anti-join semantics.
 """
 
@@ -108,17 +106,6 @@ def test_page_cache_matches_extracted_history(spark, cat, tiny_pages, tiny_robot
     # the compact state table carries exactly the latest digest per url
     assert pc.exceptAll(hist).count() == 0
     assert hist.exceptAll(pc).count() == 0
-
-
-def test_no_driver_bloom_union_in_epoch(
-    spark, cat, tiny_pages, tiny_robots, monkeypatch
-):
-    def boom(*a, **k):  # pragma: no cover - should never fire
-        raise AssertionError("driver-side bloom union called inside run_epoch")
-
-    monkeypatch.setattr(seen_ops, "union_blooms_tree", boom)
-    st = run_epoch(spark, cat, tiny_pages, tiny_robots, CFG)
-    assert st["n_extracted"] > 0
 
 
 def test_filter_unseen_partitioned_is_exact(spark, tiny_seeds):
