@@ -11,7 +11,9 @@ idiomatic Spark DataFrame pipeline:
   with an exact anti-join as the authority,
 - URL canonicalization + 64-bit SipHash in vectorized Arrow pandas UDFs,
 - per-host politeness (robots.txt rules + crawl-delay token buckets)
-  enforced inside ``groupBy(host).applyInPandas`` batches,
+  enforced by a Column window over ``host``; the
+  ``groupBy(host).applyInPandas`` form is kept as the reference the
+  tests compare it against,
 - each crawl epoch is a Structured-Streaming-style micro-batch that
   dequeues the top-priority frontier slice, fetches (in-sandbox: joins
   against a Common-Crawl-style ``pages`` table), extracts with plugin

@@ -34,17 +34,6 @@ def normalize_item(payload: str, ignores: tuple[str, ...] = ()) -> str:
     return json.dumps(obj, sort_keys=True, separators=(",", ":"))
 
 
-def normalized_hash_udf(ignores: tuple[str, ...] = ()):
-    """Arrow-batched stable item id: xxhash-free (hash happens JVM-side
-    on the normalized string) — this UDF only normalizes."""
-
-    @F.pandas_udf(T.StringType())
-    def normalize(payload: pd.Series) -> pd.Series:
-        return payload.map(lambda p: normalize_item(p, ignores))
-
-    return normalize
-
-
 def locate_item_list(obj, path: str | None = None) -> list:
     """The Autogenerator's list-locating heuristic: find THE item list
     inside an arbitrary nested payload [hs: hiispider/delta.py::
@@ -191,8 +180,12 @@ def compute_delta(
     ignores: tuple[str, ...] = (),
 ) -> DataFrame:
     """Items in ``current`` whose normalized hash is absent from
-    ``previous`` for the same url (left-anti join per url_hash key)."""
-    norm = normalized_hash_udf(ignores)
+    ``previous`` for the same url (left-anti join per url_hash key).
+    The Arrow-batched UDF only normalizes; the hash is JVM-side."""
+
+    @F.pandas_udf(T.StringType())
+    def norm(payload: pd.Series) -> pd.Series:
+        return payload.map(lambda p: normalize_item(p, ignores))
 
     def keyed(df: DataFrame) -> DataFrame:
         return df.withColumn(

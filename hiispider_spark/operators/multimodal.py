@@ -11,11 +11,10 @@ Two tiers, honestly separated:
   binary-in-DataFrame pipeline, value-oracle-checked end-to-end (the
   synth media is a closed-form function of doc_id, so expected
   features are SQL-expressible).
-- **Stub** — compressed formats (JPEG/PNG/MP3/video frames) genuinely
-  need PIL/ffmpeg, absent from this container: ``decode_image_stub``
-  raises so nobody mistakes the fake featurizer for a real decoder;
-  ``extract_media_features`` (byte-histogram) stands in to test the
-  Arrow plumbing contract a real decoder must satisfy.
+- **Stand-in** — compressed formats (JPEG/PNG/MP3/video frames) need
+  PIL/ffmpeg, which the package does not depend on: no decoder is
+  offered for them. ``extract_media_features`` (byte-histogram) stands
+  in to test the Arrow plumbing contract a real decoder must satisfy.
 
 Scale notes: media bytes ride in the same row as metadata (fine to
 ~1 MB/row; bigger media belongs in object storage with a pointer
@@ -75,18 +74,6 @@ def synth_media(docs: DataFrame) -> DataFrame:
             (size * 2).alias("height"),
             F.length(payload).cast("int").alias("n_bytes"),
         ).alias("meta"),
-    )
-
-
-def decode_image_stub(media: bytes) -> "np.ndarray":
-    """Real decode would go here (PIL.Image.open → np.asarray).
-
-    The container has no imaging libraries — by design this raises so
-    nobody mistakes the fake featurizer for a real decoder.
-    """
-    raise NotImplementedError(
-        "image decode requires PIL/opencv, not present in this container; "
-        "use extract_media_features (deterministic fake) for plumbing tests"
     )
 
 

@@ -1,5 +1,5 @@
 """Per-host politeness: robots.txt rules + crawl-delay token buckets
-inside ``groupBy(host).applyInPandas`` (SURVEY.md §2 O-7, O-9, O-9n).
+(SURVEY.md §2 O-7, O-9, O-9n).
 
 The reference throttles with in-memory per-host deques and counters
 inside a single Twisted process — ``max_requests_per_host_per_second``,
@@ -8,7 +8,10 @@ inside a single Twisted process — ``max_requests_per_host_per_second``,
 support. BASELINE.json:6 mandates both for us: "per-host politeness
 (robots.txt rules + crawl-delay token buckets) enforced inside
 groupBy(host) applyInPandas batches replacing hiispider's Twisted
-deferred queue".
+deferred queue". The bucket grant exists in two forms:
+:func:`apply_token_buckets_col`, the Column window form the epoch runs,
+and :func:`apply_token_buckets`, the ``groupBy(host).applyInPandas``
+form the tests compare it against row by row.
 
 Semantics (deterministic, cross-epoch):
 - robots: a URL is denied iff any rule with allow=false has a prefix
@@ -231,13 +234,10 @@ def apply_token_buckets_col(
 
     The grant is a rank comparison: ``row_number() over (partition by
     host order by priority desc, tie asc) <= floor(tokens)`` — one
-    shuffle on host, whole-stage codegen, no Python workers. The
-    pandas form stays the engine default (BASELINE mandates the
-    ``groupBy(host) applyInPandas`` expression and it is where
-    batched LIVE HTTP would execute — a Column plan has nowhere to do
-    I/O); this twin is the fast path for pure-scheduling uses (the
-    politeness_budget analytics query runs ~2× faster on it) and the
-    independent re-derivation that pins the pandas semantics.
+    shuffle on host, whole-stage codegen, no Python workers. This is
+    the form the epoch and the politeness_budget driver query run; the
+    ``applyInPandas`` form is the reference test_politeness compares
+    it against.
     """
     from pyspark.sql import Window
 

@@ -6,7 +6,7 @@ already-seen page looks new to the seen-set). The reference's fetch
 path follows redirects inside its HTTP client [hs:
 hiispider/pagegetter.py †]; in a Spark-batch crawl the fetch is a join
 against the page store, so redirects surface as DATA — 3xx rows with a
-``Location`` header (sources/warc.py extracts them) — and chain
+``Location`` header — and chain
 resolution becomes a graph problem over an alias edge table.
 
 Semantics
@@ -140,19 +140,4 @@ def apply_aliases(
         .filter(~F.coalesce("is_cycle", F.lit(False)))
         .withColumn(url_col, F.coalesce("final_url", F.col(url_col)))
         .drop("__alias_src", "final_url", "is_cycle")
-    )
-
-
-def redirect_edges_from_warc(warc_df: DataFrame) -> DataFrame:
-    """(src_url, dst_url) redirect edges from a WARC read
-    (sources/warc.py): 3xx records whose Location header was captured.
-    Relative Locations were already resolved against the record URL at
-    parse time."""
-    return (
-        warc_df.filter(
-            (F.col("http_status") >= 300)
-            & (F.col("http_status") < 400)
-            & F.col("redirect").isNotNull()
-        )
-        .select(F.col("url").alias("src_url"), F.col("redirect").alias("dst_url"))
     )

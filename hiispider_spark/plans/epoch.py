@@ -104,10 +104,6 @@ class EpochConfig:
     # size).
     compact_every: int = 8
     compact_delta_rows: int = 4_000_000
-    # Reclaim superseded version dirs right after a fold commits
-    # (catalog.vacuum — Iceberg expire_snapshots analogue). Off only
-    # for debugging/forensics on dead snapshots.
-    vacuum_after_compact: bool = True
     # Crawl-trap guard (operators/traps.py): hosts whose newly
     # discovered links this epoch exceed trap_min_urls AND show a
     # pathological URL shape (segment repetition / depth / query-param
@@ -124,16 +120,6 @@ class EpochConfig:
     # synthetic corpus emits only in-scope links (no behavior change),
     # and golden fixtures pin the unguarded path.
     scope_guard: bool = False
-    # Token-bucket implementation: "column" (the JVM window twin — the
-    # fast path whenever the fetch is a join and the politeness stage
-    # hosts no I/O, as in this sandbox; guide §4: no Python boundary on
-    # the hot path) or "pandas" (groupBy(host).applyInPandas — the
-    # BASELINE-mandated expression and the stage where batched live
-    # HTTP executes in a production deployment; flip to it when the
-    # fetch does real I/O). The two are proved row-identical by
-    # test_politeness, including two full epochs byte-identical under
-    # both impls, so the default only changes the physical plan.
-    politeness_impl: str = "column"
     # Per-host concurrency ceiling per epoch (the reference's
     # max_simultaneous_requests_per_host) on top of the rate budget;
     # None = rate-limited only (golden fixtures).
@@ -180,7 +166,6 @@ class EpochConfig:
             scope_guard=True,            # drop out-of-scope links early
             host_max_parallel=4,         # per-host concurrency ceiling
             max_inflight=1 << 20,        # global in-flight cap
-            politeness_impl="column",    # JVM twin (fetch is a join)
             boot_stagger_s=300,          # spread the first-fetch wave
             collect_stats=True,
         )
@@ -330,12 +315,7 @@ def run_epoch(
 
         # politeness: robots prefix rules then per-host token buckets
         allowed, denied = pol.split_robots(eligible, robots)
-        bucket_fn = (
-            pol.apply_token_buckets_col
-            if cfg.politeness_impl == "column"
-            else pol.apply_token_buckets
-        )
-        bucketed = bucket_fn(
+        bucketed = pol.apply_token_buckets_col(
             allowed, cat.read("politeness"), ts, cfg.epoch_seconds,
             host_max_parallel=cfg.host_max_parallel,
         )
@@ -734,7 +714,7 @@ def run_epoch(
             if fs is not None:
                 stats["frontier_size"] = fs
         cat.commit(epoch=e)
-        if compacted and cfg.vacuum_after_compact:
+        if compacted:
             # a fold just superseded this table's delta files and the
             # rewritten bucket dirs' old versions; reclaim them now (O(files)
             # driver-side, no job). Safe here: the commit landed and every

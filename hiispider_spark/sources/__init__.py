@@ -9,14 +9,4 @@ from hiispider_spark.sources.synth import (  # noqa: F401
     synth_robots,
     synth_seeds,
 )
-from hiispider_spark.sources.sitemap import (  # noqa: F401
-    expand_sitemap_index,
-    parse_sitemap_index,
-    parse_sitemaps,
-    sitemap_seeds,
-)
-from hiispider_spark.sources.warc import (  # noqa: F401
-    build_warc_bytes,
-    parse_warc_bytes,
-    read_warc,
-)
+from hiispider_spark.sources.sitemap import parse_sitemaps  # noqa: F401

@@ -142,8 +142,7 @@ def read_cdx_classic(lines: DataFrame, text_col: str = "value") -> DataFrame:
 def latest_captures(captures: DataFrame) -> DataFrame:
     """Latest capture per url (warc_ts desc; file/offset tie-break for
     determinism) — windowed top-1 (WindowGroupLimit: per-partition
-    partial top-1 before the shuffle, never a global sort), the same
-    shape as ``read_warc(latest_only=True)``."""
+    partial top-1 before the shuffle, never a global sort)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("url").orderBy(

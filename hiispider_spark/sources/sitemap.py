@@ -1,16 +1,13 @@
-"""Sitemap ingestion: sitemaps.org XML → frontier seeds.
+"""Sitemap ingestion: sitemaps.org XML → URL entries with revisit hints.
 
 Sitemaps are the polite crawler's discovery channel (the reference
 discovers URLs only through its job table and page links [hs:
 hiispider/spider.py †]; any production deployment also consumes
-``/sitemap.xml``). Two document kinds per the sitemaps.org 0.9 schema:
-
-- ``<urlset>``: leaf sitemap — ``<url>`` entries with required
-  ``<loc>`` and optional ``<lastmod>`` / ``<changefreq>`` /
-  ``<priority>``;
-- ``<sitemapindex>``: index — ``<sitemap><loc>`` children pointing at
-  leaf sitemaps (the spec forbids nesting indexes, so ONE expansion
-  level is complete).
+``/sitemap.xml``). The parse reads ``<urlset>`` documents of the
+sitemaps.org 0.9 schema: ``<url>`` entries with required ``<loc>`` and
+optional ``<lastmod>`` / ``<changefreq>`` / ``<priority>``. Index
+documents (``<sitemapindex>``) and gzipped bodies are not handled: the
+caller passes decompressed leaf documents.
 
 Parsing is deliberately NOT an XML-library pass: sitemap documents are
 machine-generated, flat, and enormous in aggregate (50k URLs × 10k+
@@ -22,18 +19,13 @@ unescaping covers the five predefined XML entities the spec requires
 sitemap producers to escape.
 
 Scale shape: one sitemap body is ≤50 MB decoded (spec cap); bodies
-arrive via ``binaryFile`` like WARC archives, one file per task —
-the explode multiplies rows ~50k× but each output row is a short
-string tuple, so partition sizing follows the INPUT file count.
-Gzipped sitemaps (``.xml.gz``) decompress in an Arrow-batched pandas
-UDF before the Column parse (cheap: one gunzip per file, not per row).
+arrive via ``binaryFile``, one file per task — the explode multiplies
+rows ~50k× but each output row is a short string tuple, so partition
+sizing follows the INPUT file count.
 """
 
 from __future__ import annotations
 
-import gzip as _gzip
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -115,69 +107,6 @@ def parse_sitemaps(
     )
 
 
-def parse_sitemap_index(
-    docs: DataFrame, url_col: str = "url", body_col: str = "body"
-) -> DataFrame:
-    """``(index_url, child_url)`` — ``<sitemap><loc>`` children of
-    ``<sitemapindex>`` documents."""
-    return (
-        docs.select(
-            F.col(url_col).alias("index_url"),
-            F.explode(
-                F.regexp_extract_all(
-                    F.decode(F.col(body_col), "UTF-8"),
-                    F.lit("(?s)<sitemap>(.*?)</sitemap>"),
-                    F.lit(1),
-                )
-            ).alias("__entry"),
-        )
-        .select(
-            "index_url",
-            _unescape_xml(_tag(F.col("__entry"), "loc")).alias("child_url"),
-        )
-        .filter(F.col("child_url").isNotNull())
-    )
-
-
-def expand_sitemap_index(docs: DataFrame) -> DataFrame:
-    """Resolve one index level: children referenced by any
-    ``<sitemapindex>`` doc are selected from ``docs`` by URL; leaf
-    ``<urlset>`` docs pass through. Output rows are leaf documents
-    ready for :func:`parse_sitemaps`. The child join side is the
-    (small) index edge set — broadcast."""
-    children = F.broadcast(
-        parse_sitemap_index(docs).select(F.col("child_url").alias("url"))
-    )
-    is_leaf = F.instr(
-        F.decode(F.col("body"), "UTF-8"), "<sitemapindex"
-    ) == 0
-    leaves = docs.filter(is_leaf)
-    referenced = docs.join(children, "url", "left_semi")
-    return leaves.unionByName(referenced).distinct()
-
-
-def gunzip_bodies(
-    docs: DataFrame, body_col: str = "body"
-) -> DataFrame:
-    """Decompress gzipped bodies (magic ``1f 8b``); plain bodies pass
-    through. Arrow-batched pandas UDF — one gunzip per document."""
-
-    @F.pandas_udf("binary")
-    def gunzip(s: pd.Series) -> pd.Series:
-        def one(b):
-            b = bytes(b)
-            if b[:2] == b"\x1f\x8b":
-                try:
-                    return _gzip.decompress(b)
-                except OSError:
-                    return b
-            return b
-
-        return s.map(one)
-
-    return docs.withColumn(body_col, gunzip(F.col(body_col)))
-
-
 def with_interval_hint(entries: DataFrame) -> DataFrame:
     """Append ``interval_hint_s`` mapped from ``changefreq`` (NULL when
     absent) — the seed for recrawl.py's adaptive estimator."""
@@ -186,14 +115,4 @@ def with_interval_hint(entries: DataFrame) -> DataFrame:
     )
     return entries.withColumn(
         "interval_hint_s", mapping[F.col("changefreq")]
-    )
-
-
-def sitemap_seeds(entries: DataFrame) -> DataFrame:
-    """Frontier seed rows ``(url, priority)`` from parsed entries —
-    the same shape ``bootstrap()`` takes; duplicate locs keep the
-    highest priority."""
-    return (
-        entries.groupBy("url")
-        .agg(F.max("priority").alias("priority"))
     )

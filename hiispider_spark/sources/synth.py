@@ -199,34 +199,6 @@ def synth_robots(
     )
 
 
-def synth_robots_text(
-    spark: SparkSession, sf_dir: str, cfg: SynthConfig | None = None
-) -> DataFrame:
-    """Raw robots.txt bodies (host, body:binary) implementing the same
-    per-host rules as :func:`synth_robots` — the ingestion-side input
-    for :mod:`hiispider_spark.functions.robots`, which must round-trip
-    them back to the typed rows (tests/test_robots_parse.py)."""
-    cfg = cfg or SynthConfig.from_sf_dir(spark, sf_dir)
-    h = F.col("h")
-    body = F.concat(
-        F.lit("# synthetic robots\r\nUser-agent: spider\nUser-agent: *\n"),
-        F.when(
-            h % 7 == 0, F.lit("Disallow: /p/1  # hot path\nAllow: /\n")
-        ).otherwise(F.lit("Allow: /\n")),
-        F.format_string(
-            "Crawl-delay: %.1f\n", (0.5 + (h % 4) * 0.5)
-        ),
-    )
-    return (
-        spark.range(cfg.n_hosts)
-        .toDF("h")
-        .select(
-            F.format_string("h%04d.example.org", h.cast("int")).alias("host"),
-            body.cast("binary").alias("body"),
-        )
-    )
-
-
 def oracle_ctes() -> str:
     """DuckDB CTEs replicating the synthesis rules above, byte for byte.
 

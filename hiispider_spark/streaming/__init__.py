@@ -1,8 +1,3 @@
-"""Streaming-shaped entry points (SURVEY.md §2 O-2, O-26, O-28)."""
+"""Streaming-shaped entry point (SURVEY.md §2 O-2, O-28)."""
 
-from hiispider_spark.streaming.micro_batch import (  # noqa: F401
-    crawl_url,
-    stream_events_windowed,
-)
 from hiispider_spark.streaming.continuous import crawl_stream  # noqa: F401
-from hiispider_spark.streaming.stateful import stream_politeness  # noqa: F401

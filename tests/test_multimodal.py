@@ -1,4 +1,4 @@
-"""Multimodal binary-column plumbing: schema, batch shape, stub gate."""
+"""Multimodal binary-column plumbing: schema, batch shape."""
 
 from __future__ import annotations
 
@@ -22,11 +22,6 @@ def test_synth_media_schema_and_determinism(spark):
     # deterministic: same doc_id → same bytes
     again = mm.synth_media(docs).filter("doc_id = 7").first()
     assert bytes(row.media) == bytes(again.media)
-
-
-def test_decode_stub_is_explicitly_unimplemented():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image_stub(b"anything")
 
 
 def test_feature_extraction_shape_and_normalization(spark):

@@ -274,9 +274,13 @@ def test_column_twin_no_python_in_plan(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_epoch_byte_identical_under_politeness_impls(spark, tmp_path):
-    """Two full epochs driven with politeness_impl='pandas' vs 'column'
-    commit byte-identical catalogs (frontier/extracted/politeness)."""
+def test_epoch_byte_identical_under_both_bucket_forms(
+    spark, tmp_path, monkeypatch
+):
+    """Two full epochs driven with the applyInPandas token buckets
+    patched in place of the Column form the epoch calls commit
+    byte-identical catalogs (frontier/extracted/politeness/page_cache)."""
+    from hiispider_spark.operators import politeness as pol
     from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epochs
     from hiispider_spark.sources.catalog import IcebergLike
     from hiispider_spark.sources.synth import (
@@ -291,15 +295,17 @@ def test_epoch_byte_identical_under_politeness_impls(spark, tmp_path):
     pages = synth_pages(spark, sf, tiny).persist()
     robots = synth_robots(spark, sf, tiny)
     seeds = synth_seeds(spark, sf, tiny)
+    cfg = EpochConfig(k_per_partition=6, n_partitions=8, bloom_m_bits=1 << 17)
     outs = {}
     for impl in ("pandas", "column"):
-        cfg = EpochConfig(
-            k_per_partition=6, n_partitions=8, bloom_m_bits=1 << 17,
-            politeness_impl=impl,
-        )
-        cat = IcebergLike(spark, str(tmp_path / impl))
-        bootstrap(spark, cat, seeds, cfg)
-        run_epochs(spark, cat, pages, robots, 2, cfg)
+        with monkeypatch.context() as m:
+            if impl == "pandas":
+                m.setattr(
+                    pol, "apply_token_buckets_col", pol.apply_token_buckets
+                )
+            cat = IcebergLike(spark, str(tmp_path / impl))
+            bootstrap(spark, cat, seeds, cfg)
+            run_epochs(spark, cat, pages, robots, 2, cfg)
         outs[impl] = cat
     for tbl in ("frontier", "extracted", "politeness", "page_cache"):
         a = sorted(map(tuple, outs["pandas"].read(tbl).collect()))

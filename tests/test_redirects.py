@@ -1,13 +1,8 @@
 """Redirect-chain resolution (operators/redirects.py)."""
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from hiispider_spark.operators import redirects as rd
-from hiispider_spark.sources import warc as w
 
 
 def _edges(spark, pairs):
@@ -63,32 +58,6 @@ def test_apply_aliases_rewrites_and_drops_cycles(spark):
     got = sorted(r.url for r in rd.apply_aliases(urls, resolved).collect())
     # a→b (alias rewritten), b passes through, x dropped (cycle), q untouched
     assert got == ["b", "b", "q"]
-
-
-def test_warc_redirect_edges_end_to_end(spark):
-    recs = [
-        ("http://a.org/old", "2024-01-01T00:00:00Z", 301, b"", "http://a.org/mid"),
-        # relative Location must resolve against the record URL
-        ("http://a.org/mid", "2024-01-01T00:00:00Z", 302, b"", "/new"),
-        ("http://a.org/new", "2024-01-01T00:00:00Z", 200, b"<html>x</html>"),
-        # Location on a non-3xx is ignored
-        ("http://a.org/ok", "2024-01-01T00:00:00Z", 200, b"<html>y</html>", "/x"),
-    ]
-    root = tempfile.mkdtemp(prefix="warc_redir_")
-    try:
-        with open(os.path.join(root, "r.warc"), "wb") as f:
-            f.write(w.build_warc_bytes(recs))
-        pages = w.read_warc(spark.read.format("binaryFile").load(root))
-        ed = rd.redirect_edges_from_warc(pages)
-        assert {(r.src_url, r.dst_url) for r in ed.collect()} == {
-            ("http://a.org/old", "http://a.org/mid"),
-            ("http://a.org/mid", "http://a.org/new"),
-        }
-        got = {r.src_url: r for r in rd.resolve_redirects(ed).collect()}
-        assert got["http://a.org/old"].final_url == "http://a.org/new"
-        assert got["http://a.org/old"].n_hops == 2
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_empty_edges(spark):

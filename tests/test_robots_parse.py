@@ -1,63 +1,13 @@
-"""robots.txt parsing (functions/robots.py) + REP precedence
-(politeness.robots_deny_col): the classic cases, then a full
-synth-text → parse → typed-rows round trip."""
+"""REP precedence of ``politeness.robots_deny_col`` over parsed rule
+rows: longest match wins, Allow wins a length tie, RFC 9309 wildcards
+and the trailing ``$`` anchor."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from hiispider_spark.functions.canon import path_col
-from hiispider_spark.functions.robots import parse_robots_text, robots_rows
 from hiispider_spark.operators.politeness import robots_deny_col
-
-BODY = """
-# comments everywhere            # and more
-User-agent: googlebot
-Disallow: /google-only
-
-User-Agent: spider
-User-agent: otherbot
-Disallow: /private
-Allow: /private/ok
-Crawl-Delay: 2.5
-
-User-agent: *
-Disallow: /all
-Disallow:
-"""
-
-
-def test_group_selection_exact_beats_star():
-    rules, delay = parse_robots_text(BODY, agent="spider")
-    assert rules == [(False, "/private"), (True, "/private/ok")]
-    assert delay == 2.5
-    # unknown agent falls back to the * group; empty Disallow dropped
-    rules, delay = parse_robots_text(BODY, agent="nobody")
-    assert rules == [(False, "/all")]
-    assert delay is None
-
-
-def test_case_crlf_comments_tolerated():
-    body = "USER-AGENT: *\r\nDISALLOW: /x # trailing\r\ncrawl-delay: 3\r\n"
-    rules, delay = parse_robots_text(body)
-    assert rules == [(False, "/x")] and delay == 3.0
-
-
-def test_merged_same_specificity_groups():
-    body = (
-        "User-agent: *\nDisallow: /a\n\n"
-        "User-agent: *\nDisallow: /b\nCrawl-delay: 7\n"
-    )
-    rules, delay = parse_robots_text(body)
-    assert rules == [(False, "/a"), (False, "/b")] and delay == 7.0
-
-
-def test_garbage_tolerated():
-    assert parse_robots_text("") == ([], None)
-    assert parse_robots_text("not a directive\n\x00\xff") == ([], None)
-    body = "User-agent: *\nCrawl-delay: fast\nDisallow: /p\n"
-    assert parse_robots_text(body) == ([(False, "/p")], None)
 
 
 @pytest.mark.parametrize(
@@ -103,104 +53,3 @@ def test_deny_precedence(spark, rules, path, denied):
         robots_deny_col(F.col("rules"), F.col("path")).alias("d")
     ).first()["d"]
     assert got == denied
-
-
-def test_synth_roundtrip(spark):
-    """Raw synth robots bodies parse back to exactly synth_robots'
-    typed rows (rules in file order, crawl_delay preserved)."""
-    from hiispider_spark.sources.synth import (
-        SynthConfig,
-        synth_robots,
-        synth_robots_text,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    cfg = SynthConfig(n_pages=400, n_docs=500)
-    want = {
-        r.host: (tuple((x["allow"], x["prefix"]) for x in r.rules), r.crawl_delay)
-        for r in synth_robots(spark, sf, cfg).collect()
-    }
-    got = {
-        r.host: (tuple((x["allow"], x["prefix"]) for x in r.rules), r.crawl_delay)
-        for r in robots_rows(
-            synth_robots_text(spark, sf, cfg), agent="spider"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_parsed_rules_flow_through_enforcement(spark):
-    """End to end: raw bytes → parser UDF → robots_deny_col."""
-    raw = spark.createDataFrame(
-        [("h.example", b"User-agent: *\nDisallow: /p\nAllow: /p/ok\n")],
-        "host string, body binary",
-    )
-    robots = robots_rows(raw)
-    urls = spark.createDataFrame(
-        [
-            ("h.example", "http://h.example/p/ok/page"),
-            ("h.example", "http://h.example/p/bad"),
-            ("h.example", "http://h.example/q"),
-        ],
-        "host string, url string",
-    )
-    joined = urls.join(robots, "host")
-    out = {
-        r.url: r.d
-        for r in joined.select(
-            "url",
-            robots_deny_col(F.col("rules"), path_col(F.col("url"))).alias("d"),
-        ).collect()
-    }
-    assert out == {
-        "http://h.example/p/ok/page": False,
-        "http://h.example/p/bad": True,
-        "http://h.example/q": False,
-    }
-
-
-def test_sitemap_directive_extraction(spark):
-    """Sitemap: lines extract regardless of UA groups, case, CRLF."""
-    from hiispider_spark.functions.robots import sitemap_urls
-
-    body = (
-        b"# header comment\r\n"
-        b"Sitemap: http://a.org/sitemap.xml\r\n"
-        b"User-agent: *\nDisallow: /private\n"
-        b"SITEMAP:http://a.org/sm/news.xml.gz\n"
-        b"user-agent: spider\nAllow: /\n"
-    )
-    docs = spark.createDataFrame([("a.org", body)], "host string, body binary")
-    got = {r.sitemap_url for r in sitemap_urls(docs).collect()}
-    assert got == {
-        "http://a.org/sitemap.xml",
-        "http://a.org/sm/news.xml.gz",
-    }
-
-
-def test_robots_to_sitemap_to_seeds_discovery(spark):
-    """Full discovery chain: robots body → Sitemap directive → sitemap
-    doc → frontier seeds."""
-    from hiispider_spark.functions.robots import sitemap_urls
-    from hiispider_spark.sources import sitemap as sm
-
-    robots = spark.createDataFrame(
-        [("a.org", b"Sitemap: http://a.org/sm.xml\nUser-agent: *\nAllow: /\n")],
-        "host string, body binary",
-    )
-    sm_docs = spark.createDataFrame(
-        [(
-            "http://a.org/sm.xml",
-            b"<urlset><url><loc>http://a.org/p/1</loc>"
-            b"<priority>0.9</priority></url></urlset>",
-        )],
-        "url string, body binary",
-    )
-    refs = sitemap_urls(robots).select(
-        F.col("sitemap_url").alias("url")
-    )
-    referenced = sm_docs.join(refs, "url", "left_semi")
-    seeds = sm.sitemap_seeds(sm.parse_sitemaps(referenced))
-    assert [(r.url, r.priority) for r in seeds.collect()] == [
-        ("http://a.org/p/1", 0.9)
-    ]

@@ -1,9 +1,6 @@
 """Sitemap ingestion (sources/sitemap.py)."""
 
-import gzip
 from datetime import datetime
-
-from pyspark.sql import functions as F
 
 from hiispider_spark.sources import sitemap as sm
 
@@ -19,12 +16,6 @@ URLSET = b"""<?xml version="1.0" encoding="UTF-8"?>
   <url><changefreq>hourly</changefreq></url>
   <url><loc>http://a.example.org/p/3</loc><priority>bogus</priority></url>
 </urlset>"""
-
-INDEX = b"""<?xml version="1.0"?>
-<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-  <sitemap><loc>http://a.example.org/sm/leaf1.xml</loc></sitemap>
-  <sitemap><loc>http://a.example.org/sm/leaf2.xml</loc></sitemap>
-</sitemapindex>"""
 
 
 def _docs(spark, rows):
@@ -49,69 +40,11 @@ def test_parse_urlset_fields(spark):
     assert rows["http://a.example.org/p/3"].priority == 0.5  # bogus → default
 
 
-def test_index_expansion_one_level(spark):
-    leaf1 = b"<urlset><url><loc>http://a.example.org/x</loc></url></urlset>"
-    leaf2 = b"<urlset><url><loc>http://a.example.org/y</loc></url></urlset>"
-    orphan = b"<urlset><url><loc>http://a.example.org/z</loc></url></urlset>"
-    docs = _docs(
-        spark,
-        [
-            ("http://a.example.org/sitemap.xml", INDEX),
-            ("http://a.example.org/sm/leaf1.xml", leaf1),
-            ("http://a.example.org/sm/leaf2.xml", leaf2),
-            ("http://a.example.org/sm/orphan.xml", orphan),
-        ],
-    )
-    idx = sm.parse_sitemap_index(docs)
-    assert {r.child_url for r in idx.collect()} == {
-        "http://a.example.org/sm/leaf1.xml",
-        "http://a.example.org/sm/leaf2.xml",
-    }
-    leaves = sm.expand_sitemap_index(docs)
-    got = {r.url for r in sm.parse_sitemaps(leaves).collect()}
-    # leaf docs (referenced or standalone) parse; the index body itself
-    # contributes no <url> entries
-    assert got == {
-        "http://a.example.org/x",
-        "http://a.example.org/y",
-        "http://a.example.org/z",
-    }
-
-
-def test_gunzip_passthrough_and_decompress(spark):
-    docs = _docs(
-        spark,
-        [
-            ("http://a.example.org/s.xml.gz", gzip.compress(URLSET)),
-            ("http://a.example.org/s.xml", URLSET),
-        ],
-    )
-    out = sm.parse_sitemaps(sm.gunzip_bodies(docs))
-    assert out.count() == 6  # 3 entries from each copy
-
-
 def test_interval_hint_and_seeds(spark):
+    """changefreq maps to the interval hint that seeds recrawl.py's
+    adaptive estimator; an absent changefreq gives no hint."""
     docs = _docs(spark, [("http://a.example.org/sitemap.xml", URLSET)])
     hinted = sm.with_interval_hint(sm.parse_sitemaps(docs))
     hints = {r.url: r.interval_hint_s for r in hinted.collect()}
     assert hints["http://a.example.org/p/1?x=1&y=2"] == 86400.0
     assert hints["http://a.example.org/p/2"] is None
-    seeds = sm.sitemap_seeds(
-        hinted.unionByName(hinted)  # duplicate locs collapse, max priority
-    )
-    rows = {r.url: r.priority for r in seeds.collect()}
-    assert len(rows) == 3 and rows["http://a.example.org/p/1?x=1&y=2"] == 0.8
-
-
-def test_seeds_bootstrap_frontier(spark, tmp_path):
-    """Sitemap seeds feed bootstrap() directly — discovery channel to
-    frontier end-to-end."""
-    from hiispider_spark.plans.epoch import EpochConfig, bootstrap
-    from hiispider_spark.sources.catalog import IcebergLike
-
-    docs = _docs(spark, [("http://a.example.org/sitemap.xml", URLSET)])
-    seeds = sm.sitemap_seeds(sm.parse_sitemaps(docs))
-    cat = IcebergLike(spark, str(tmp_path / "cat"))
-    cfg = EpochConfig(k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17)
-    bootstrap(spark, cat, seeds, cfg)
-    assert cat.read("frontier").count() == 3

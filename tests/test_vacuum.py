@@ -102,10 +102,10 @@ def test_vacuum_keeps_staged_uncommitted(spark, tmp_path):
     assert cat.vacuum() == ["t1/v000001"]
 
 
-def test_epoch_vacuum_reclaims_after_compaction(spark, tmp_path):
-    """Driving epochs past the compaction bound with the default
-    vacuum_after_compact reclaims every superseded frontier file; the
-    catalog stays resumable and byte-identical to a no-vacuum twin."""
+def test_epoch_vacuum_reclaims_after_compaction(spark, tmp_path, monkeypatch):
+    """Driving epochs past the compaction bound reclaims every
+    superseded frontier file; the catalog stays resumable and
+    byte-identical to a twin whose vacuum is patched to a no-op."""
     from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epochs
     from hiispider_spark.sources.synth import (
         SynthConfig,
@@ -119,19 +119,21 @@ def test_epoch_vacuum_reclaims_after_compaction(spark, tmp_path):
     pages = synth_pages(spark, sf, tiny).persist()
     robots = synth_robots(spark, sf, tiny)
     seeds = synth_seeds(spark, sf, tiny)
+    cfg = EpochConfig(
+        k_per_partition=4,
+        n_partitions=4,
+        bloom_m_bits=1 << 17,
+        compact_every=2,
+        boot_stagger_s=0,
+    )
     outs = {}
-    for tag, vac in (("vac", True), ("novac", False)):
-        cfg = EpochConfig(
-            k_per_partition=4,
-            n_partitions=4,
-            bloom_m_bits=1 << 17,
-            compact_every=2,
-            vacuum_after_compact=vac,
-            boot_stagger_s=0,
-        )
-        cat = IcebergLike(spark, str(tmp_path / tag))
-        bootstrap(spark, cat, seeds, cfg)
-        run_epochs(spark, cat, pages, robots, 3, cfg)
+    for tag in ("vac", "novac"):
+        with monkeypatch.context() as m:
+            if tag == "novac":
+                m.setattr(IcebergLike, "vacuum", lambda self: [])
+            cat = IcebergLike(spark, str(tmp_path / tag))
+            bootstrap(spark, cat, seeds, cfg)
+            run_epochs(spark, cat, pages, robots, 3, cfg)
         outs[tag] = cat
     va, nv = outs["vac"], outs["novac"]
     for tbl in ("frontier", "extracted", "page_cache"):
