@@ -9,14 +9,15 @@ deterministically from the driver's ``lineitem``/``documents`` views by
 by ``oracle_ctes()`` — so crawl operators get real value-level oracles.
 
 Non-SQL-expressible ops (SipHash identity, bloom bytes, the xxhash64
-fast paths of MinHash/SimHash banding, IVF ANN, multimodal
-featurization, the stateful epoch loop) appear in ``queries()`` without
-an oracle entry → the driver records rows-only checks; their exact
-semantics are covered by `python -m pytest -x -q` instead
-(tests/golden/). Each xxhash64 LSH family also ships an engine-portable
-twin (``dedup_minhash_portable``, ``dedup_simhash_portable``) whose
-full pipeline IS value-oracle-checked, and the hyperplane LSH + BPE
-counting queries carry value oracles directly.
+SimHash bits, IVF ANN, multimodal featurization, the stateful epoch
+loop) appear in ``queries()`` without an oracle entry → they get
+rows-only checks; their exact semantics are covered by
+`python -m pytest -x -q` instead (tests/golden/). MinHash+LSH has one
+implementation over a hash family DuckDB mirrors, value-oracle-checked
+at 16 hashes / 4 bands (``dedup_minhash_portable``); the xxhash64
+SimHash ships an engine-portable twin (``dedup_simhash_portable``)
+whose full pipeline IS value-oracle-checked, and the hyperplane LSH +
+BPE counting queries carry value oracles directly.
 """
 
 from __future__ import annotations
@@ -476,18 +477,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dedup_ngram_jaccard"] = q_dedup_ngram_jaccard
 
-    def q_dedup_minhash_lsh(spark, sf):  # no SQL oracle (xxhash64 banding)
+    def q_dedup_minhash_lsh(spark, sf):  # oracle-checked at (16, 4) below
         docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
         return dd.minhash_lsh_pairs(docs, "doc_id", "text")
 
     q["dedup_minhash_lsh"] = q_dedup_minhash_lsh
 
     def q_dedup_minhash_portable(spark, sf):
-        # portable polynomial hash family → DuckDB mirrors the FULL
-        # MinHash+LSH pipeline value-for-value (the xxhash64 variant
-        # above stays the fast JVM path, graded rows-only)
+        # the same MinHash at 16 hashes / 4 bands: DuckDB mirrors the
+        # full MinHash+LSH pipeline at this shape value for value
         docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
-        return dd.minhash_lsh_pairs_portable(docs, "doc_id", "text")
+        return dd.minhash_lsh_pairs(docs, "doc_id", "text", n_hashes=16, bands=4)
 
     q["dedup_minhash_portable"] = q_dedup_minhash_portable
 
@@ -1402,7 +1402,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return a.unionByName(b)
 
-    def q_dedup_lsh_fast(spark, sf):  # rows-only (xxhash64 fast paths)
+    def q_dedup_lsh_fast(spark, sf):  # rows-only (xxhash64 SimHash half)
         a = q["dedup_minhash_lsh"](spark, sf).select(
             F.lit("minhash").alias("variant"), "doc_a", "doc_b",
             F.col("n_bands_hit").cast("double").alias("score"),
@@ -1770,8 +1770,9 @@ JOIN sizes sa ON sa.doc_id = i.doc_a
 JOIN sizes sb ON sb.doc_id = i.doc_b
 WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_grams + sb.n_grams - i.n_inter) >= 0.08"""
 
-    # portable MinHash+LSH twin: coefficients/banding generated from
-    # the SAME module constants the Spark exprs use
+    # portable MinHash+LSH twin: coefficients, banding and shingle
+    # width generated from the SAME module constants the numpy UDF uses
+    _K = dd.SHINGLE_K
     _P = dd.MINHASH_P
     _coeffs = dd.minhash_coeffs(16)
     _mh_exprs = ",\n    ".join(
@@ -1796,8 +1797,8 @@ WITH base AS (
 ),
 sh AS (
   SELECT doc_id,
-    list_distinct([substr(t, i+1, 5)
-                   FOR i IN range(greatest(length(t) - 5, 0) + 1)]) AS shs
+    list_distinct([substr(t, i+1, {_K})
+                   FOR i IN range(greatest(length(t) - {_K}, 0) + 1)]) AS shs
   FROM base
 ),
 fp AS (

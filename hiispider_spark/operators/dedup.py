@@ -10,9 +10,9 @@ corpus needs content-level dedup before training. Four tiers, each a
                   as the verify stage after LSH)
 - MinHash+LSH:  shingles → per-seed min-hash signature → banded
                 bucket join → candidate pairs (sub-quadratic; the
-                scale path); signatures are pure Column expressions
-                (xxhash64 per seed + array_min) — no UDF, no
-                per-row Python, one shuffle for the band join
+                scale path); one Python UDF computes a doc's band
+                hashes in numpy over a hash family DuckDB mirrors
+                value for value, one shuffle for the band join
 - SimHash:      64-bit sign-sum fingerprint; near-dups differ in few
                 bits (hamming ≤ t)
 
@@ -25,9 +25,12 @@ bucket-collision pairs.
 from __future__ import annotations
 
 import logging
+from functools import cache
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 logger = logging.getLogger(__name__)
 
@@ -135,40 +138,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingles_col(text: Column, k: int = 5) -> Column:
-    """Character k-shingles (distinct) of the normalized text.
-
-    Indices run 0..len-k inclusive so the final shingle is kept; texts
-    shorter than k yield exactly one (whole-text) shingle.
-    """
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(text) - k, F.lit(0))),
-            lambda i: text.substr(i + 1, F.lit(k)),
-        )
-    )
-
-
-def _stack_bands(banded: DataFrame, bands: int, extra: list[str] | None = None
-                 ) -> DataFrame:
-    """(doc_id, band_0..band_{B-1}[, extra]) → one row per (doc, band):
-    (doc_id[, extra], band_idx, bh)."""
-    return banded.select(
-        "doc_id",
-        *(extra or []),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"), F.col(f"band_{b}").alias("bh")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", *(extra or []), F.col("e.band_idx"), F.col("e.bh"))
-
-
 def _cap_buckets(
     stacked: DataFrame, bucket_cap: int, order_col: str = "doc_id"
 ) -> DataFrame:
@@ -219,8 +188,8 @@ def _log_overflow(stacked: DataFrame, bucket_cap: int, what: str) -> None:
     )
     if rows["n_buckets"]:
         logger.warning(
-            "%s: bucket_cap=%d dropped %d doc-band rows across %d hot "
-            "buckets (largest bucket: %d docs) — candidate recall is "
+            "%s: bucket_cap=%d dropped %d band rows across %d hot "
+            "buckets (largest bucket: %d members) — candidate recall is "
             "reduced for those buckets' members",
             what, bucket_cap, rows["n_dropped"], rows["n_buckets"],
             rows["max_bucket"],
@@ -247,68 +216,19 @@ def _banded_pairs(stacked: DataFrame, bucket_cap: int | None) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 5,
-    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    log_dropped: bool = False,
-) -> DataFrame:
-    """MinHash + banded LSH candidate pairs (doc_a < doc_b, n_bands_hit).
-
-    rows/band = n_hashes // bands; two docs collide if any band's
-    signature slice matches exactly. Candidates should flow into
-    :func:`ngram_jaccard_pairs` (or signature similarity) to verify.
-
-    ``bucket_cap`` bounds the per-bucket self-join blowup on boilerplate
-    corpora (see :data:`DEFAULT_BUCKET_CAP`); ``log_dropped=True`` pays
-    one extra aggregation job to WARN what the cap discarded.
-    """
-    rows_per_band = n_hashes // bands
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_col(normalized_text(F.col(text_col)), shingle_k).alias("sh"),
-    )
-    # single-pass fold (see simhash_col): one traversal carrying all
-    # n_hashes running minima. xxhash64(s, i) with the fold's int index
-    # column hashes the same (string, int32) pair as the old
-    # xxhash64(s, lit(i)) — identical signatures.
-    mins = F.aggregate(
-        F.col("sh"),
-        F.array_repeat(F.lit((1 << 63) - 1).cast("long"), n_hashes),
-        lambda acc, s: F.transform(
-            acc, lambda mn, i: F.least(mn, F.xxhash64(s, i))
-        ),
-    )
-    sig = base.select("doc_id", mins.alias("_mins")).select(
-        "doc_id",
-        *[F.get("_mins", i).alias(f"mh_{i}") for i in range(n_hashes)],
-    )
-    band_cols = [
-        F.xxhash64(
-            *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
-    stacked = _stack_bands(sig.select("doc_id", *band_cols), bands)
-    if log_dropped and bucket_cap is not None:
-        _log_overflow(stacked, bucket_cap, "minhash_lsh_pairs")
-    return _banded_pairs(stacked, bucket_cap)
-
-
-# ---- portable-hash MinHash (engine-portable → real value oracle) ----
-# xxhash64 signatures (above) are the fast JVM path but DuckDB cannot
-# mirror them, so that query is graded rows-only. This variant swaps
-# the hash family for polynomial arithmetic both engines compute
-# identically — (a_i·fp(shingle) + b_i) mod p over a char-rolling
-# fp — turning MinHash+LSH into a full value-checked oracle query.
-# Same banding topology, same shuffle shape; ~2-4× the per-row compute
-# of xxhash64 (still pure Column exprs, WholeStageCodegen).
+# ---- MinHash + LSH over a portable hash family ----
+# Every hash is integer arithmetic mod a prime that numpy and DuckDB
+# compute identically, so the DuckDB twin of the pipeline (the
+# ``dedup_minhash_portable`` SQL of ``oracle_sql()``) checks it value
+# for value:
+#   fp(shingle) = (acc·31 + codepoint) mod p over its characters, acc₀ = 7
+#   mh_i        = min over the doc's shingles of (a_i·fp + b_i) mod p
+#   band_b      = the same rolling polynomial over band b's mh values
+# Every intermediate is below p² < 2⁶³, so int64 numpy never wraps.
 
 MINHASH_P = 1_000_000_007
+#: character shingle width of the MinHash signature
+SHINGLE_K = 5
 _SM = (1 << 64) - 1
 
 
@@ -321,7 +241,7 @@ def _mh_splitmix(x: int) -> int:
 
 def minhash_coeffs(n_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs, a_i ∈ [1, p-1], b_i ∈ [0, p-1] —
-    shared verbatim by the Spark exprs and the DuckDB oracle SQL."""
+    shared verbatim by the numpy signature and the DuckDB oracle SQL."""
     return [
         (
             (_mh_splitmix(2 * i) % (MINHASH_P - 1)) + 1,
@@ -331,78 +251,78 @@ def minhash_coeffs(n_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def char_fp_col(s: Column) -> Column:
-    """Engine-portable polynomial hash of a string's characters:
-    acc = (acc·31 + codepoint) mod p, acc₀ = 7. Every intermediate
-    stays within int64. Empty string → 7 (the seed), matching the SQL
-    twin's empty list_reduce prepend."""
-    codes = F.when(
-        F.length(s) >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.length(s)),
-            lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"),
+@cache
+def _band_hashes_udf(n_hashes: int, bands: int):
+    """The Python UDF text → its ``bands`` LSH band hashes, one per
+    (n_hashes, bands) shape. Hashes past the last whole band never
+    reach a band, so they are not computed.
+
+    A plain UDF, not a pandas_udf, and its body a closure: cloudpickle
+    ships a closure by value, so a worker imports numpy only. A
+    pandas_udf worker imports pandas, and one that unpickles a
+    module-level function imports this module and pandas with it;
+    either way each of the stage's Python workers grew from 41 to 77 MB
+    PSS (1 500 docs, 4 workers on a 4-core host), at the same speed."""
+    coeffs = np.array(minhash_coeffs(bands * (n_hashes // bands)), np.int64)
+    a, b = coeffs[:, :1], coeffs[:, 1:]
+
+    def band_hashes(text: str | None) -> list[int]:
+        """The text's shingles are its character k-grams at offsets
+        0..len-k; a text shorter than k is one whole-text shingle, and
+        null or "" the empty one (fp 7). Each pass of the loop rolls one character
+        into every shingle's fp at once; the (n_hashes, n_shingles)
+        broadcast applies every permutation."""
+        cp = np.frombuffer((text or "").encode("utf-32-le"), dtype=np.uint32)
+        w = min(len(cp), SHINGLE_K)
+        n = len(cp) - w + 1
+        fp = np.full(n, 7, dtype=np.int64)
+        for j in range(w):
+            fp = (fp * 31 + cp[j : j + n]) % MINHASH_P
+        sig = ((a * fp + b) % MINHASH_P).min(axis=1)
+        acc = np.full(bands, 7, dtype=np.int64)
+        for row in sig.reshape(bands, -1).T:
+            acc = (acc * 31 + row) % MINHASH_P
+        return acc.tolist()
+
+    return F.udf(band_hashes, T.ArrayType(T.LongType()), useArrow=False)
+
+
+def _minhash_bands(docs: DataFrame, id_col: str, text_col: str,
+                   n_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band_idx, bh): one row per document and LSH band."""
+    udf = _band_hashes_udf(n_hashes, bands)
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(udf(normalized_text(F.col(text_col)))).alias(
+            "band_idx", "bh"
         ),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.aggregate(
-        codes,
-        F.lit(7).cast("long"),
-        lambda acc, c: (acc * 31 + c) % MINHASH_P,
     )
 
 
-def minhash_lsh_pairs_portable(
+def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 5,
+    n_hashes: int = 32,
+    bands: int = 8,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     log_dropped: bool = False,
 ) -> DataFrame:
-    """MinHash + banded LSH with the portable hash family — identical
-    output computable by the DuckDB oracle. Same (doc_a, doc_b,
-    n_bands_hit) contract and hot-bucket cap as
-    :func:`minhash_lsh_pairs`."""
-    rows_per_band = n_hashes // bands
-    coeffs = minhash_coeffs(n_hashes)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_col(normalized_text(F.col(text_col)), shingle_k).alias("sh"),
-    )
-    fps = base.select(
-        "doc_id", F.transform("sh", char_fp_col).alias("fps")
-    )
-    # single-pass fold (see simhash_col): one aggregate carrying all
-    # n_hashes running minima instead of n_hashes array traversals;
-    # identical values — min over the same (a_i·fp + b_i) mod p set,
-    # p as the fold identity (every perm value is < p)
-    av = F.array(*[F.lit(a).cast("long") for a, _ in coeffs])
-    bv = F.array(*[F.lit(b).cast("long") for _, b in coeffs])
-    mins = F.aggregate(
-        F.col("fps"),
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), n_hashes),
-        lambda acc, h: F.transform(
-            acc,
-            lambda mn, i: F.least(mn, (F.get(av, i) * h + F.get(bv, i)) % MINHASH_P),
-        ),
-    )
-    # materialize the fold ONCE as a named column before fanning out to
-    # n_hashes extractions — CollapseProject keeps non-cheap aliases in
-    # their own project, so the aggregate is never duplicated per column
-    sig = fps.select("doc_id", mins.alias("_mins")).select(
-        "doc_id",
-        *[F.get("_mins", i).alias(f"mh_{i}") for i in range(n_hashes)],
-    )
-    band_cols = []
-    for b in range(bands):
-        acc = F.lit(7).cast("long")
-        for r in range(rows_per_band):
-            acc = (acc * 31 + F.col(f"mh_{b * rows_per_band + r}")) % MINHASH_P
-        band_cols.append(acc.alias(f"band_{b}"))
-    stacked = _stack_bands(sig.select("doc_id", *band_cols), bands)
+    """MinHash + banded LSH candidate pairs (doc_a < doc_b, n_bands_hit).
+
+    rows/band = n_hashes // bands; two docs collide if any band's
+    signature slice matches exactly. Candidates should flow into
+    :func:`ngram_jaccard_pairs` (or signature similarity) to verify.
+    Signatures use the portable family above, computed in numpy by one
+    Python UDF.
+
+    ``bucket_cap`` bounds the per-bucket self-join blowup on boilerplate
+    corpora (see :data:`DEFAULT_BUCKET_CAP`); ``log_dropped=True`` pays
+    one extra aggregation job to WARN what the cap discarded.
+    """
+    stacked = _minhash_bands(docs, id_col, text_col, n_hashes, bands)
     if log_dropped and bucket_cap is not None:
-        _log_overflow(stacked, bucket_cap, "minhash_lsh_pairs_portable")
+        _log_overflow(stacked, bucket_cap, "minhash_lsh_pairs")
     return _banded_pairs(stacked, bucket_cap)
 
 
@@ -531,7 +451,29 @@ def _blocked_hamming_pairs(
 # oracle-checked. 32 bits (not 64): the oracle reassembles sig as a sum
 # of 1<<b terms, which must stay inside BIGINT on both engines. The
 # per-bit sign-sum construction is standard SimHash (Charikar '02) with
-# an explicit hash family instead of "bits of one 64-bit hash".
+# an explicit hash family instead of "bits of one 64-bit hash". Both
+# families stay: this bit is weak — at 64 bits it puts the near-dup
+# pair of test_simhash_near_dup_small_hamming at hamming 14, where the
+# xxhash64 bits give 5.
+
+
+def char_fp_col(s: Column) -> Column:
+    """Engine-portable polynomial hash of a string's characters:
+    acc = (acc·31 + codepoint) mod p, acc₀ = 7. Every intermediate
+    stays within int64. Empty string → 7 (the seed), matching the SQL
+    twin's empty list_reduce prepend."""
+    codes = F.when(
+        F.length(s) >= 1,
+        F.transform(
+            F.sequence(F.lit(1), F.length(s)),
+            lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"),
+        ),
+    ).otherwise(F.array().cast("array<long>"))
+    return F.aggregate(
+        codes,
+        F.lit(7).cast("long"),
+        lambda acc, c: (acc * 31 + c) % MINHASH_P,
+    )
 
 
 def simhash_coeffs(n_bits: int) -> list[tuple[int, int]]:

@@ -37,10 +37,11 @@ def _decode_utf8(html: pd.Series) -> pd.Series:
 
 
 # --- plugin implementations -------------------------------------------------
-# Each comes in two layers: a decoded-text form (pd.Series[str] →
-# pd.Series[str], shared by the fused text+links UDF so html is decoded
-# ONCE per batch) and the bytes form (pd.Series[bytes] → pd.Series[str])
-# that standalone UDFs call — identical outputs by construction.
+# Each has a decoded-text form (pd.Series[str] → pd.Series[str]), which
+# the routed text+links UDF dispatches to so html is decoded ONCE per
+# batch. Plugins that also ship as standalone UDFs wrap it in a bytes
+# form (pd.Series[bytes] → pd.Series[str]) — identical outputs by
+# construction.
 def _text_impl_s(s: pd.Series) -> pd.Series:
     return s.str.replace(_TAG_RE, "", regex=True)
 
@@ -61,10 +62,6 @@ def _text_impl(html: pd.Series) -> pd.Series:
 
 def _title_impl(html: pd.Series) -> pd.Series:
     return _title_impl_s(_decode_utf8(html))
-
-
-def _anchor_impl(html: pd.Series) -> pd.Series:
-    return _anchor_impl_s(_decode_utf8(html))
 
 
 #: head-metadata fields: <meta name=...> and OpenGraph <meta
@@ -102,18 +99,11 @@ def _meta_impl(html: pd.Series) -> pd.Series:
     return _meta_impl_s(_decode_utf8(html))
 
 
-#: per-URL-routable text plugins (O-10): name -> vectorized impl. The
-#: Spark equivalent of BaseServer.functions — the dict ships inside the
-#: routed UDF's closure (task-broadcast), replacing the reference's
-#: Redis/memcached job-spec memoization with a broadcast registry.
-TEXT_PLUGIN_IMPLS = {
-    "text": _text_impl,
-    "title": _title_impl,
-    "anchor": _anchor_impl,
-    "meta": _meta_impl,
-}
-
-#: decoded-text twins of TEXT_PLUGIN_IMPLS (shared-decode dispatch)
+#: per-URL-routable text plugins (O-10): name -> vectorized impl over
+#: decoded text. The Spark equivalent of BaseServer.functions — the
+#: dict ships inside the routed UDF's closure (task-broadcast),
+#: replacing the reference's Redis/memcached job-spec memoization with
+#: a broadcast registry.
 _DECODED_PLUGIN_IMPLS = {
     "text": _text_impl_s,
     "title": _title_impl_s,
@@ -143,37 +133,6 @@ def title_extract_udf(html: pd.Series) -> pd.Series:
     return _title_impl(html)
 
 
-def _routed_impl(html: pd.Series, plugin: pd.Series) -> pd.Series:
-    """Per-URL plugin dispatch (O-10) in ONE pass over the data.
-
-    The reference resolves each job's ``"plugin/function"`` string to a
-    callable and invokes it per job [hs: hiispider/servers/base.py::
-    callExposedFunction †]. Here dispatch happens inside each Arrow
-    batch: rows are masked per plugin name and each impl runs vectorized
-    on its own subset — no per-row Python, no second scan per plugin
-    (a filter-and-union per registry entry would re-read the epoch
-    slice once per plugin). Unknown plugin names fall back to the
-    flagship text extractor rather than failing the batch (the
-    reference wraps unknown-function errors per job, not per worker).
-    """
-    out = pd.Series([None] * len(html), index=html.index, dtype=object)
-    routed = pd.Series([False] * len(html), index=html.index)
-    for name, impl in TEXT_PLUGIN_IMPLS.items():
-        mask = (plugin == name).to_numpy()
-        if mask.any():
-            out[mask] = impl(html[mask]).astype(object)
-            routed[mask] = True
-    rest = (~routed).to_numpy()
-    if rest.any():
-        out[rest] = TEXT_PLUGIN_IMPLS[DEFAULT_PLUGIN](html[rest]).astype(object)
-    return out
-
-
-@F.pandas_udf(T.StringType())
-def routed_extract_udf(html: pd.Series, plugin: pd.Series) -> pd.Series:
-    return _routed_impl(html, plugin)
-
-
 @F.pandas_udf(
     T.StructType(
         [
@@ -183,13 +142,18 @@ def routed_extract_udf(html: pd.Series, plugin: pd.Series) -> pd.Series:
     )
 )
 def routed_with_links_udf(html: pd.Series, plugin: pd.Series) -> pd.DataFrame:
-    """Routed plugin text + out-links in ONE Python evaluation.
+    """Per-URL plugin dispatch (O-10) plus out-links, in ONE pass.
 
-    ``run_extraction`` needs both per row; as two separate UDFs the
-    html bytes crossed the JVM→Python boundary twice and were UTF-8
-    decoded twice per batch (guide §4: the boundary cost is per column
-    crossing, and decode dominates these plugins). Same impls, same
-    per-field outputs — only the transfer and decode are shared.
+    The reference resolves each job's ``"plugin/function"`` string to a
+    callable and invokes it per job [hs: hiispider/servers/base.py::
+    callExposedFunction †]. Here dispatch happens inside each Arrow
+    batch: rows are masked per plugin name and each impl runs vectorized
+    on its own subset — no per-row Python, no second scan per plugin.
+    Unknown plugin names fall back to the flagship text extractor
+    rather than failing the batch (the reference wraps unknown-function
+    errors per job, not per worker). The html bytes cross the
+    JVM→Python boundary and are UTF-8 decoded once per batch for both
+    fields (guide §4: decode dominates these plugins).
     """
     decoded = _decode_utf8(html)
     out = pd.Series([None] * len(html), index=html.index, dtype=object)
@@ -223,7 +187,7 @@ def evaluate_boolean_col(c: Column) -> Column:
 
 
 #: plugin registry — the Spark equivalent of BaseServer.functions
-#: (standalone UDFs; per-URL routing goes through routed_extract_udf)
+#: (standalone UDFs; per-URL routing goes through routed_with_links_udf)
 @F.pandas_udf(T.StringType())
 def meta_extract_udf(html: pd.Series) -> pd.Series:
     """Head-metadata plugin (description/keywords/og:*) as JSON."""
@@ -270,9 +234,8 @@ def run_extraction(modified: DataFrame, epoch: int) -> DataFrame:
 
     text + links come from ONE fused Arrow UDF
     (:func:`routed_with_links_udf`): the html column crosses the Python
-    boundary once and is decoded once per batch instead of once per
-    plugin UDF (guide §4) — outputs byte-identical to the standalone
-    ``routed_extract_udf`` / ``links_extract_udf`` pair (same impls).
+    boundary once and is decoded once per batch (guide §4) — each field
+    byte-identical to the standalone plugin UDF it shares an impl with.
     """
     carry = [
         c for c in ("part_id", "content_sha256") if c in modified.columns

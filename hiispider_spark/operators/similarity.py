@@ -19,7 +19,6 @@ vec_id as the total tie-break, so results are stable across engines
 
 from __future__ import annotations
 
-import logging
 import math
 
 from pyspark.sql import Column, DataFrame, Window
@@ -27,10 +26,9 @@ from pyspark.sql import functions as F
 
 from hiispider_spark.operators.dedup import (
     DEFAULT_BUCKET_CAP,
-    band_bucket_overflow,
+    _cap_buckets,
+    _log_overflow,
 )
-
-logger = logging.getLogger(__name__)
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -228,49 +226,16 @@ def hyperplane_near_dup_pairs(
         sum(
             (F.col("bits")[b * rows_per_band + r] * (1 << r))
             for r in range(rows_per_band)
-        ).alias(f"band_{b}")
+        )
         for b in range(bands)
     ]
-    banded = sig.select("vec_id", "v", *band_vals)
-    stacked = banded.select(
-        "vec_id",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.col(f"band_{b}").alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("vec_id", "v", F.col("e.band_idx"), F.col("e.bh"))
+    stacked = sig.select(
+        "vec_id", "v", F.posexplode(F.array(*band_vals)).alias("band_idx", "bh")
+    )
     if bucket_cap is not None:
         if log_dropped:
-            ov = (
-                band_bucket_overflow(
-                    stacked.select("band_idx", "bh"), bucket_cap
-                )
-                .agg(
-                    F.count("*").alias("n_buckets"),
-                    F.sum("n_dropped").alias("n_dropped"),
-                )
-                .collect()[0]
-            )
-            if ov["n_buckets"]:
-                logger.warning(
-                    "hyperplane_near_dup_pairs: bucket_cap=%d dropped %d "
-                    "vec-band rows across %d hot buckets",
-                    bucket_cap, ov["n_dropped"], ov["n_buckets"],
-                )
-        w_cap = Window.partitionBy("band_idx", "bh").orderBy("vec_id")
-        stacked = (
-            stacked.withColumn("_rk", F.row_number().over(w_cap))
-            .filter(F.col("_rk") <= bucket_cap)
-            .drop("_rk")
-        )
+            _log_overflow(stacked, bucket_cap, "hyperplane_near_dup_pairs")
+        stacked = _cap_buckets(stacked, bucket_cap, order_col="vec_id")
     a, b_ = stacked.alias("a"), stacked.alias("b")
     cand = (
         a.join(

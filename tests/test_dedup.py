@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hiispider_spark.operators import dedup as dd
@@ -83,8 +84,10 @@ def test_pages_corpus_dup_structure(spark, tiny_pages):
 
 
 def test_minhash_portable_matches_python_reference(spark):
-    """The portable-hash MinHash+LSH (engine-portable oracle variant)
-    reproduces an independent pure-Python computation bit-for-bit."""
+    """MinHash+LSH over the portable hash family reproduces an
+    independent pure-Python computation bit-for-bit, edge texts
+    included: empty, null (hashes like ""), shorter than k, exactly k,
+    CJK and a character above U+FFFF."""
     import itertools
     from collections import Counter
 
@@ -94,18 +97,18 @@ def test_minhash_portable_matches_python_reference(spark):
         2: "zzzzzzzz",
         3: "ab",
         4: "abcdefgh",  # exact copy of 0 → must collide in every band
+        5: "",
+        6: None,
+        7: "abcde",
+        8: "漢字かな交じり文の例",
+        9: "a😀bcde😀fg",
+        10: "😀",
     }
     docs = spark.createDataFrame(
         sorted(texts.items()), "doc_id long, text string"
     )
-    got = {
-        (r.doc_a, r.doc_b): r.n_bands_hit
-        for r in dd.minhash_lsh_pairs_portable(
-            docs, "doc_id", "text", n_hashes=8, bands=2
-        ).collect()
-    }
 
-    def shingles(t, k=5):
+    def shingles(t, k=dd.SHINGLE_K):
         return list(dict.fromkeys(t[i : i + k] for i in range(max(len(t) - k, 0) + 1)))
 
     def fp(s):
@@ -114,11 +117,12 @@ def test_minhash_portable_matches_python_reference(spark):
             acc = (acc * 31 + ord(ch)) % dd.MINHASH_P
         return acc
 
-    coeffs = dd.minhash_coeffs(8)
-
-    def band_vals(t, bands=2):
-        fps = [fp(s) for s in shingles(t)]
-        sig = [min((a * x + b) % dd.MINHASH_P for x in fps) for a, b in coeffs]
+    def band_vals(t, n_hashes, bands):
+        fps = [fp(s) for s in shingles(t or "")]
+        sig = [
+            min((a * x + b) % dd.MINHASH_P for x in fps)
+            for a, b in dd.minhash_coeffs(n_hashes)
+        ]
         rpb = len(sig) // bands
         out = []
         for b in range(bands):
@@ -128,14 +132,22 @@ def test_minhash_portable_matches_python_reference(spark):
             out.append((b, acc))
         return out
 
-    bv = {d: band_vals(t) for d, t in texts.items()}
-    expected = Counter()
-    for a, b in itertools.combinations(sorted(texts), 2):
-        hits = sum(1 for x, y in zip(bv[a], bv[b]) if x == y)
-        if hits:
-            expected[(a, b)] = hits
-    assert got == dict(expected)
-    assert got[(0, 4)] == 2  # identical texts collide in every band
+    for n_hashes, bands in [(8, 2), (32, 8)]:
+        got = {
+            (r.doc_a, r.doc_b): r.n_bands_hit
+            for r in dd.minhash_lsh_pairs(
+                docs, "doc_id", "text", n_hashes=n_hashes, bands=bands
+            ).collect()
+        }
+        bv = {d: band_vals(t, n_hashes, bands) for d, t in texts.items()}
+        expected = Counter()
+        for a, b in itertools.combinations(sorted(texts), 2):
+            hits = sum(1 for x, y in zip(bv[a], bv[b]) if x == y)
+            if hits:
+                expected[(a, b)] = hits
+        assert got == dict(expected)
+        assert got[(0, 4)] == bands  # identical texts collide in every band
+        assert got[(5, 6)] == bands  # null hashes like ""
 
 
 # ---- hot-bucket cap (boilerplate blowup guard) -------------------------
@@ -146,46 +158,29 @@ def _boilerplate(spark, n, family="all work and no play makes a dull crawl "):
     return _docs(spark, [(i, f"{family * 3}#{i}") for i in range(n)])
 
 
-def test_bucket_cap_bounds_boilerplate_candidates(spark):
+@pytest.mark.parametrize("n_hashes,bands,cap", [(32, 8, 16), (16, 4, 8)])
+def test_bucket_cap_bounds_boilerplate_candidates(spark, n_hashes, bands, cap):
     """A planted boilerplate family lands in ONE bucket per band;
     uncapped the self-join mints O(n²) pairs, capped it is O(cap²) —
     with the kept set deterministic (lowest doc_ids)."""
     docs = _boilerplate(spark, 1000)
     capped = dd.minhash_lsh_pairs(
-        docs, "doc_id", "text", n_hashes=32, bands=8, bucket_cap=16
+        docs, "doc_id", "text", n_hashes=n_hashes, bands=bands, bucket_cap=cap
     ).collect()
-    # 16 kept docs → C(16,2) pairs, every pair hitting all 8 bands
-    assert len(capped) == 16 * 15 // 2
-    assert all(r.n_bands_hit == 8 for r in capped)
+    # cap kept docs → C(cap,2) pairs, every pair hitting every band
+    assert len(capped) == cap * (cap - 1) // 2
+    assert all(r.n_bands_hit == bands for r in capped)
     ids = {r.doc_a for r in capped} | {r.doc_b for r in capped}
-    assert ids == set(range(16))  # deterministic keep: lowest doc_ids
+    assert ids == set(range(cap))  # deterministic keep: lowest doc_ids
     # O(cap·n·bands) candidate bound, vs ~500k uncapped
-    assert len(capped) <= 16 * 1000 * 8
+    assert len(capped) <= cap * 1000 * bands
 
 
 def test_bucket_cap_overflow_is_observable(spark):
     """No silent caps: band_bucket_overflow reports exactly what the
     cap discards (8 bands × one hot bucket × (n - cap) docs)."""
     docs = _boilerplate(spark, 300)
-    sig = docs.select(
-        F.col("doc_id"),
-        dd.shingles_col(dd.normalized_text(F.col("text")), 5).alias("sh"),
-    ).select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(F.col("sh"), lambda s, i=i: F.xxhash64(s, F.lit(i)))
-            ).alias(f"mh_{i}")
-            for i in range(32)
-        ],
-    )
-    band_cols = [
-        F.xxhash64(*[F.col(f"mh_{b * 4 + r}") for r in range(4)]).alias(
-            f"band_{b}"
-        )
-        for b in range(8)
-    ]
-    stacked = dd._stack_bands(sig.select("doc_id", *band_cols), 8)
+    stacked = dd._minhash_bands(docs, "doc_id", "text", n_hashes=32, bands=8)
     ov = dd.band_bucket_overflow(stacked, bucket_cap=50).collect()
     assert len(ov) == 8  # one hot bucket per band
     assert all(r.n_docs == 300 and r.n_dropped == 250 for r in ov)
@@ -232,14 +227,3 @@ def test_bucket_cap_plan_uses_window_group_limit(spark):
     with redirect_stdout(buf):
         df.explain("formatted")
     assert "WindowGroupLimit" in buf.getvalue()
-
-
-def test_portable_bucket_cap_matches_fast_path_semantics(spark):
-    """The portable-hash variant caps identically (same planted family,
-    same C(cap,2) bound, all bands hit)."""
-    docs = _boilerplate(spark, 200)
-    rows = dd.minhash_lsh_pairs_portable(
-        docs, "doc_id", "text", n_hashes=16, bands=4, bucket_cap=8
-    ).collect()
-    assert len(rows) == 8 * 7 // 2
-    assert all(r.n_bands_hit == 4 for r in rows)

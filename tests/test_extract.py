@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from hiispider_spark.operators.extract import (
     evaluate_boolean_col,
     links_extract_udf,
-    routed_extract_udf,
+    routed_with_links_udf,
     run_extraction,
     text_extract_col,
     text_extract_udf,
@@ -81,7 +81,8 @@ def test_plugin_routing_per_url(spark, tiny_pages):
         F.col("text").alias("expected_text"),
     )
     got = slice_.withColumn(
-        "out", routed_extract_udf(F.col("html"), F.col("plugin"))
+        "out",
+        routed_with_links_udf(F.col("html"), F.col("plugin")).getField("text"),
     )
     anchors = got.filter(F.col("plugin") == "anchor")
     assert anchors.count() > 0
@@ -210,18 +211,16 @@ def test_meta_plugin_and_column_twin(spark):
 
 
 def test_meta_plugin_routes(spark):
-    """routed_extract_udf dispatches plugin='meta' rows to the meta
+    """routed_with_links_udf dispatches plugin='meta' rows to the meta
     impl in the same pass as text rows."""
     import json
-
-    from hiispider_spark.operators.extract import routed_extract_udf
 
     html = b'<html><head><meta name="description" content="d"></head><body>body text</body></html>'
     df = spark.createDataFrame(
         [(html, "meta"), (html, "text")], "html binary, plugin string"
     )
     out = [r.o for r in df.select(
-        routed_extract_udf("html", "plugin").alias("o")
+        routed_with_links_udf("html", "plugin").getField("text").alias("o")
     ).collect()]
     assert json.loads(out[0])["description"] == "d"
     assert "body text" in out[1] and "<" not in out[1]

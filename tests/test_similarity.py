@@ -216,16 +216,25 @@ def test_hyperplane_lsh_candidates_subquadratic(spark):
     assert n_cand < 0.10 * n * (n - 1) / 2
 
 
-def test_hyperplane_bucket_cap_bounds_identical_family(spark):
+def test_hyperplane_bucket_cap_bounds_identical_family(spark, caplog):
     """200 identical embeddings share every band value; the cap keeps
     the 8 lowest vec_ids per bucket → C(8,2) verified pairs (cos 1.0),
-    instead of ~20k uncapped candidates. Below the cap, capped output
-    is byte-identical to uncapped (oracle safety)."""
+    instead of ~20k uncapped candidates, and log_dropped WARNs what it
+    dropped. Below the cap, capped output is byte-identical to uncapped
+    (oracle safety)."""
+    import logging
+
     fam = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(200)]
     vecs = _vecs(spark, fam)
-    capped = sim.hyperplane_near_dup_pairs(
-        vecs, threshold=0.9, bucket_cap=8
-    ).collect()
+    with caplog.at_level(logging.WARNING, logger="hiispider_spark.operators.dedup"):
+        capped = sim.hyperplane_near_dup_pairs(
+            vecs, threshold=0.9, bucket_cap=8, log_dropped=True
+        ).collect()
+    # 8 bands x one hot bucket x (200 - 8) vectors past the cap
+    assert any(
+        m.startswith("hyperplane_near_dup_pairs: bucket_cap=8 dropped 1536 ")
+        for m in caplog.messages
+    )
     assert len(capped) == 8 * 7 // 2
     assert all(r.cos_sim == 1.0 for r in capped)
     ids = {r.vec_a for r in capped} | {r.vec_b for r in capped}
