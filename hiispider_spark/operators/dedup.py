@@ -10,7 +10,7 @@ corpus needs content-level dedup before training. Four tiers, each a
                   as the verify stage after LSH)
 - MinHash+LSH:  shingles → per-seed min-hash signature → banded
                 bucket join → candidate pairs (sub-quadratic; the
-                scale path); one Python UDF computes a doc's band
+                scale path); one Arrow UDF computes a batch's band
                 hashes in numpy over a hash family DuckDB mirrors
                 value for value, one shuffle for the band join
 - SimHash:      64-bit sign-sum fingerprint; near-dups differ in few
@@ -28,6 +28,7 @@ import logging
 from functools import cache
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -225,6 +226,9 @@ def _banded_pairs(stacked: DataFrame, bucket_cap: int | None) -> DataFrame:
 #   mh_i        = min over the doc's shingles of (a_i·fp + b_i) mod p
 #   band_b      = the same rolling polynomial over band b's mh values
 # Every intermediate is below p² < 2⁶³, so int64 numpy never wraps.
+# (a·x+b) mod p is 2-universal, not min-wise independent:
+# tools/minhash_recall.py checks its band-hit rate per Jaccard bin
+# against the S-curve 1-(1-J^r)^b.
 
 MINHASH_P = 1_000_000_007
 #: character shingle width of the MinHash signature
@@ -251,51 +255,75 @@ def minhash_coeffs(n_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
+#: shingles hashed per step of the signature loop: the (n_hashes,
+#: chunk) permutation matrix bounds a worker's scratch memory at
+#: n_hashes · chunk · 8 B per temporary whatever the document length
+MINHASH_CHUNK = 8192
+
+
 @cache
 def _band_hashes_udf(n_hashes: int, bands: int):
-    """The Python UDF text → its ``bands`` LSH band hashes, one per
-    (n_hashes, bands) shape. Hashes past the last whole band never
-    reach a band, so they are not computed.
-
-    A plain UDF, not a pandas_udf, and its body a closure: cloudpickle
-    ships a closure by value, so a worker imports numpy only. A
-    pandas_udf worker imports pandas, and one that unpickles a
-    module-level function imports this module and pandas with it;
-    either way each of the stage's Python workers grew from 41 to 77 MB
-    PSS (1 500 docs, 4 workers on a 4-core host), at the same speed."""
-    coeffs = np.array(minhash_coeffs(bands * (n_hashes // bands)), np.int64)
+    """The Arrow UDF texts → each text's ``bands`` band hashes, one per
+    (n_hashes, bands) shape. Its body is a closure, shipped by value so
+    that workers do not import this package, and it reads and builds
+    Arrow arrays from buffers: ``pa.array`` and ``fill_null`` import
+    pandas, about 25 MB more per Python worker."""
+    per_band = n_hashes // bands
+    coeffs = np.array(minhash_coeffs(bands * per_band), np.int64)
     a, b = coeffs[:, :1], coeffs[:, 1:]
 
-    def band_hashes(text: str | None) -> list[int]:
-        """The text's shingles are its character k-grams at offsets
-        0..len-k; a text shorter than k is one whole-text shingle, and
-        null or "" the empty one (fp 7). Each pass of the loop rolls one character
-        into every shingle's fp at once; the (n_hashes, n_shingles)
-        broadcast applies every permutation."""
-        cp = np.frombuffer((text or "").encode("utf-32-le"), dtype=np.uint32)
-        w = min(len(cp), SHINGLE_K)
-        n = len(cp) - w + 1
-        fp = np.full(n, 7, dtype=np.int64)
-        for j in range(w):
-            fp = (fp * 31 + cp[j : j + n]) % MINHASH_P
-        sig = ((a * fp + b) % MINHASH_P).min(axis=1)
-        acc = np.full(bands, 7, dtype=np.int64)
-        for row in sig.reshape(bands, -1).T:
-            acc = (acc * 31 + row) % MINHASH_P
-        return acc.tolist()
+    def band_hashes(texts: pa.Array) -> pa.Array:
+        # A text's shingles are its character k-grams at offsets 0..len-k;
+        # a text shorter than k is one whole-text shingle, "" the empty
+        # one (fp 7). Every shingle of the batch is one position of a flat
+        # index, hashed a chunk at a time; each chunk's per-text minima
+        # come from one segmented min (reduceat). texts holds no nulls.
+        n = len(texts)
+        _, off, data = texts.buffers()
+        off = np.frombuffer(off, np.int32)[texts.offset : texts.offset + n + 1]
+        u8 = np.frombuffer(data or b"", np.uint8)[off[0] : off[-1]]
+        # a UTF-8 byte that is not a continuation byte starts a code point
+        first = np.cumsum(np.r_[0, (u8 & 0xC0) != 0x80])
+        n_cp = first[off[1:] - off[0]] - first[off[:-1] - off[0]]
+        # K zero pads: a short text's unused offsets read pads, not past the end
+        text = u8.tobytes().decode("utf-8") + "\0" * SHINGLE_K
+        cp = np.frombuffer(text.encode("utf-32-le"), np.uint32).astype(np.int64)
+        width = np.minimum(n_cp, SHINGLE_K)
+        n_sh = n_cp - width + 1
+        cp_at, sh_at, total = np.cumsum(n_cp) - n_cp, np.cumsum(n_sh) - n_sh, n_sh.sum()
+        sig = np.full((len(a), n), MINHASH_P, np.int64)
+        for lo in range(0, total, MINHASH_CHUNK):
+            pos = np.arange(lo, min(lo + MINHASH_CHUNK, total))
+            row = np.searchsorted(sh_at, pos, side="right") - 1
+            start, fp = cp_at[row] + pos - sh_at[row], np.full(len(pos), 7)
+            for j in range(SHINGLE_K):
+                roll = (fp * 31 + cp[start + j]) % MINHASH_P
+                fp = np.where(j < width[row], roll, fp)
+            seg = np.flatnonzero(np.diff(row, prepend=-1))
+            mins = np.minimum.reduceat((a * fp + b) % MINHASH_P, seg, axis=1)
+            sig[:, row[seg]] = np.minimum(sig[:, row[seg]], mins)
+        acc = np.full((bands, n), 7, np.int64)
+        for r in range(per_band):
+            acc = (acc * 31 + sig[r::per_band]) % MINHASH_P
+        flat = pa.py_buffer(acc.T.copy())
+        offsets = pa.py_buffer(np.arange(0, bands * n + 1, bands, dtype=np.int32))
+        values = pa.Array.from_buffers(pa.int64(), bands * n, [None, flat])
+        return pa.Array.from_buffers(
+            pa.list_(pa.int64()), n, [None, offsets], children=[values]
+        )
 
-    return F.udf(band_hashes, T.ArrayType(T.LongType()), useArrow=False)
+    return F.arrow_udf(band_hashes, T.ArrayType(T.LongType()))
 
 
 def _minhash_bands(docs: DataFrame, id_col: str, text_col: str,
                    n_hashes: int, bands: int) -> DataFrame:
-    """(doc_id, band_idx, bh): one row per document and LSH band."""
-    udf = _band_hashes_udf(n_hashes, bands)
+    """(doc_id, band_idx, bh): one row per document and LSH band; a null
+    text hashes like ""."""
+    text = F.coalesce(normalized_text(F.col(text_col)), F.lit(""))
+    band_vals = _band_hashes_udf(n_hashes, bands)(text)
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(udf(normalized_text(F.col(text_col)))).alias(
-            "band_idx", "bh"
-        ),
+        F.posexplode(band_vals).alias("band_idx", "bh"),
     )
 
 
@@ -314,7 +342,7 @@ def minhash_lsh_pairs(
     signature slice matches exactly. Candidates should flow into
     :func:`ngram_jaccard_pairs` (or signature similarity) to verify.
     Signatures use the portable family above, computed in numpy by one
-    Python UDF.
+    Arrow UDF a batch at a time.
 
     ``bucket_cap`` bounds the per-bucket self-join blowup on boilerplate
     corpora (see :data:`DEFAULT_BUCKET_CAP`); ``log_dropped=True`` pays
@@ -394,30 +422,15 @@ def _blocked_hamming_pairs(
     via the pigeonhole block equi-join (see simhash_near_dups)."""
     n_blocks = min(max(max_hamming + 1, 2), 16)
     base, rem = divmod(n_bits, n_blocks)
-    starts, widths = [], []
-    pos = 0
-    for i in range(n_blocks):
-        w = base + (1 if i < rem else 0)
-        starts.append(pos)
-        widths.append(w)
-        pos += w
+    widths = [base + (i < rem) for i in range(n_blocks)]
+    starts = [sum(widths[:i]) for i in range(n_blocks)]
+    blk = [
+        F.shiftright("sig", at).bitwiseAND(F.lit((1 << w) - 1))
+        for at, w in zip(starts, widths)
+    ]
     blocks = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk_idx"),
-                        F.shiftright("sig", starts[i])
-                        .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                        .alias("blk"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", "sig", F.col("e.blk_idx"), F.col("e.blk"))
+        "doc_id", "sig", F.posexplode(F.array(*blk)).alias("blk_idx", "blk")
+    )
     a, b = blocks.alias("a"), blocks.alias("b")
     cand = (
         a.join(

@@ -83,14 +83,50 @@ def test_pages_corpus_dup_structure(spark, tiny_pages):
     assert groups.agg(F.max("n_copies")).first()[0] == 1
 
 
+def _ref_shingles(t, k=dd.SHINGLE_K):
+    return list(dict.fromkeys(t[i : i + k] for i in range(max(len(t) - k, 0) + 1)))
+
+
+def _ref_fp(s):
+    acc = 7
+    for ch in s:
+        acc = (acc * 31 + ord(ch)) % dd.MINHASH_P
+    return acc
+
+
+def _ref_band_vals(t, n_hashes, bands):
+    """Pure-Python band hashes of the portable family: [(band, hash)]."""
+    fps = [_ref_fp(s) for s in _ref_shingles(t or "")]
+    sig = [
+        min((a * x + b) % dd.MINHASH_P for x in fps)
+        for a, b in dd.minhash_coeffs(n_hashes)
+    ]
+    rpb = len(sig) // bands
+    out = []
+    for b in range(bands):
+        acc = 7
+        for r in range(rpb):
+            acc = (acc * 31 + sig[b * rpb + r]) % dd.MINHASH_P
+        out.append((b, acc))
+    return out
+
+
 def test_minhash_portable_matches_python_reference(spark):
     """MinHash+LSH over the portable hash family reproduces an
-    independent pure-Python computation bit-for-bit, edge texts
-    included: empty, null (hashes like ""), shorter than k, exactly k,
-    CJK and a character above U+FFFF."""
+    independent pure-Python computation bit-for-bit, pairs and every
+    band hash, edge texts included: empty, null (hashes like ""),
+    shorter than k, exactly k, CJK, a character above U+FFFF, and a
+    1.1M-character text that spans many signature chunks in one Arrow
+    batch with the short ones."""
     import itertools
+    import random
     from collections import Counter
 
+    rng = random.Random(5)
+    words = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(2, 7)))
+             for _ in range(300)]
+    long_text = " ".join(rng.choice(words) for _ in range(200_000))
+    assert len(long_text) > 1_000_000
     texts = {
         0: "abcdefgh",
         1: "abcdefgx",
@@ -103,35 +139,12 @@ def test_minhash_portable_matches_python_reference(spark):
         8: "漢字かな交じり文の例",
         9: "a😀bcde😀fg",
         10: "😀",
+        11: long_text,
+        12: long_text[:70_000] + "😀 tail",
     }
     docs = spark.createDataFrame(
         sorted(texts.items()), "doc_id long, text string"
-    )
-
-    def shingles(t, k=dd.SHINGLE_K):
-        return list(dict.fromkeys(t[i : i + k] for i in range(max(len(t) - k, 0) + 1)))
-
-    def fp(s):
-        acc = 7
-        for ch in s:
-            acc = (acc * 31 + ord(ch)) % dd.MINHASH_P
-        return acc
-
-    def band_vals(t, n_hashes, bands):
-        fps = [fp(s) for s in shingles(t or "")]
-        sig = [
-            min((a * x + b) % dd.MINHASH_P for x in fps)
-            for a, b in dd.minhash_coeffs(n_hashes)
-        ]
-        rpb = len(sig) // bands
-        out = []
-        for b in range(bands):
-            acc = 7
-            for r in range(rpb):
-                acc = (acc * 31 + sig[b * rpb + r]) % dd.MINHASH_P
-            out.append((b, acc))
-        return out
-
+    ).coalesce(1)
     for n_hashes, bands in [(8, 2), (32, 8)]:
         got = {
             (r.doc_a, r.doc_b): r.n_bands_hit
@@ -139,7 +152,7 @@ def test_minhash_portable_matches_python_reference(spark):
                 docs, "doc_id", "text", n_hashes=n_hashes, bands=bands
             ).collect()
         }
-        bv = {d: band_vals(t, n_hashes, bands) for d, t in texts.items()}
+        bv = {d: _ref_band_vals(t, n_hashes, bands) for d, t in texts.items()}
         expected = Counter()
         for a, b in itertools.combinations(sorted(texts), 2):
             hits = sum(1 for x, y in zip(bv[a], bv[b]) if x == y)
@@ -148,6 +161,10 @@ def test_minhash_portable_matches_python_reference(spark):
         assert got == dict(expected)
         assert got[(0, 4)] == bands  # identical texts collide in every band
         assert got[(5, 6)] == bands  # null hashes like ""
+        stacked = dd._minhash_bands(docs, "doc_id", "text", n_hashes, bands)
+        assert {(r.doc_id, r.band_idx): r.bh for r in stacked.collect()} == {
+            (d, b): h for d, vals in bv.items() for b, h in vals
+        }
 
 
 # ---- hot-bucket cap (boilerplate blowup guard) -------------------------
