@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hiispider_spark.operators.dedup import tokens_col
-from hiispider_spark.operators.quality import shingles_col
+from hiispider_spark.operators.dedup import shingles_col, tokens_col
 
 
 def _distinct_shingles(

@@ -85,6 +85,18 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != "")
 
 
+def shingles_col(toks: Column, n: int) -> Column:
+    """All n-token shingles as space-joined strings, in order (empty if
+    <n tokens): the one token n-gram builder (quality's bigrams, the
+    n-gram Jaccard, contamination). ``transform`` over a sliced head,
+    not ``sequence(0, size - n)``, which would count down below n
+    tokens."""
+    head = F.slice(toks, 1, F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0)))
+    return F.transform(
+        head, lambda x, i: F.array_join(F.slice(toks, i + 1, n), " ")
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str,
@@ -100,19 +112,10 @@ def ngram_jaccard_pairs(
     toks = docs.select(
         F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("t")
     )
-    # docs with fewer than n tokens have no n-grams: guard explicitly —
-    # sequence(0,-1) would expand descending and emit a spurious partial
-    # gram via concat_ws's null skipping (oracle twin emits none)
-    gram_arr = F.when(
-        F.size("t") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - n),
-                lambda i: F.concat_ws(" ", *[F.col("t")[i + j] for j in range(n)]),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = toks.select("doc_id", F.explode(gram_arr).alias("gram"))
+    grams = toks.select(
+        "doc_id",
+        F.explode(F.array_distinct(shingles_col(F.col("t"), n))).alias("gram"),
+    )
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     a = grams.alias("a")
     b = grams.alias("b")

@@ -39,8 +39,8 @@ def _decode_utf8(html: pd.Series) -> pd.Series:
 # --- plugin implementations -------------------------------------------------
 # Each has a decoded-text form (pd.Series[str] → pd.Series[str]), which
 # the routed text+links UDF dispatches to so html is decoded ONCE per
-# batch. Plugins that also ship as standalone UDFs wrap it in a bytes
-# form (pd.Series[bytes] → pd.Series[str]) — identical outputs by
+# batch. The text plugin also ships as a standalone UDF wrapping it in a
+# bytes form (pd.Series[bytes] → pd.Series[str]) — identical outputs by
 # construction.
 def _text_impl_s(s: pd.Series) -> pd.Series:
     return s.str.replace(_TAG_RE, "", regex=True)
@@ -58,10 +58,6 @@ def _anchor_impl_s(s: pd.Series) -> pd.Series:
 
 def _text_impl(html: pd.Series) -> pd.Series:
     return _text_impl_s(_decode_utf8(html))
-
-
-def _title_impl(html: pd.Series) -> pd.Series:
-    return _title_impl_s(_decode_utf8(html))
 
 
 #: head-metadata fields: <meta name=...> and OpenGraph <meta
@@ -95,10 +91,6 @@ def _meta_impl_s(s: pd.Series) -> pd.Series:
     )
 
 
-def _meta_impl(html: pd.Series) -> pd.Series:
-    return _meta_impl_s(_decode_utf8(html))
-
-
 #: per-URL-routable text plugins (O-10): name -> vectorized impl over
 #: decoded text. The Spark equivalent of BaseServer.functions — the
 #: dict ships inside the routed UDF's closure (task-broadcast),
@@ -125,12 +117,6 @@ def text_extract_udf(html: pd.Series) -> pd.Series:
 def links_extract_udf(html: pd.Series) -> pd.Series:
     """Out-link plugin (UDTF-shaped: array out, explode downstream)."""
     return _decode_utf8(html).str.findall(_HREF_RE)
-
-
-@F.pandas_udf(T.StringType())
-def title_extract_udf(html: pd.Series) -> pd.Series:
-    """<title> plugin — exercises a second registry entry."""
-    return _title_impl(html)
 
 
 @F.pandas_udf(
@@ -184,22 +170,6 @@ def evaluate_boolean_col(c: Column) -> Column:
     return F.when(lc.isin("true", "t", "yes", "y", "1"), F.lit(True)).when(
         lc.isin("false", "f", "no", "n", "0", ""), F.lit(False)
     ).otherwise(c.try_cast("boolean"))
-
-
-#: plugin registry — the Spark equivalent of BaseServer.functions
-#: (standalone UDFs; per-URL routing goes through routed_with_links_udf)
-@F.pandas_udf(T.StringType())
-def meta_extract_udf(html: pd.Series) -> pd.Series:
-    """Head-metadata plugin (description/keywords/og:*) as JSON."""
-    return _meta_impl(html)
-
-
-PLUGINS = {
-    "text": text_extract_udf,
-    "links": links_extract_udf,
-    "title": title_extract_udf,
-    "meta": meta_extract_udf,
-}
 
 
 def meta_extract_cols(html: Column) -> dict[str, Column]:

@@ -35,25 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("kind", T.StringType(), False),
-                    T.StructField("width", T.IntegerType(), False),
-                    T.StructField("height", T.IntegerType(), False),
-                    T.StructField("n_bytes", T.IntegerType(), False),
-                ]
-            ),
-            False,
-        ),
-    ]
-)
-
 FEATURE_DIM = 16
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hiispider_spark.operators.dedup import tokens_col
+from hiispider_spark.operators.dedup import shingles_col, tokens_col
 from hiispider_spark.operators.textstats import quality_score_col
 
 # Gopher-inspired keep thresholds, calibrated so each one splits the
@@ -52,24 +52,6 @@ PII_MASK = "<PII>"
 SAMPLE_MUL = 1103515245
 SAMPLE_INC = 12345
 SAMPLE_MOD = 2_147_483_648
-
-
-def bigrams_col(toks: Column) -> Column:
-    """Adjacent-token bigrams as 'a b' strings (empty array if <2
-    tokens). ``transform`` with index instead of ``zip_with`` because
-    Spark's zip_with null-pads the shorter side."""
-    head = F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0)))
-    return F.transform(
-        head, lambda x, i: F.concat_ws(" ", x, F.element_at(toks, i + 2))
-    )
-
-
-def shingles_col(toks: Column, n: int) -> Column:
-    """All n-token shingles as space-joined strings (empty if <n)."""
-    head = F.slice(toks, 1, F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0)))
-    return F.transform(
-        head, lambda x, i: F.array_join(F.slice(toks, i + 1, n), " ")
-    )
 
 
 def gopher_signals(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -95,7 +77,7 @@ def gopher_signals(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     bg = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(bigrams_col(tokens_col(t))).alias("bigram"),
+        F.explode(shingles_col(tokens_col(t), 2)).alias("bigram"),
     )
     top = (
         bg.groupBy("doc_id", "bigram")

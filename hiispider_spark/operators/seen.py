@@ -12,10 +12,11 @@ URL's bits live only in its own bucket's filter, so each candidate is
 probed against that one filter (a better fpp than the union's).
 
 Design:
-- each bucket's filter is built **vectorized** (numpy bitwise ops over
-  its url_hash array, no per-row Python), stored as one ``seen_set``
-  row of ``array<long>`` words, and updated by ORing in only the
-  epoch's new URLs,
+- each bucket's filter is one ``seen_set`` row of ``array<long>``
+  words; :func:`merge_partition_blooms`, the one builder, ORs new URLs
+  in **vectorized** (numpy bitwise ops, no per-row Python), a first
+  build being a merge into no filter. ``plans.epoch.stage_seen_filters``
+  is its one caller (bootstrap, epoch and CDX ingest),
 - :func:`filter_unseen_partitioned` is the one probe,
 - Bloom is a *prefilter only*: false positives would drop URLs, and the
   north rule requires URL-seen membership to match the reference
@@ -40,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hiispider_spark import schemas
 
 DEFAULT_M_BITS = 1 << 24  # 16 Mbit = 2 MiB per filter (sandbox scale)
 DEFAULT_K = 7
@@ -91,55 +94,19 @@ _SIZE_MISMATCH = (
 )
 
 
-def _check_words(partition_id, words: np.ndarray, m_bits: int) -> None:
-    # a filter probed at a smaller width gives false negatives
-    if len(words) != m_bits // 64:
-        raise ValueError(
-            _SIZE_MISMATCH % (partition_id, len(words), m_bits, m_bits // 64)
-        )
-
-
-def build_partition_blooms(
-    df: DataFrame,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Per-bucket Bloom filters for the ``seen_set`` table.
-
-    ``df`` must carry (part_id, url_hash); each frontier bucket gets one
-    filter built in a single vectorized pass over its url_hash array.
-    """
-    check_m_bits(m_bits)
-    out_schema = T.StructType(
-        [
-            T.StructField("partition_id", T.IntegerType(), False),
-            T.StructField("bloom", T.ArrayType(T.LongType()), False),
-            T.StructField("n_items", T.LongType(), False),
-            T.StructField("fpp", T.DoubleType(), False),
-        ]
-    )
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        bloom = np.zeros(m_bits // 8, dtype=np.uint8)
-        h = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        _insert(bloom, h, m_bits, k)
-        n = len(h)
-        return pd.DataFrame(
-            {
-                "partition_id": [int(pdf["part_id"].iloc[0])],
-                # stored as int64 words (same little-endian bit layout
-                # as the byte view) → probes stay JVM-side
-                "bloom": [bloom.view(np.int64).tolist()],
-                "n_items": [n],
-                "fpp": [estimated_fpp(n, m_bits, k)],
-            }
-        )
-
-    return (
-        df.select("part_id", "url_hash")
-        .groupBy("part_id")
-        .applyInPandas(per_group, out_schema)
-    )
+def _stored_filter(partition_id, stored: pd.Series, m_bits: int) -> np.ndarray:
+    """OR of a bucket's stored filter rows (at most one; all-zero for
+    none) as bytes, each checked to be ``m_bits`` wide: a filter probed
+    at a smaller width gives false negatives."""
+    bloom = np.zeros(m_bits // 8, dtype=np.uint8)
+    for b in stored:
+        words = np.asarray(b, dtype=np.int64)
+        if len(words) != m_bits // 64:
+            raise ValueError(
+                _SIZE_MISMATCH % (partition_id, len(words), m_bits, m_bits // 64)
+            )
+        bloom |= words.view(np.uint8)
+    return bloom
 
 
 def merge_partition_blooms(
@@ -148,46 +115,27 @@ def merge_partition_blooms(
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
 ) -> DataFrame:
-    """Incremental seen-set update: OR the bloom of this epoch's new
-    URLs into the existing per-partition filters — O(new) work instead
-    of rebuilding over the whole frontier (the only shape that survives
-    a 10^10-row frontier; rebuild would re-scan everything per epoch).
+    """Seen-set update: OR the bloom of the new URLs into the existing
+    per-partition filters — O(new) work instead of rebuilding over the
+    whole frontier (the only shape that survives a 10^10-row frontier;
+    rebuild would re-scan everything per epoch).
 
     ``new_items`` carries (part_id, url_hash). Partitions unseen so far
-    get fresh rows; untouched partitions pass through unchanged.
+    get fresh rows, so an empty ``old_seen_set`` builds the first
+    filters; untouched partitions pass through unchanged.
 
     One cogroup pandas stage does the whole merge — old filter + new
     hashes meet per partition, the OR and the inserts run vectorized in
-    numpy. The previous form (build new blooms in pandas → full-outer
-    join → JVM ``zip_with`` OR) shipped every filter through an extra
-    shuffle and evaluated an interpreted lambda per WORD of every
-    filter (m_bits/64 evals × partitions, the write path's hot loop).
-    Same bits by construction: OR of the same positions; ``fpp`` uses
-    the same formula ``estimated_fpp`` already applies to fresh rows.
+    numpy (a JVM ``zip_with`` OR would shuffle every filter once more
+    and run an interpreted lambda per word).
     """
     check_m_bits(m_bits)
-    out_schema = T.StructType(
-        [
-            T.StructField("partition_id", T.IntegerType(), False),
-            T.StructField("bloom", T.ArrayType(T.LongType()), False),
-            T.StructField("n_items", T.LongType(), False),
-            T.StructField("fpp", T.DoubleType(), False),
-        ]
-    )
 
     def merge(key, old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
-        bloom = np.zeros(m_bits // 8, dtype=np.uint8)
-        n_old = 0
-        if len(old):
-            for b in old["bloom"]:  # defensive: ≤1 row/partition
-                words = np.asarray(b, dtype=np.int64)
-                _check_words(key[0], words, m_bits)
-                bloom |= words.view(np.uint8)
-            n_old = int(old["n_items"].sum())
-        if len(new):
-            h = new["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-            _insert(bloom, h, m_bits, k)
-        n = n_old + len(new)
+        bloom = _stored_filter(key[0], old["bloom"], m_bits)
+        h = new["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
+        _insert(bloom, h, m_bits, k)
+        n = int(old["n_items"].sum()) + len(h)
         return pd.DataFrame(
             {
                 "partition_id": [int(key[0])],
@@ -200,7 +148,7 @@ def merge_partition_blooms(
     return (
         old_seen_set.groupby("partition_id")
         .cogroup(new_items.select("part_id", "url_hash").groupby("part_id"))
-        .applyInPandas(merge, out_schema)
+        .applyInPandas(merge, schemas.SEEN_SET)
     )
 
 
@@ -268,13 +216,26 @@ def _checked_bloom_col(m_bits: int):
     )
 
 
+#: Largest filter set (rows × m_bits/8 bytes) the probe broadcasts. A
+#: broadcast is collected whole on the driver and copied whole into
+#: every executor, so past a share of one JVM heap it fails where the
+#: cogroup, which moves each filter row once, does not (Spark refuses
+#: any broadcast over 8 GB). Every sandbox sizing, at most 32 × 2 MiB,
+#: is far below; the 10^10 sizing, 10k × 1.25 MB, is far above.
+BROADCAST_FILTERS_MAX_BYTES = 1 << 30
+
+
+def _broadcast_fits(n_filters: int, m_bits: int) -> bool:
+    return n_filters * (m_bits // 8) <= BROADCAST_FILTERS_MAX_BYTES
+
+
 def filter_unseen_partitioned(
     candidates: DataFrame,
     seen_set: DataFrame,
     seen_exact: DataFrame,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    broadcast_filters: bool = True,
+    n_filters: int = 0,
 ) -> DataFrame:
     """Per-bucket bloom prefilter + exact anti-join (the 10^10 shape).
 
@@ -285,23 +246,22 @@ def filter_unseen_partitioned(
     fpp). The union of the filters is never formed: at 10^10 sizing it
     would be a ~12 GB collect per epoch.
 
-    ``broadcast_filters=True`` (default): join each candidate to its
-    bucket's filter row with a broadcast hash join and evaluate
-    :func:`bloom_might_contain_col` in the same codegen stage — the
-    build-side array is referenced in place, never copied per row (a
-    sort-merge join WOULD materialize the 2 MB array into every joined
-    row — that is why the hint is explicit). Right whenever the filter
-    set fits a broadcast (sandbox: 32 × 2 MiB; a 10^10 deployment at
-    P=10k × 1.25 MB = 12.5 GB does not) — set False there to use the
-    co-partitioned cogroup probe, which moves each filter row to its
-    candidates' executor exactly once.
+    ``n_filters`` is the row count of ``seen_set`` (from the manifest:
+    ``cat.row_count("seen_set")``, no job). While the filter set fits
+    ``BROADCAST_FILTERS_MAX_BYTES``, each candidate joins its bucket's
+    filter row by a broadcast hash join and
+    :func:`bloom_might_contain_col` runs in the same codegen stage —
+    the build-side array is referenced in place (a sort-merge join
+    WOULD copy the 2 MB array into every joined row — hence the hint).
+    Past it (10^10 sizing: 10k × 1.25 MB) the cogroup probe moves each
+    filter row to its candidates' executor exactly once.
 
     Bloom semantics unchanged: no false negatives, so bloom-negative
     rows are definitely unseen; bloom-positive rows go to the exact
     anti-join authority — for filters built at ``m_bits`` only, so
     both arms fail on a filter row of another size.
     """
-    if broadcast_filters:
+    if _broadcast_fits(n_filters, m_bits):
         blooms = seen_set.select(
             F.col("partition_id").alias("part_id"), _checked_bloom_col(m_bits)
         )
@@ -319,13 +279,7 @@ def filter_unseen_partitioned(
         )
 
         def probe(key, cand: pd.DataFrame, blooms: pd.DataFrame) -> pd.DataFrame:
-            if cand.empty or blooms.empty:
-                return cand.assign(_maybe_seen=np.zeros(len(cand), dtype=bool))
-            bloom = np.zeros(m_bits // 8, dtype=np.uint8)
-            for b in blooms["bloom"]:  # defensive: ≤1 row per bucket
-                words = np.asarray(b, dtype=np.int64)
-                _check_words(key[0], words, m_bits)
-                bloom |= words.view(np.uint8)
+            bloom = _stored_filter(key[0], blooms["bloom"], m_bits)
             h = cand["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
             return cand.assign(_maybe_seen=_contains(bloom, h, m_bits, k))
 

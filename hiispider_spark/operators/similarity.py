@@ -28,6 +28,7 @@ from hiispider_spark.operators.dedup import (
     DEFAULT_BUCKET_CAP,
     _cap_buckets,
     _log_overflow,
+    _mh_splitmix,
 )
 
 
@@ -125,22 +126,11 @@ def cosine_near_dup_pairs(
     )
 
 
-_M64 = (1 << 64) - 1
-
-
-def _splitmix(x: int) -> int:
-    """Deterministic 64-bit mix (public splitmix64 finalizer) — used to
-    derive hyperplane components without any runtime RNG."""
-    x = (x + 0x9E3779B97F4A7C15) & _M64
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
-    return x ^ (x >> 31)
-
-
 def _plane(j: int, dim: int) -> list[float]:
-    """Hyperplane j: components in [-1, 1), pure function of (j, i)."""
+    """Hyperplane j: components in [-1, 1), pure function of (j, i)
+    through the splitmix64 finalizer — no runtime RNG."""
     return [
-        (_splitmix(j * 1_000_003 + i) / float(1 << 63)) - 1.0
+        (_mh_splitmix(j * 1_000_003 + i) / float(1 << 63)) - 1.0
         for i in range(dim)
     ]
 

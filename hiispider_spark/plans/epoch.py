@@ -198,6 +198,25 @@ def epoch_timestamp(epoch: int, epoch_seconds: float = EPOCH_SECONDS) -> str:
     )
 
 
+def stage_seen_filters(
+    cat: IcebergLike, inserted: DataFrame, parts: list[int], m_bits: int
+) -> None:
+    """The one write of the seen set's Bloom filters: OR the url_hash of
+    ``inserted`` (new frontier rows in buckets ``parts``) into those
+    buckets' filters. Every frontier writer calls it for the keys it
+    inserts, then ``cat.stage_append_ref("seen_exact", "frontier")``."""
+    cat.stage_overwrite_parts(
+        "seen_set",
+        seen_ops.merge_partition_blooms(
+            cat.read_parts("seen_set", parts, "partition_id"),
+            inserted.select("part_id", "url_hash"),
+            m_bits,
+        ),
+        "partition_id",
+        parts,
+    )
+
+
 def bootstrap(
     spark: SparkSession,
     cat: IcebergLike,
@@ -215,18 +234,12 @@ def bootstrap(
     )
     all_parts = list(range(cfg.n_partitions))
     cat.stage_overwrite_parts("frontier", frontier, "part_id", all_parts)
-    frontier_c = cat.read_staged("frontier")  # materialized once on disk
-    # seen_exact ≡ frontier membership: reference the frontier's bucket
-    # files instead of writing a url_hash copy of the table
-    cat.stage_append_ref(
-        "seen_exact", cat.staged_part_rels("frontier"), replace=True
+    # the filters merge into the empty seen set from the frontier as
+    # written (read back from disk, not recomputed from the seeds)
+    stage_seen_filters(
+        cat, cat.read_staged("frontier"), all_parts, cfg.bloom_m_bits
     )
-    cat.stage_overwrite_parts(
-        "seen_set",
-        seen_ops.build_partition_blooms(frontier_c, cfg.bloom_m_bits),
-        "partition_id",
-        all_parts,
-    )
+    cat.stage_append_ref("seen_exact", "frontier")
     cat.commit(epoch=0)
 
 
@@ -421,19 +434,18 @@ def run_epoch(
 
         def _submit_keyed(
             tbl: str, df: DataFrame, n_rows: int, n_new_keys: int | None = None
-        ) -> bool:
+        ) -> None:
             # The one write rule of the keyed state tables, decided
             # before the write from the exact row count of the epoch's
             # change set: when appending it would trip a fold bound, write
             # the resolved buckets ONCE (stage_upsert_fold) instead of a
             # delta that a fold would rewrite at once — same end state,
             # half the write bytes. With n_rows exact, an appended delta
-            # never trips a bound afterwards. Returns whether it folds.
-            fold = (
+            # never trips a bound afterwards.
+            if (
                 cat.delta_count(tbl) + 1 >= cfg.compact_every
                 or cat.delta_row_count(tbl) + n_rows >= cfg.compact_delta_rows
-            )
-            if fold:
+            ):
                 compacted.append(tbl)
                 _submit(tbl, lambda: cat.stage_upsert_fold(
                     tbl, df, "part_id", n_rows=n_rows
@@ -447,7 +459,6 @@ def run_epoch(
                     df.coalesce(_delta_files(n_rows, cfg.n_partitions)),
                     n_new_keys=n_new_keys,
                 ))
-            return fold
 
         # conditional GET against the compact page_cache state table —
         # O(slice) per epoch (only touched buckets' cache files open),
@@ -576,7 +587,7 @@ def run_epoch(
                 candidates = tr.filter_traps(hashed, tstats)
             unseen = seen_ops.filter_unseen_partitioned(
                 candidates, cat.read("seen_set"), cat.read("seen_exact"),
-                cfg.bloom_m_bits,
+                cfg.bloom_m_bits, n_filters=cat.row_count("seen_set"),
             )
             inserted = _cut(new_frontier_entries(
                 frontier, unseen, ts,
@@ -653,42 +664,21 @@ def run_epoch(
         # need the inserted set); everything else is already in flight.
         # Exact delta rows: requeued + backoff = granted = fetched ⊎
         # failed, plus denied and inserted.
-        fold_frontier = _submit_keyed(
+        _submit_keyed(
             "frontier", frontier_delta,
             n_fetched + n_failed + n_denied + n_inserted,
             n_new_keys=n_inserted,
         )
-        if cfg.follow_links and ins_parts:  # nothing new discovered → no-op
-            _submit("seen_set", lambda: cat.stage_overwrite_parts(
-                "seen_set",
-                seen_ops.merge_partition_blooms(
-                    cat.read_parts("seen_set", ins_parts, "partition_id"),
-                    inserted.select("part_id", "url_hash"),
-                    cfg.bloom_m_bits,
-                ),
-                "partition_id",
-                ins_parts,
+        if ins_parts:  # nothing new discovered → no-op
+            _submit("seen_set", lambda: stage_seen_filters(
+                cat, inserted, ins_parts, cfg.bloom_m_bits
             ))
         _mark("plan_writes")
         for f in futures:
             f.result()
-        if fold_frontier:
-            # the fold wrote resolved bucket files and cleared every
-            # frontier delta inside the pool — membership ≡ the folded
-            # frontier, so seen_exact swaps to reference exactly those
-            # bucket files (stays O(table) refs, never grows stale)
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_part_rels("frontier"), replace=True
-            )
-        elif ins_parts:
-            # seen_exact ⊇ frontier membership and frontier rows are never
-            # deleted → the just-written frontier delta (which contains
-            # every inserted row's url_hash, plus harmless already-seen
-            # duplicates) IS this epoch's seen_exact append. Zero extra
-            # bytes written, no write job.
-            cat.stage_append_ref(
-                "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-            )
+        # seen_exact ≡ the frontier's files, delta or fold alike: no
+        # bytes written, no job
+        cat.stage_append_ref("seen_exact", "frontier")
         _mark("writes")
 
         stats = {

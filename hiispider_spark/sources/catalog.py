@@ -449,46 +449,32 @@ class IcebergLike:
                 "next_version": int(rel.rsplit("v", 1)[1]) + 1,
             }
 
-    def stage_append_ref(
-        self, name: str, rels: list[str], replace: bool = False
-    ) -> None:
-        """Append (or with ``replace=True`` substitute) EXISTING version
-        directories — written while staging another table this
-        transaction, or already committed — as ``name``'s file set, by
-        manifest reference: zero data written. The files may carry a
-        superset schema; ``name`` must be in ``_PROJECTED_TABLES`` so
-        reads project it down. Used to derive ``seen_exact`` from the
-        frontier's files (frontier rows are never deleted, so any
-        frontier row's url_hash is 'seen'; duplicate hashes are harmless
-        to membership anti/semi-joins): per epoch, append the frontier
-        delta; at compaction, replace with the compacted bucket files so
-        seen_exact stays bounded at O(table) references forever."""
+    def stage_append_ref(self, name: str, source: str) -> None:
+        """Stage ``name`` as a manifest reference to every file of
+        ``source`` (staged view, bucket files and deltas): zero data
+        written, row counts from ``source``'s entry. ``name`` must be in
+        ``_PROJECTED_TABLES``: reads project the superset schema down.
+        ``seen_exact`` is the frontier's files (frontier rows are never
+        deleted; a key held twice is harmless to anti/semi-joins)."""
         if name not in self._PROJECTED_TABLES:
             raise KeyError(
                 f"table {name!r} is not schema-projected; a by-reference "
                 "append would leak the source table's schema into reads"
             )
+        src = self._staged.get(source) or self.manifest["tables"].get(source, {})
+        if "parts" in src:
+            rows = [src["part_rows"][p] for p in src["parts"]] + list(
+                src.get("delta_rows", [])
+            )
+        else:
+            rows = list(src.get("path_rows", []))
         prev = self._staged.get(name) or self.manifest["tables"].get(name, {})
-        if "parts" in prev:
-            raise ValueError(f"table {name!r} is parts-form; refs need paths")
-        rows = [_dir_row_count(os.path.join(self.root, r)) for r in rels]
-        paths = [] if replace else list(prev.get("paths", []))
         with self._staged_mutex:
             self._staged[name] = {
-                "paths": paths + list(rels),
-                "path_rows": (prev["path_rows"] if paths else []) + rows,
+                "paths": self._entry_paths(src),
+                "path_rows": rows,
                 "next_version": prev.get("next_version", 1),
             }
-
-    def staged_delta_rels(self, name: str) -> list[str]:
-        """Pending delta file-set rel paths (staged view)."""
-        entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
-        return list(entry.get("deltas", []))
-
-    def staged_part_rels(self, name: str) -> list[str]:
-        """Current partition file rel paths (staged view)."""
-        entry = self._staged.get(name) or self.manifest["tables"].get(name, {})
-        return list(entry.get("parts", {}).values())
 
     def delta_count(self, name: str) -> int:
         """Number of pending delta file sets (staged view) — the

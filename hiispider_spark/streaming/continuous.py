@@ -29,7 +29,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from hiispider_spark import frames
-from hiispider_spark.plans.epoch import EpochConfig, run_epoch
+from hiispider_spark.plans.epoch import (
+    FRONTIER_COLS,
+    EpochConfig,
+    _delta_files,
+    run_epoch,
+    stage_seen_filters,
+)
 from hiispider_spark.sources.catalog import IcebergLike
 
 
@@ -100,15 +106,17 @@ def stream_cdx_frontier(
     1. parse lines → captures → :func:`~hiispider_spark.sources.cdx.cdx_seeds`
        (status/mime filter, latest capture per url, recency priority);
     2. ``build_frontier`` canonicalizes/dedups/buckets them;
-    3. anti-join against the committed frontier (idempotent: re-shipped
-       index files insert nothing);
+    3. the epoch's seen-set probe (``filter_unseen_partitioned``) keeps
+       the unseen ones (idempotent: re-shipped index files insert
+       nothing);
     4. commit inserts as a frontier delta (O(new rows)) AND keep the
-       seen set whole: ``seen_exact`` gets the delta by reference, and
-       the touched partitions' bloom filters OR in the new hashes —
-       REQUIRED for correctness, not an optimization: the epoch's link
-       probe trusts a bloom miss as "definitely new" without an exact
-       check, so an insert that skipped the bloom would let the same
-       URL insert again on next discovery.
+       seen set whole, the way every frontier writer does: the touched
+       partitions' bloom filters OR in the new hashes
+       (``stage_seen_filters``) and ``seen_exact`` references the
+       frontier's files — REQUIRED for correctness, not an
+       optimization: the link probe trusts a bloom miss as "definitely
+       new" without an exact check, so an insert that skipped the bloom
+       would let the same URL insert again on next discovery.
 
     Returns (StreamingQuery, stats) like :func:`crawl_stream`; a
     failed batch rolls back its staged writes before re-raising (same
@@ -123,7 +131,6 @@ def stream_cdx_frontier(
     """
     from hiispider_spark.operators import seen as seen_ops
     from hiispider_spark.operators.frontier import build_frontier
-    from hiispider_spark.plans.epoch import _delta_files
     from hiispider_spark.sources.cdx import cdx_seeds, read_cdxj
 
     stats: list[dict] = []
@@ -146,13 +153,13 @@ def stream_cdx_frontier(
                 seeds, cfg.n_partitions, cfg.n_salts, cfg.interval_s,
                 stagger_s=cfg.boot_stagger_s,
             )
-            existing = cat.read("frontier")
             # checkpoint, not persist (frames module notes): the count
             # below fills it, the frontier and seen_set writes read it
             inserted = frames.cut(
-                rows.join(
-                    existing.select("url_hash"), "url_hash", "left_anti"
-                ).select(*existing.columns)
+                seen_ops.filter_unseen_partitioned(
+                    rows, cat.read("seen_set"), cat.read("seen_exact"),
+                    cfg.bloom_m_bits, n_filters=cat.row_count("seen_set"),
+                ).select(*FRONTIER_COLS)
             )
             per_part = inserted.groupBy("part_id").count().collect()
             n = int(sum(r["count"] for r in per_part))
@@ -163,19 +170,8 @@ def stream_cdx_frontier(
                     inserted.coalesce(_delta_files(n, cfg.n_partitions)),
                     n_new_keys=n,
                 )
-                cat.stage_append_ref(
-                    "seen_exact", cat.staged_delta_rels("frontier")[-1:]
-                )
-                cat.stage_overwrite_parts(
-                    "seen_set",
-                    seen_ops.merge_partition_blooms(
-                        cat.read_parts("seen_set", parts, "partition_id"),
-                        inserted.select("part_id", "url_hash"),
-                        cfg.bloom_m_bits,
-                    ),
-                    "partition_id",
-                    parts,
-                )
+                stage_seen_filters(cat, inserted, parts, cfg.bloom_m_bits)
+                cat.stage_append_ref("seen_exact", "frontier")
                 # ingest is not a crawl tick: the epoch counter stays
                 cat.commit(epoch=cat.epoch)
             stats.append({"batch": int(batch_id), "n_inserted": n})

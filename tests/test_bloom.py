@@ -7,11 +7,34 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hiispider_spark import schemas
 from hiispider_spark.operators import seen
 from hiispider_spark.plans.epoch import EpochConfig
 
 M = 1 << 17  # 128 Kbit for tests
 K = 7
+
+
+def _build(df, m_bits=M):
+    """Filters built the one way: merged into an empty seen set."""
+    empty = schemas.empty_frame(df.sparkSession, schemas.SEEN_SET)
+    return seen.merge_partition_blooms(empty, df, m_bits, K)
+
+
+def _probe(cands, blooms, seen_exact, broadcast, m_bits=M):
+    """The probe given a filter-row count on the ``broadcast`` side of
+    its size bound (the other side: one row past it), after checking
+    that the count selects that arm."""
+    n_filters = (
+        0 if broadcast
+        else seen.BROADCAST_FILTERS_MAX_BYTES // (m_bits // 8) + 1
+    )
+    got = seen.filter_unseen_partitioned(
+        cands, blooms, seen_exact, m_bits, K, n_filters=n_filters
+    )
+    plan = got._jdf.queryExecution().analyzed().toString()
+    assert ("strategy=broadcast" in plan) == broadcast
+    return got
 
 
 def _hashes(n, seed=0):
@@ -42,7 +65,7 @@ def test_partition_blooms_match_direct_insert(spark):
         (F.col("id") % 8).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    blooms = seen.build_partition_blooms(df, M, K).collect()
+    blooms = _build(df).collect()
     assert sorted(r.partition_id for r in blooms) == list(range(8))
     by_part: dict[int, list[int]] = {}
     for r in df.collect():
@@ -66,16 +89,13 @@ def test_filter_unseen_exactness(spark):
     )
     seen_part = all_urls.filter(F.col("url_hash") % 2 == 0)
     seen_exact = seen_part.select("url_hash")
-    blooms = seen.build_partition_blooms(seen_part, M, K)
+    blooms = _build(seen_part)
     expected = sorted(
         r.url_hash
         for r in all_urls.join(seen_exact, "url_hash", "left_anti").collect()
     )
-    for broadcast_filters in (True, False):
-        got = seen.filter_unseen_partitioned(
-            all_urls, blooms, seen_exact, M, K,
-            broadcast_filters=broadcast_filters,
-        )
+    for broadcast in (True, False):
+        got = _probe(all_urls, blooms, seen_exact, broadcast)
         assert sorted(r.url_hash for r in got.collect()) == expected
 
 
@@ -86,7 +106,7 @@ def test_jvm_probe_matches_numpy(spark):
         F.lit(0).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    blooms = seen.build_partition_blooms(df, M, K).collect()
+    blooms = _build(df).collect()
     words = np.asarray(blooms[0].bloom, dtype=np.int64)
     bl = words.view(np.uint8)
     probe = spark.range(2000, 8000).select(F.xxhash64("id").alias("url_hash"))
@@ -111,28 +131,30 @@ def test_jvm_probe_matches_numpy(spark):
 
 def test_filter_unseen_partitioned_modes_agree(spark):
     """Broadcast JVM probe and cogroup python probe return the same
-    unseen set (both end at the exact anti-join authority)."""
+    unseen set (both end at the exact anti-join authority); the filter
+    set's size picks the arm."""
     base = spark.range(4000).select(
         (F.col("id") % 8).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    blooms = seen.build_partition_blooms(base, M, K)
+    blooms = _build(base)
     seen_exact = base.select("url_hash")
     cands = spark.range(2000, 10000).select(
         (F.col("id") % 8).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    a = seen.filter_unseen_partitioned(
-        cands, blooms, seen_exact, M, K, broadcast_filters=True
-    )
-    b = seen.filter_unseen_partitioned(
-        cands, blooms, seen_exact, M, K, broadcast_filters=False
-    )
+    a = _probe(cands, blooms, seen_exact, True)
+    b = _probe(cands, blooms, seen_exact, False)
     want = cands.join(seen_exact, "url_hash", "left_anti")
     sa = sorted(r.url_hash for r in a.collect())
     sb = sorted(r.url_hash for r in b.collect())
     sw = sorted(r.url_hash for r in want.collect())
     assert sa == sb == sw
+    # the bound sits between the sandbox and the 10^10 sizing of the
+    # seen.py notes: 32 filters of 2 MiB broadcast, 10 000 filters of
+    # 1.25 MB (10^7 bits) take the cogroup
+    assert seen._broadcast_fits(32, 1 << 24)
+    assert not seen._broadcast_fits(10_000, 10_000_000)
 
 
 @pytest.mark.parametrize("m_bits", [3 << 20, 1000, 32, 0])
@@ -145,11 +167,7 @@ def test_m_bits_must_be_power_of_two(spark, m_bits):
     with pytest.raises(ValueError, match="power of two"):
         EpochConfig(bloom_m_bits=m_bits)
     with pytest.raises(ValueError, match="power of two"):
-        seen.build_partition_blooms(df, m_bits, K)
-    with pytest.raises(ValueError, match="power of two"):
-        seen.merge_partition_blooms(
-            seen.build_partition_blooms(df, M, K), df, m_bits, K
-        )
+        seen.merge_partition_blooms(_build(df), df, m_bits, K)
 
 
 def test_filters_of_another_width_are_rejected(spark):
@@ -160,13 +178,10 @@ def test_filters_of_another_width_are_rejected(spark):
         (F.col("id") % 4).cast("int").alias("part_id"),
         F.xxhash64("id").alias("url_hash"),
     )
-    blooms = seen.build_partition_blooms(base, M, K)
+    blooms = _build(base)
     seen_exact = base.select("url_hash")
-    for broadcast_filters in (True, False):
-        probe = seen.filter_unseen_partitioned(
-            base, blooms, seen_exact, M // 2, K,
-            broadcast_filters=broadcast_filters,
-        )
+    for broadcast in (True, False):
+        probe = _probe(base, blooms, seen_exact, broadcast, M // 2)
         with pytest.raises(Exception, match="built with another bloom_m_bits"):
             probe.collect()
     merged = seen.merge_partition_blooms(blooms, base, M // 2, K)

@@ -173,3 +173,61 @@ def test_stream_cdx_frontier_ingest(spark, tmp_path):
         cfg.bloom_m_bits,
     )
     assert unseen.count() == 0
+
+
+def test_seen_exact_references_the_frontier(
+    spark, tmp_path, tiny_seeds, tiny_pages, tiny_robots
+):
+    """Every frontier writer ends by referencing the frontier's files as
+    seen_exact: after the bootstrap, an ordinary epoch, an epoch that
+    follows no links, a folding epoch and a CDX batch, seen_exact's
+    paths are exactly the frontier entry's, bucket files and deltas."""
+    import os
+    import time
+    from dataclasses import replace
+
+    from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
+    from hiispider_spark.sources.catalog import IcebergLike
+    from hiispider_spark.streaming.continuous import stream_cdx_frontier
+
+    cfg = EpochConfig(
+        k_per_partition=8, n_partitions=8, bloom_m_bits=1 << 17,
+        epoch_seconds=60.0, compact_every=100,
+    )
+    cat = IcebergLike(spark, str(tmp_path / "cat"))
+
+    def check(step):
+        tables = cat.manifest["tables"]
+        want = IcebergLike._entry_paths(tables["frontier"])
+        assert tables["seen_exact"]["paths"] == want, step
+
+    bootstrap(spark, cat, tiny_seeds, cfg)
+    check("bootstrap")
+    for step, ecfg, folds in [
+        ("ordinary", cfg, False),
+        ("no links", replace(cfg, follow_links=False), False),
+        ("fold", replace(cfg, compact_every=2), True),
+    ]:
+        st = run_epoch(spark, cat, tiny_pages, tiny_robots, ecfg)
+        assert ("frontier" in st["compacted"]) == folds, step
+        check(step)
+
+    cdx_dir = str(tmp_path / "idx")
+    os.makedirs(cdx_dir)
+    with open(os.path.join(cdx_dir, "a.cdxj"), "w") as f:
+        f.write("\n".join(
+            f'org,h)/p/{i} 20240101000000 {{"url": "http://h.example.org/p/{i}",'
+            f' "status": "200", "mime": "text/html", "filename": "x.warc.gz"}}'
+            for i in range(3)
+        ))
+    query, stats = stream_cdx_frontier(
+        spark, cat, cdx_dir, cfg, trigger_s=0.3, max_batches=1
+    )
+    try:
+        deadline = time.time() + 60
+        while not stats and time.time() < deadline:
+            time.sleep(0.3)
+    finally:
+        query.stop()
+    assert [s["n_inserted"] for s in stats] == [3]
+    check("cdx")

@@ -11,8 +11,12 @@ from hiispider_spark.operators.extract import (
     run_extraction,
     text_extract_col,
     text_extract_udf,
-    title_extract_udf,
 )
+
+
+def _plugin(plugin: str):
+    """The routed UDF's text field for every row run as ``plugin``."""
+    return routed_with_links_udf("html", F.lit(plugin)).getField("text")
 
 
 def test_text_extraction_byte_identical(spark, tiny_pages):
@@ -47,12 +51,12 @@ def test_links_extraction(spark, tiny_pages):
 
 
 def test_title_plugin_none_when_absent(spark, tiny_pages):
-    out = tiny_pages.limit(5).select(title_extract_udf("html").alias("t"))
+    out = tiny_pages.limit(5).select(_plugin("title").alias("t"))
     assert all(r.t is None for r in out.collect())
     df = spark.createDataFrame(
         [(b"<html><title>Hello</title></html>",)], "html binary"
     )
-    assert df.select(title_extract_udf("html").alias("t")).first().t == "Hello"
+    assert df.select(_plugin("title").alias("t")).first().t == "Hello"
 
 
 def test_utf8_robustness(spark):
@@ -170,10 +174,7 @@ def test_meta_plugin_and_column_twin(spark):
     Column twin yields the same field values."""
     import json
 
-    from hiispider_spark.operators.extract import (
-        meta_extract_cols,
-        meta_extract_udf,
-    )
+    from hiispider_spark.operators.extract import meta_extract_cols
 
     html = (
         '<html><head><title>t</title>'
@@ -188,7 +189,7 @@ def test_meta_plugin_and_column_twin(spark):
     )
     rows = {
         r.id: json.loads(r.m)
-        for r in df.select("id", meta_extract_udf("html").alias("m")).collect()
+        for r in df.select("id", _plugin("meta").alias("m")).collect()
     }
     assert rows[0] == {
         "description": "A fine page",

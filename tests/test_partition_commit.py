@@ -19,6 +19,7 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
+from hiispider_spark import schemas
 from hiispider_spark.operators import seen as seen_ops
 from hiispider_spark.operators.frontier import build_frontier
 from hiispider_spark.plans.epoch import EpochConfig, bootstrap, run_epoch
@@ -110,7 +111,9 @@ def test_page_cache_matches_extracted_history(spark, cat, tiny_pages, tiny_robot
 
 def test_filter_unseen_partitioned_is_exact(spark, tiny_seeds):
     fr = build_frontier(tiny_seeds, n_partitions=8).persist()
-    blooms = seen_ops.build_partition_blooms(fr, 1 << 17)
+    blooms = seen_ops.merge_partition_blooms(
+        schemas.empty_frame(spark, schemas.SEEN_SET), fr, 1 << 17
+    )
     seen_exact = fr.select("url_hash")
     # candidates: half seen (frontier rows), half fresh
     fresh = fr.select(

@@ -81,7 +81,7 @@ def test_vacuum_respects_cross_table_references(spark, tmp_path):
     cat.stage_append("frontier_hist", df)
     cat.commit(epoch=0)
     ref = cat.manifest["tables"]["frontier_hist"]["paths"][:]
-    cat.stage_append_ref("seen_exact", ref)
+    cat.stage_append_ref("seen_exact", "frontier_hist")
     # owner moves to a fresh snapshot (paths-form: replace by staging a
     # new overwrite)
     cat.stage_overwrite("frontier_hist", spark.createDataFrame([(3,)], "url_hash long"))

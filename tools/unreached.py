@@ -5,9 +5,11 @@ and ``tools/*.py``. Every name a root uses (a variable, an attribute or
 an imported name) is reached. A top-level ``def`` or ``class`` of
 ``hiispider_spark/`` whose name is reached reaches, in turn, every name
 its decorators, signature and body use, and so on to a fixed point.
-Names match by spelling, not by module, so a name defined twice counts
-as reached for both. Module-level statements outside a ``def`` or
-``class`` run on import and count as reached. Re-exports in package
+A top-level assignment to one plain name (``X = ...``, ``X: T = ...``)
+is a definition of that name too: it reaches what its value uses only
+once ``X`` is reached. Names match by spelling, not by module, so a
+name defined twice counts as reached for both. Other module-level
+statements run on import and count as reached. Re-exports in package
 ``__init__.py`` files do not count, and neither do docstrings, comments
 or ``tests/``.
 
@@ -29,6 +31,21 @@ ROOTS = [REPO / "__spark_entry__.py", REPO / "bench.py"] + sorted(
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
+def defined_name(node: ast.stmt) -> str | None:
+    """The name a top-level statement defines, or None."""
+    if isinstance(node, DEFS):
+        return node.name
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return None
+    if len(targets) == 1 and isinstance(targets[0], ast.Name):
+        return targets[0].id
+    return None
+
+
 def names_used(node: ast.AST) -> set[str]:
     out: set[str] = set()
     for n in ast.walk(node):
@@ -45,22 +62,22 @@ def main() -> None:
     reached: set[str] = set()
     for path in ROOTS:
         reached |= names_used(ast.parse(path.read_text()))
-    defs: list[tuple[Path, ast.AST]] = []
+    defs: list[tuple[Path, str, ast.stmt]] = []
     for path in sorted((REPO / "hiispider_spark").rglob("*.py")):
         if path.name == "__init__.py":
             continue
         for node in ast.parse(path.read_text()).body:
-            if isinstance(node, DEFS):
-                defs.append((path, node))
+            if name := defined_name(node):
+                defs.append((path, name, node))
             elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 reached |= names_used(node)
     pending = defs
-    while hit := [d for _, d in pending if d.name in reached]:
-        pending = [(p, d) for p, d in pending if d.name not in reached]
+    while hit := [d for _, n, d in pending if n in reached]:
+        pending = [(p, n, d) for p, n, d in pending if n not in reached]
         for d in hit:
             reached |= names_used(d)
-    for path, d in pending:
-        print(f"{path.relative_to(REPO)}:{d.lineno} {d.name}")
+    for path, name, d in pending:
+        print(f"{path.relative_to(REPO)}:{d.lineno} {name}")
 
 
 if __name__ == "__main__":
