@@ -30,7 +30,12 @@ Two algorithms, selected by the ``algorithm`` parameter:
   filled, so only the returned state's blocks stay;
 - convergence is detected from the SAME aggregation that builds the
   next state (label delta / edge-set delta) — one bounded ``take(1)``
-  per round, never a full collect.
+  per round, never a full collect;
+- the label path persists no edges: its edge frame is a narrow
+  projection of the pairs (a repeated edge only repeats a message to
+  the min), and each round makes one checkpoint, of the ``(id, label,
+  _old)`` aggregation, plus one ``take(1)``. The star path keeps its
+  persisted distinct edges.
 """
 
 from __future__ import annotations
@@ -111,16 +116,18 @@ def dedup_clusters(
     LSH-cluster default) or ``"star"`` (O(log² n) rounds regardless of
     diameter — the unknown-shape / chained-graph scale path).
     """
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"unknown algorithm: {algorithm!r}")
     a, b = pair_cols
+    # a narrow projection: a repeated edge only repeats a message
     edges = (
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
     )
-    edges.count()
     if algorithm == "star":
+        edges = edges.distinct().persist()
+        edges.count()
         try:
             stars, _ = _star_contract(edges, max_rounds=max_iter)
         finally:
@@ -131,42 +138,30 @@ def dedup_clusters(
         ).select(
             id_col, F.coalesce("label", F.col(id_col)).alias("cluster")
         )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    try:
-        for _ in range(max_iter):
-            msgs = edges.join(
-                labels.withColumnRenamed("id", "src"), "src"
-            ).select(F.col("dst").alias("id"), "label")
-            # one aggregation yields the new label AND whether anything
-            # changed: carry the old label alongside, compare after
-            merged = (
-                labels.withColumn("_old", F.col("label"))
-                .unionByName(msgs.withColumn("_old", F.lit(None).cast("long")))
-                .groupBy("id")
-                .agg(
-                    F.min("label").alias("label"),
-                    F.max("_old").alias("_old"),
-                )
-                .persist()
-            )
-            new_labels = merged.select("id", "label").localCheckpoint()
-            converged = not (
-                merged.filter(F.col("label") != F.col("_old")).take(1)
-            )
-            merged.unpersist()
-            frames.release(labels)  # superseded; new_labels is filled
-            labels = new_labels
-            if converged:
-                break
-        return labels.select(
-            F.col("id").alias(id_col), F.col("label").alias("cluster")
+    labels = ids.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
+    for rnd in range(max_iter):
+        msgs = edges.join(
+            labels.select(F.col("id").alias("src"), "label"), "src"
+        ).select(F.col("dst").alias("id"), "label")
+        # one aggregation yields the new label AND whether anything
+        # changed: carry the old label alongside, compare after. The
+        # checkpoint stays eager: a lazy one is filled only where take(1)
+        # scans, and the next round would read the rest through the
+        # lineage of the checkpoint released below.
+        merged = (
+            labels.select("id", "label", F.col("label").alias("_old"))
+            .unionByName(msgs.withColumn("_old", F.lit(None).cast("long")))
+            .groupBy("id")
+            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+            .localCheckpoint()
         )
-    finally:
-        edges.unpersist()
+        converged = not merged.filter(F.col("label") != F.col("_old")).take(1)
+        if rnd:
+            frames.release(labels)  # superseded; merged is filled
+        labels = merged
+        if converged:
+            break
+    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster"))
 
 
 def dedup_survivors(

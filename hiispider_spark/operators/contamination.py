@@ -9,12 +9,12 @@ instead of corpus×corpus similarity, it is corpus×(small eval set)
 membership — a fundamentally cheaper asymmetric join.
 
 Scale shape (100 TB corpus, ~10^4-10^5 eval docs):
+- Each document's distinct shingle keys are taken inside its row
+  (``array_distinct``), so neither side shuffles its shingles.
 - Eval-side distinct shingles number |eval| × ~tokens-per-doc — a few
   ×10^7 keys at worst; hashed to 8-byte longs (``key_col=xxhash64``)
-  that's hundreds of MB — broadcastable, so the corpus side streams
-  map-side with NO shuffle of corpus shingles (``broadcast_eval=True``,
-  the default). Past broadcast range, flip it off: Catalyst falls back
-  to a shuffled hash join keyed on 8-byte hashes.
+  that's hundreds of MB — broadcast, so the corpus side streams
+  map-side into the join with no shuffle before it.
 - Per-doc aggregation is map-side combinable (groupBy counts).
 - Zero Python anywhere: tokenize/shingle are the same Column
   expressions as quality.py's span dedup (one shared tokenizer across
@@ -27,19 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hiispider_spark.operators.dedup import shingles_col, tokens_col
-
-
-def _distinct_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int, key_col
-) -> DataFrame:
-    sh = df.select(
-        F.col(id_col),
-        F.explode(shingles_col(tokens_col(F.col(text_col)), n)).alias("_s"),
-    ).select(
-        id_col, (key_col(F.col("_s")) if key_col else F.col("_s")).alias("k")
-    )
-    return sh.distinct()
+from hiispider_spark.operators.dedup import explode_shingles
 
 
 def ngram_contamination(
@@ -51,7 +39,6 @@ def ngram_contamination(
     eval_text_col: str = "text",
     n: int = 8,
     key_col=None,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(doc_id, eval_id, n_shared, eval_ngrams, shared_frac) for every
     (training doc, eval doc) pair sharing ≥1 distinct n-token shingle.
@@ -60,18 +47,19 @@ def ngram_contamination(
     1.0 means the training doc contains the entire eval doc (modulo
     ordering). ``key_col`` maps shingle strings to the join key;
     default identity (oracle-twinnable), production ``F.xxhash64``.
+    Each side holds one row per id: distinct shingles are per row.
     """
-    tr = _distinct_shingles(docs, id_col, text_col, n, key_col)
-    ev = _distinct_shingles(eval_docs, eval_id_col, eval_text_col, n, key_col)
+    tr = explode_shingles(docs, id_col, text_col, n, key_col, distinct=True)
+    ev = explode_shingles(
+        eval_docs, eval_id_col, eval_text_col, n, key_col, distinct=True
+    )
     ev_tot = ev.groupBy(eval_id_col).agg(F.count("*").alias("eval_ngrams"))
-    ev_side = F.broadcast(ev) if broadcast_eval else ev
-    tot_side = F.broadcast(ev_tot) if broadcast_eval else ev_tot
     hits = (
-        tr.join(ev_side, "k")
+        tr.join(F.broadcast(ev), "k")
         .groupBy(id_col, eval_id_col)
         .agg(F.count("*").alias("n_shared"))
     )
-    return hits.join(tot_side, eval_id_col).select(
+    return hits.join(F.broadcast(ev_tot), eval_id_col).select(
         id_col,
         eval_id_col,
         "n_shared",

@@ -87,14 +87,39 @@ def tokens_col(text: Column) -> Column:
 
 def shingles_col(toks: Column, n: int) -> Column:
     """All n-token shingles as space-joined strings, in order (empty if
-    <n tokens): the one token n-gram builder (quality's bigrams, the
-    n-gram Jaccard, contamination). ``transform`` over a sliced head,
-    not ``sequence(0, size - n)``, which would count down below n
-    tokens."""
+    <n tokens). ``toks`` must be a column REFERENCE: the lambda reads it
+    once per shingle, and an expression there (``tokens_col(text)``) is
+    re-evaluated per shingle, O(T²) per document. ``transform`` over a
+    sliced head, not ``sequence(0, size - n)``, which would count down
+    below n tokens. Callers go through ``explode_shingles``."""
     head = F.slice(toks, 1, F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0)))
     return F.transform(
         head, lambda x, i: F.array_join(F.slice(toks, i + 1, n), " ")
     )
+
+
+def explode_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    key_col=None,
+    distinct: bool = False,
+) -> DataFrame:
+    """(id_col, k): one row per n-token shingle of each document — the
+    one token n-gram builder (quality's bigrams and span dedup, the
+    n-gram Jaccard, contamination). The tokens are projected into a
+    column first, so each text is split once. ``key_col`` maps each
+    shingle string to its key (identity by default); ``distinct`` keeps
+    each row's distinct keys, taken inside the row (no shuffle)."""
+    toks = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_t"))
+    sh = shingles_col(F.col("_t"), n)
+    if key_col is not None:
+        # a lambda: transform rejects varargs functions like F.xxhash64
+        sh = F.transform(sh, lambda s: key_col(s))
+    if distinct:
+        sh = F.array_distinct(sh)
+    return toks.select(id_col, F.explode(sh).alias("k"))
 
 
 def ngram_jaccard_pairs(
@@ -109,12 +134,8 @@ def ngram_jaccard_pairs(
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, sim ≥ threshold.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("t")
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(F.col("t"), n))).alias("gram"),
+    grams = explode_shingles(docs, id_col, text_col, n, distinct=True).select(
+        F.col(id_col).alias("doc_id"), F.col("k").alias("gram")
     )
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     a = grams.alias("a")

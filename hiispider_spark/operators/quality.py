@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hiispider_spark.operators.dedup import shingles_col, tokens_col
+from hiispider_spark.operators.dedup import explode_shingles, tokens_col
 from hiispider_spark.operators.textstats import quality_score_col
 
 # Gopher-inspired keep thresholds, calibrated so each one splits the
@@ -63,8 +63,7 @@ def gopher_signals(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     combinable) rather than a per-row O(n·d) higher-order-function
     scan — at 10k-token documents the HOF form is quadratic per row.
     """
-    t = F.col(text_col)
-    toks = tokens_col(t)
+    toks = tokens_col(F.col(text_col))
     narrow = docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(toks).alias("n_tokens"),
@@ -75,9 +74,8 @@ def gopher_signals(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
             6,
         ).alias("frac_dup_words"),
     )
-    bg = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(tokens_col(t), 2)).alias("bigram"),
+    bg = explode_shingles(docs, id_col, text_col, 2).select(
+        F.col(id_col).alias("doc_id"), F.col("k").alias("bigram")
     )
     top = (
         bg.groupBy("doc_id", "bigram")
@@ -121,11 +119,9 @@ def span_dup_frac(
     Shape: explode → count(*) OVER (PARTITION BY key) → groupBy doc —
     two shuffles, both map-side combinable, zero Python.
     """
-    t = F.col(text_col)
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(tokens_col(t), n)).alias("_s"),
-    ).select("doc_id", (key_col(F.col("_s")) if key_col else F.col("_s")).alias("k"))
+    sh = explode_shingles(docs, id_col, text_col, n, key_col).select(
+        F.col(id_col).alias("doc_id"), "k"
+    )
     cnt = F.count("*").over(Window.partitionBy("k"))
     per_span = sh.select("doc_id", (cnt > 1).cast("int").alias("dup"))
     return per_span.groupBy("doc_id").agg(

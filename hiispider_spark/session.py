@@ -26,6 +26,7 @@ def get_spark(
 ) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -67,8 +68,14 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         # local mode: driver heap is ALL memory. Wide rows (html bytes)
         # need ~task_concurrency × partition_bytes of headroom — 8g with
-        # 32 tasks of 200MB+ partitions OOMs; default generously.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # 32 tasks of 200MB+ partitions OOMs; default generously, but to
+        # a quarter of physical RAM at most: the JVM grows its heap
+        # toward the cap rather than collecting, and a cap above RAM
+        # gets the process OOM-killed.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", f"{min(48 << 10, ram_mb // 4)}m"),
+        )
     )
     # Shuffle/spill scratch on the fastest local device (guide §6:
     # shuffle bytes are disk bytes). This sandbox's only disk is one

@@ -11,12 +11,10 @@ SF_DIR = "/root/testdata/sf0.001"
 # tiny corpus for fast operator tests (n_hosts floors at 10)
 TINY = SynthConfig(n_pages=400, n_docs=500)
 
-# The session factory's default driver heap is 48g. In local mode the
-# JVM grows its heap toward that cap rather than collecting, so on a
-# 16 GB host the kernel OOM-kills the suite's JVM part-way through (seen
-# at the test that starts a second session in a subprocess). The test
-# corpora are tiny; 6g is ample. setdefault keeps an explicit
-# SPARK_DRIVER_MEM, and subprocess sessions inherit the value.
+# The session factory's default driver heap is a quarter of physical
+# RAM. The suite pins 6g so that it runs with the same heap on every
+# host; the test corpora are tiny, 6g is ample. setdefault keeps an
+# explicit SPARK_DRIVER_MEM, and subprocess sessions inherit the value.
 os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 

@@ -43,19 +43,41 @@ def test_chains_converge_to_component_min(spark):
     assert got == {i: i % 10 for i in range(100)}
 
 
-def test_matches_union_find_on_arbitrary_graph(spark):
-    n = 200
-    # deterministic pseudo-random edge set incl. merges of chains
-    edges = [((i * 17) % n, (i * 31 + 7) % n) for i in range(0, n, 3)]
-    edges = [(a, b) for a, b in edges if a != b]
-    want = _union_find(n, edges)
-    ids = spark.range(n).toDF("doc_id")
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+N_ARBITRARY = 200
+# deterministic pseudo-random edge set incl. merges of chains
+ARBITRARY = [
+    ((i * 17) % N_ARBITRARY, (i * 31 + 7) % N_ARBITRARY)
+    for i in range(0, N_ARBITRARY, 3)
+]
+ARBITRARY = [(a, b) for a, b in ARBITRARY if a != b]
+
+
+def _assert_matches_union_find(spark, pairs, algorithm):
+    ids = spark.range(N_ARBITRARY).toDF("doc_id")
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
         r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, pairs).collect()
+        for r in cl.dedup_clusters(ids, df, algorithm=algorithm).collect()
     }
-    assert got == want
+    assert got == _union_find(N_ARBITRARY, pairs)
+
+
+def test_matches_union_find_on_arbitrary_graph(spark):
+    _assert_matches_union_find(spark, ARBITRARY, "label")
+
+
+@pytest.mark.parametrize("algorithm", ["label", "star"])
+def test_messy_pairs_match_union_find(spark, algorithm):
+    """The label path propagates over the raw pairs, with no dedup of
+    edges: repeated edges, both orientations of one edge and self-loops
+    must give the components of the clean edge set."""
+    messy = (
+        ARBITRARY
+        + [(b, a) for a, b in ARBITRARY[::2]]
+        + ARBITRARY[::5]
+        + [(i, i) for i in range(0, N_ARBITRARY, 11)]
+    )
+    _assert_matches_union_find(spark, messy, algorithm)
 
 
 def test_singletons_and_empty_pairs(spark):
@@ -85,17 +107,7 @@ def test_survivors_by_quality_and_representative(spark):
 
 
 def test_star_matches_union_find_on_arbitrary_graph(spark):
-    n = 200
-    edges = [((i * 17) % n, (i * 31 + 7) % n) for i in range(0, n, 3)]
-    edges = [(a, b) for a, b in edges if a != b]
-    want = _union_find(n, edges)
-    ids = spark.range(n).toDF("doc_id")
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, pairs, algorithm="star").collect()
-    }
-    assert got == want
+    _assert_matches_union_find(spark, ARBITRARY, "star")
 
 
 def test_star_beats_diameter_on_long_chain(spark):

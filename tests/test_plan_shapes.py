@@ -298,3 +298,74 @@ print("RESTART-OK")
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "RESTART-OK" in out.stdout
+
+
+def _nodes(plan) -> list:
+    """Every node of a JVM plan tree, depth first."""
+    out = [plan]
+    ch = plan.children()
+    for i in range(ch.size()):
+        out += _nodes(ch.apply(i))
+    return out
+
+
+def test_shingle_generators_split_no_text(spark):
+    """Every shingle explode reads a projected token column: a
+    ``split(`` inside the Generate's lambda re-tokenizes the whole text
+    once per shingle, O(T²) per document."""
+    from hiispider_spark.operators import contamination, dedup, quality
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d e f g h i j"), (1, "a b c d x y z")],
+        "doc_id long, text string",
+    )
+    ev = docs.withColumnRenamed("doc_id", "eval_id")
+    for df in [
+        quality.gopher_signals(docs, "doc_id", "text"),
+        quality.span_dup_frac(docs, "doc_id", "text"),
+        contamination.ngram_contamination(docs, ev, n=4),
+        dedup.ngram_jaccard_pairs(docs, "doc_id", "text"),
+    ]:
+        gens = [
+            n for n in _nodes(df._jdf.queryExecution().optimizedPlan())
+            if n.nodeName() == "Generate"
+        ]
+        assert gens
+        for g in gens:
+            assert "split(" not in g.generator().toString()
+
+
+def test_decontaminate_corpus_side_never_shuffles(spark):
+    """Between each corpus scan and the first broadcast join above it
+    there is no Exchange: a document's distinct shingles are taken
+    inside its row, and the eval side is broadcast."""
+    from hiispider_spark.operators import contamination
+
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame(
+        [(9, "quick brown fox jumps over")], "eval_id long, text string"
+    )
+    plan = contamination.decontaminate(docs, ev, n=4)._jdf.queryExecution()
+    plan = plan.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the current plan, with its Exchanges
+
+    def corpus_paths(node, above):
+        ch = node.children()
+        if ch.size() == 0:
+            if "doc_id" in node.output().toString():
+                yield [node, *above]
+            return
+        for i in range(ch.size()):
+            yield from corpus_paths(ch.apply(i), [node, *above])
+
+    paths = list(corpus_paths(plan, []))
+    assert paths
+    for path in paths:
+        names = [n.nodeName() for n in path]
+        assert "BroadcastHashJoin" in names, names
+        below = names[: names.index("BroadcastHashJoin")]
+        assert "Exchange" not in below, names
