@@ -620,9 +620,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pairs → clusters: planted chains (doc d ~ d+50), diameter
         # n/50 − 1, so convergence is genuinely iterative; the true
         # component min is SQL-expressible as min over doc_id % 50.
-        # Star contraction: round count is O(log² n), not diameter —
-        # this query stays cheap at ANY sf (the label-propagation
-        # algorithm is exercised by dedup_survivors and pytest)
+        # Label propagation runs diameter + 1 rounds: 10 at sf0.01,
+        # 100 at sf0.1
         from hiispider_spark.operators import clusters as cl
 
         docs = _docs(spark, sf).select("doc_id")
@@ -630,16 +629,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             docs.select(F.col("doc_id").alias("doc_b")),
             F.col("doc_b") == F.col("doc_a") + 50,
         )
-        return cl.dedup_clusters(docs, pairs, max_iter=40, algorithm="star")
+        return cl.dedup_clusters(docs, pairs)
 
     q["dedup_clusters"] = q_dedup_clusters
 
     def q_dedup_survivors(spark, sf):
         # clusters + quality → one keep per cluster (the actual drop
-        # decision a dedup pipeline emits). Star contraction: the
-        # planted chains' diameter grows with sf (label propagation
-        # measured 39 s vs 11 s at sf0.1); the label algorithm is
-        # pinned by tests/test_clusters.py instead
+        # decision a dedup pipeline emits), over the same planted
+        # chains as dedup_clusters
         from hiispider_spark.operators import clusters as cl
 
         docs = _docs(spark, sf)
@@ -648,7 +645,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             idd.select(F.col("doc_id").alias("doc_b")),
             F.col("doc_b") == F.col("doc_a") + 50,
         )
-        clusters = cl.dedup_clusters(idd, pairs, max_iter=40, algorithm="star")
+        clusters = cl.dedup_clusters(idd, pairs)
         scored = docs.select(
             "doc_id", F.round(ts.quality_score_col(F.col("text")), 6).alias("quality")
         )
@@ -659,7 +656,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_corpus_prep(spark, sf):
         # the training-data pipeline END-TO-END as one declarative
         # DAG: Gopher keep-filter → exact dedup → n-gram-Jaccard
-        # near-dup pairs → connected components (star) → best-quality
+        # near-dup pairs → connected components → best-quality
         # survivor per cluster → per-language stratified sample.
         # threshold 0.08 keeps a sparse real pair graph (~12 edges
         # over ~80 kept docs at sf0.01 — several multi-doc clusters,
@@ -682,10 +679,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             uniq, "doc_id", "text", n=2, threshold=0.08
         )
         clusters = cl.dedup_clusters(
-            uniq.select("doc_id"),
-            pairs.select("doc_a", "doc_b"),
-            max_iter=40,
-            algorithm="star",
+            uniq.select("doc_id"), pairs.select("doc_a", "doc_b")
         )
         scored = uniq.select(
             "doc_id",

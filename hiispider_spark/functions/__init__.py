@@ -3,7 +3,6 @@ host extraction, boolean coercion (SURVEY.md §2 O-8, O-12..O-16)."""
 
 from hiispider_spark.functions.canon import (  # noqa: F401
     canonicalize_url,
-    canonicalize_udf,
     canonical_url_col,
     host_col,
     path_col,

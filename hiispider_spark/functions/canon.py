@@ -14,15 +14,12 @@ frontier entry:
 - query parameters sorted by key (stable sort, preserves duplicates)
 - empty path normalized to ``/``
 
-Three implementations, all semantically identical (tests enforce it):
+Two implementations, semantically identical (tests enforce it):
 
 1. :func:`canonicalize_url` — pure Python, the executable spec.
-2. :func:`canonicalize_udf` — Arrow ``pandas_udf`` batching (1) for use
-   inside the pipeline (no per-row Python from Spark's perspective:
-   one Python invocation per Arrow batch).
-3. :func:`canonical_url_col` — pure Column-expression variant (JVM-side,
-   WholeStageCodegen) covering the subset of rules that matter for the
-   synthetic corpus; used on the hot path and by oracle-checked queries.
+2. :func:`canonical_url_col` — pure Column-expression variant (JVM-side,
+   WholeStageCodegen); used on the hot path and by oracle-checked
+   queries.
 """
 
 from __future__ import annotations
@@ -69,12 +66,6 @@ def canonicalize_url(url: str) -> str:
     return urlunsplit((scheme, netloc, path, query, ""))
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched canonicalization (one Python call per ~10k rows)."""
-    return urls.map(canonicalize_url)
-
-
 def _sorted_query_col(query: Column) -> Column:
     """Query string with params stable-sorted by key (duplicates keep
     their original relative order — exactly the pure-Python spec's
@@ -110,7 +101,8 @@ def canonical_url_col(url: Column | str) -> Column:
     :80/:443 strip, empty-path → "/", and query params stable-sorted by
     key — so the HOT PATH (frontier identity, link merge) collapses
     query-permuted spellings exactly like :func:`canonicalize_url`.
-    test_canon cross-checks all three impls, including query URLs.
+    test_canon cross-checks it against the Python spec, including query
+    URLs.
     (The DuckDB oracle twin omits query sorting — the synthetic corpus
     carries no query strings, so the twin stays byte-equivalent there.)
 

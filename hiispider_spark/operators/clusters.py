@@ -5,37 +5,42 @@ an actual dedup pipeline needs CLUSTERS and a keep/drop decision per
 document: connected components over the pair graph, then one survivor
 per component. This module finishes that pipeline.
 
-Two algorithms, selected by the ``algorithm`` parameter:
+One algorithm: minimum-label propagation (the standard Spark-shaped
+CC — GraphFrames/GraphX is the same fixpoint), run until no label
+changes. Each vertex starts labeled with itself; every round each
+vertex takes the min of its own and its neighbors' labels. Labels only
+decrease, and the component min travels one hop per round, so the loop
+ends after diameter + 1 rounds (the last one only confirms) and needs
+no round cap: a capped loop would return labels that are not yet the
+component min. LSH near-dup clusters are dense (diameters ~1-3), so
+this is a handful of rounds; a long chain of pairs costs one round per
+hop.
 
-- ``"label"`` (default): minimum-label propagation (the standard
-  Spark-shaped CC — GraphFrames/GraphX is the same fixpoint). Each
-  vertex starts labeled with itself; every iteration each vertex takes
-  the min of its own and its neighbors' labels. Round count = component
-  DIAMETER — the right default for LSH near-dup graphs, whose clusters
-  are dense (LSH emits most intra-cluster pairs, diameters ~1-3).
-- ``"star"``: alternating Large-Star/Small-Star contraction (Kiveris,
-  Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
-  MapReduce and Beyond", SoCC 2014 — public algorithm, implemented
-  fresh). Round count is O(log² n) REGARDLESS of diameter — the scale
-  path when the pair graph's shape is unknown (e.g. chained
-  boilerplate families), where propagation's diameter bound explodes.
+There is no logarithmic-round path (Large-Star/Small-Star
+contraction) and no shortcut step (``label ← min(label, label[label])``).
+The shortcut joins two frames built from the same round's checkpoint
+(Large-Star's join of the edges with their per-vertex minima has the
+same shape), and a checkpoint keeps its origin's size estimate, so
+Catalyst's estimate for that self-join squares every round: a
+shortcut prototype reached a 2 850-digit estimate by round 9 of a
+60-node path, and on a random 400-node graph the driver ran out of heap
+in that BigInt arithmetic. The shortcut also saved few rounds there.
+The price of one algorithm is long chains: a path of pairs with
+diameter 99 takes 100 rounds. LSH pair graphs are not shaped like that.
 
-100 TB shape (both):
+100 TB shape:
 - state rows are (long, long) — map-side-combinable min-aggregations,
   nothing wider;
-- per-iteration ``localCheckpoint`` truncates lineage exactly like the
+- the edge frame is a narrow projection of the pairs, never persisted
+  (a repeated edge only repeats a message to the min);
+- per-round ``localCheckpoint`` truncates lineage exactly like the
   deep-iteration path in linkgraph.py (r2 lesson: unpersisted
   iterative lineage re-plans under AQE and crawls); each superseded
   checkpoint is released (``frames.release``) once its successor is
   filled, so only the returned state's blocks stay;
 - convergence is detected from the SAME aggregation that builds the
-  next state (label delta / edge-set delta) — one bounded ``take(1)``
-  per round, never a full collect;
-- the label path persists no edges: its edge frame is a narrow
-  projection of the pairs (a repeated edge only repeats a message to
-  the min), and each round makes one checkpoint, of the ``(id, label,
-  _old)`` aggregation, plus one ``take(1)``. The star path keeps its
-  persisted distinct edges.
+  next state (label delta) — one checkpoint plus one bounded
+  ``take(1)`` per round, never a full collect.
 """
 
 from __future__ import annotations
@@ -46,78 +51,19 @@ from pyspark.sql import functions as F
 from hiispider_spark import frames
 
 
-def _star_contract(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
-    """Alternating Large-Star / Small-Star until the oriented edge set
-    is stable. ``edges``: symmetric (src, dst), no self-loops. Returns
-    (converged oriented edges (child > root rows as (src=child,
-    dst=root)), rounds used). At convergence every component is a star
-    centered on its minimum id.
-    """
-    # orient (larger, smaller); the round body re-symmetrizes for the
-    # large-star step
-    cur = (
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
-        sym = cur.unionByName(
-            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # Large-Star: every neighbor v > u connects to m = min(Γ(u)∪{u})
-        lmins = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        large = (
-            sym.join(lmins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-        # Small-Star on (larger u → smaller v) orientation: u and all
-        # its smaller neighbors connect to m = min(Γ<(u) ∪ {u})
-        smins = large.groupBy("src").agg(F.min("dst").alias("m"))
-        nxt = (
-            large.join(smins, "src")
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(smins.select(F.col("src"), F.col("m").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        changed = bool(
-            nxt.exceptAll(cur).take(1) or cur.exceptAll(nxt).take(1)
-        )
-        frames.release(cur)  # superseded; nxt is already filled
-        cur = nxt
-        if not changed:
-            break
-    return cur, rounds
-
-
 def dedup_clusters(
     ids: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    max_iter: int = 20,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(doc_id, cluster) — cluster = min doc_id of the connected
     component; singletons keep their own id.
 
     ``ids``: one row per document (the universe). ``pairs``: duplicate
-    edges, any orientation, duplicates tolerated. ``algorithm``:
-    ``"label"`` (diameter-bound rounds, cheapest per round — the dense
-    LSH-cluster default) or ``"star"`` (O(log² n) rounds regardless of
-    diameter — the unknown-shape / chained-graph scale path).
+    edges, any orientation, duplicates and self-loops tolerated. Runs
+    diameter + 1 rounds of label propagation.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     a, b = pair_cols
     # a narrow projection: a repeated edge only repeats a message
     edges = (
@@ -125,21 +71,9 @@ def dedup_clusters(
         .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
     )
-    if algorithm == "star":
-        edges = edges.distinct().persist()
-        edges.count()
-        try:
-            stars, _ = _star_contract(edges, max_rounds=max_iter)
-        finally:
-            edges.unpersist()
-        roots = stars.groupBy("src").agg(F.min("dst").alias("label"))
-        return ids.select(F.col(id_col)).join(
-            roots.withColumnRenamed("src", id_col), id_col, "left"
-        ).select(
-            id_col, F.coalesce("label", F.col(id_col)).alias("cluster")
-        )
     labels = ids.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    for rnd in range(max_iter):
+    prev, converged = None, False
+    while not converged:
         msgs = edges.join(
             labels.select(F.col("id").alias("src"), "label"), "src"
         ).select(F.col("dst").alias("id"), "label")
@@ -156,11 +90,8 @@ def dedup_clusters(
             .localCheckpoint()
         )
         converged = not merged.filter(F.col("label") != F.col("_old")).take(1)
-        if rnd:
-            frames.release(labels)  # superseded; merged is filled
-        labels = merged
-        if converged:
-            break
+        frames.release(prev)  # superseded; merged is filled
+        labels = prev = merged
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster"))
 
 

@@ -51,15 +51,15 @@ def ngram_contamination(
     """
     tr = explode_shingles(docs, id_col, text_col, n, key_col, distinct=True)
     ev = explode_shingles(
-        eval_docs, eval_id_col, eval_text_col, n, key_col, distinct=True
+        eval_docs, eval_id_col, eval_text_col, n, key_col, distinct=True,
+        size_col="eval_ngrams",
     )
-    ev_tot = ev.groupBy(eval_id_col).agg(F.count("*").alias("eval_ngrams"))
     hits = (
         tr.join(F.broadcast(ev), "k")
-        .groupBy(id_col, eval_id_col)
+        .groupBy(id_col, eval_id_col, "eval_ngrams")
         .agg(F.count("*").alias("n_shared"))
     )
-    return hits.join(F.broadcast(ev_tot), eval_id_col).select(
+    return hits.select(
         id_col,
         eval_id_col,
         "n_shared",

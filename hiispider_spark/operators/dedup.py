@@ -105,13 +105,15 @@ def explode_shingles(
     n: int,
     key_col=None,
     distinct: bool = False,
+    size_col: str | None = None,
 ) -> DataFrame:
-    """(id_col, k): one row per n-token shingle of each document — the
-    one token n-gram builder (quality's bigrams and span dedup, the
-    n-gram Jaccard, contamination). The tokens are projected into a
-    column first, so each text is split once. ``key_col`` maps each
-    shingle string to its key (identity by default); ``distinct`` keeps
-    each row's distinct keys, taken inside the row (no shuffle)."""
+    """(id_col, [size_col,] k): one row per n-token shingle of each
+    document — the one token n-gram builder (quality's bigrams and span
+    dedup, the n-gram Jaccard, contamination). The tokens are projected
+    into a column first, so each text is split once. ``key_col`` maps
+    each shingle string to its key (identity by default); ``distinct``
+    keeps each row's distinct keys, taken inside the row (no shuffle);
+    ``size_col`` carries each document's key count on its rows."""
     toks = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_t"))
     sh = shingles_col(F.col("_t"), n)
     if key_col is not None:
@@ -119,7 +121,17 @@ def explode_shingles(
         sh = F.transform(sh, lambda s: key_col(s))
     if distinct:
         sh = F.array_distinct(sh)
-    return toks.select(id_col, F.explode(sh).alias("k"))
+    keys = toks.select(id_col, sh.alias("_k"))
+    cols = [id_col]
+    if size_col is not None:
+        keys = keys.withColumn(size_col, F.size("_k").cast("long"))
+        cols.append(size_col)
+    # explode_outer, then drop its null row: a plain explode of a column
+    # makes Catalyst infer size(_k) > 0 and push that filter below the
+    # projections, where it would rebuild every shingle from the text
+    return keys.select(*cols, F.explode_outer("_k").alias("k")).filter(
+        F.col("k").isNotNull()
+    )
 
 
 def ngram_jaccard_pairs(
@@ -134,22 +146,20 @@ def ngram_jaccard_pairs(
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, sim ≥ threshold.
     """
-    grams = explode_shingles(docs, id_col, text_col, n, distinct=True).select(
-        F.col(id_col).alias("doc_id"), F.col("k").alias("gram")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
+    grams = explode_shingles(
+        docs, id_col, text_col, n, distinct=True, size_col="n_grams"
+    ).select(F.col(id_col).alias("doc_id"), "n_grams", F.col("k").alias("gram"))
     a = grams.alias("a")
     b = grams.alias("b")
-    inter = (
-        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_grams").alias("nb"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n_grams").alias("na"),
+            F.col("b.n_grams").alias("nb"),
+        )
+        .agg(F.count("*").alias("n_inter"))
         .withColumn(
             "jaccard",
             F.round(

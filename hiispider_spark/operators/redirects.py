@@ -25,8 +25,7 @@ rounds. This uses POINTER DOUBLING: state row (src, cur, hops) where
 ``cur`` is the node reached after following up to 2^r hops; each round
 self-joins the state with itself as a jump map (``f_{r+1}(x) =
 f_r(f_r(x))``), so ``max_hops`` is covered in ceil(log2(max_hops))
-rounds — same logarithmic-round discipline as the star contraction in
-clusters.py. Per round: one shuffle hash join on the current node,
+rounds. Per round: one shuffle hash join on the current node,
 state rows stay (string, string, int); ``localCheckpoint`` truncates
 iterative lineage (r2 lesson), and each superseded round's checkpoint
 is released once the next one is filled. At 10^10 the join key becomes

@@ -53,16 +53,24 @@ def punct_ratio_col(text: Column) -> Column:
     )
 
 
-def mean_word_len_col(text: Column) -> Column:
-    toks = tokens_col(text)
+# The token statistics take an optional precomputed token array:
+# ``toks`` = ``tokens_col(text)``, ``low_toks`` = ``tokens_col(F.lower(
+# text))``. ``document_profile`` projects the two arrays once and feeds
+# every statistic from them; without one, a helper tokenizes ``text``.
+
+
+def mean_word_len_col(text: Column, toks: Column | None = None) -> Column:
+    toks = tokens_col(text) if toks is None else toks
     total = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
     return F.round(total / F.greatest(F.size(toks), F.lit(1)), 6)
 
 
-def stopword_ratio_col(text: Column, lang: str = "en") -> Column:
-    toks = tokens_col(F.lower(text))
+def stopword_ratio_col(
+    text: Column, lang: str = "en", low_toks: Column | None = None
+) -> Column:
+    toks = tokens_col(F.lower(text)) if low_toks is None else low_toks
     hits = F.size(
         F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS[lang]))
     )
@@ -72,21 +80,25 @@ def stopword_ratio_col(text: Column, lang: str = "en") -> Column:
 def quality_score_col(text: Column) -> Column:
     """Composite [0,1] quality heuristic: long enough, words not too
     short/long, low punctuation noise. Deterministic and SQL-twinnable."""
-    n_tok = token_count_col(text)
+    return _quality_score(
+        token_count_col(text), mean_word_len_col(text), punct_ratio_col(text)
+    )
+
+
+def _quality_score(n_tok: Column, wl: Column, punct: Column) -> Column:
     len_ok = F.least(n_tok / F.lit(20.0), F.lit(1.0))
-    wl = mean_word_len_col(text)
     wl_ok = F.when((wl >= 3) & (wl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
-    punct_ok = F.lit(1.0) - F.least(punct_ratio_col(text) * 5, F.lit(1.0))
+    punct_ok = F.lit(1.0) - F.least(punct * 5, F.lit(1.0))
     return F.round((len_ok + wl_ok + punct_ok) / 3.0, 6)
 
 
-def lang_guess_col(text: Column) -> Column:
+def lang_guess_col(text: Column, low_toks: Column | None = None) -> Column:
     """argmax over per-language stopword hit counts; 'und' if all zero.
 
     Ties break by language code order (deterministic; matches the SQL
     twin's CASE chain).
     """
-    toks = tokens_col(F.lower(text))
+    toks = tokens_col(F.lower(text)) if low_toks is None else low_toks
     scores = {
         lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
         for lang, words in LANG_STOPWORDS.items()
@@ -99,7 +111,7 @@ def lang_guess_col(text: Column) -> Column:
     return out
 
 
-def fingerprint_col(text: Column) -> Column:
+def fingerprint_col(text: Column, toks: Column | None = None) -> Column:
     """Rolling polynomial hash over word values (Rabin-Karp style):
     word value = ascii(first char) + length; acc = (acc*31 + v) mod p.
 
@@ -107,7 +119,7 @@ def fingerprint_col(text: Column) -> Column:
     and the modulus keeps every intermediate within int64.
     """
     vals = F.transform(
-        tokens_col(text),
+        tokens_col(text) if toks is None else toks,
         lambda t: (F.ascii(F.substring(t, 1, 1)) + F.length(t)).cast("long"),
     )
     return F.aggregate(
@@ -119,19 +131,35 @@ def fingerprint_col(text: Column) -> Column:
 
 def document_profile(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One row per document with every text statistic — the shape a
-    quality-filtering pipeline consumes."""
+    quality-filtering pipeline consumes. Each text is split twice (as
+    is and lowered), not once per statistic: the token arrays are
+    projected into columns and every statistic reads those."""
     t = F.col(text_col)
-    return docs.select(
+    toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        token_count_col(t).alias("n_tokens"),
+        t.alias("_text"),
+        tokens_col(t).alias("_tok"),
+        tokens_col(F.lower(t)).alias("_low"),
+    )
+    t, tok, low = F.col("_text"), F.col("_tok"), F.col("_low")
+    stats = toks.select(
+        "doc_id",
+        F.size(tok).alias("n_tokens"),
         pretoken_count_col(t).alias("n_pretokens"),
         char_count_col(t).alias("n_chars"),
         punct_ratio_col(t).alias("punct_ratio"),
-        mean_word_len_col(t).alias("mean_word_len"),
-        stopword_ratio_col(t, "en").alias("stopword_ratio_en"),
-        quality_score_col(t).alias("quality"),
-        lang_guess_col(t).alias("lang_guess"),
-        fingerprint_col(t).alias("fingerprint"),
+        mean_word_len_col(t, tok).alias("mean_word_len"),
+        stopword_ratio_col(t, "en", low).alias("stopword_ratio_en"),
+        lang_guess_col(t, low).alias("lang_guess"),
+        fingerprint_col(t, tok).alias("fingerprint"),
+    )
+    quality = _quality_score(
+        F.col("n_tokens"), F.col("mean_word_len"), F.col("punct_ratio")
+    )
+    return stats.select(
+        "doc_id", "n_tokens", "n_pretokens", "n_chars", "punct_ratio",
+        "mean_word_len", "stopword_ratio_en", quality.alias("quality"),
+        "lang_guess", "fingerprint",
     )
 
 

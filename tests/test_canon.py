@@ -1,4 +1,4 @@
-"""URL canonicalization — table-driven spec + three-impl equivalence."""
+"""URL canonicalization — table-driven spec + Column/Python equivalence."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from hiispider_spark.functions.canon import (
     canonical_url_col,
-    canonicalize_udf,
     canonicalize_url,
 )
 
@@ -40,16 +39,10 @@ def test_idempotent():
         assert canonicalize_url(expected) == expected
 
 
-def test_udf_matches_spec(spark):
-    df = spark.createDataFrame([(r,) for r, _ in CASES], "url string")
-    got = [r.c for r in df.select(canonicalize_udf("url").alias("c")).collect()]
-    assert got == [e for _, e in CASES]
-
-
 def test_column_expr_matches_spec(spark):
-    # the Column twin now covers the full spec including query-param
-    # stable sorting (leading/trailing whitespace is the UDF's job —
-    # frontier URLs arrive pre-stripped)
+    # the Column twin covers the full spec including query-param
+    # stable sorting (only the Python spec strips leading/trailing
+    # whitespace — frontier URLs arrive pre-stripped)
     subset = [(r, e) for r, e in CASES if r == r.strip()]
     df = spark.createDataFrame(subset, "url string, expected string")
     bad = df.filter(canonical_url_col(F.col("url")) != F.col("expected"))
@@ -79,15 +72,13 @@ def test_column_expr_matches_python_on_query_urls(spark):
 
 
 def test_three_impls_agree_on_corpus(spark, tiny_seeds):
-    df = tiny_seeds.select(
-        "url",
-        canonicalize_udf("url").alias("a"),
-        canonical_url_col(F.col("url")).alias("b"),
-    )
-    assert df.filter(F.col("a") != F.col("b")).count() == 0
-    rows = df.collect()
+    # the Column product against the Python spec, row by row
+    rows = tiny_seeds.select(
+        "url", canonical_url_col(F.col("url")).alias("c")
+    ).collect()
+    assert rows
     for r in rows:
-        assert r.a == canonicalize_url(r.url)
+        assert r.c == canonicalize_url(r.url)
 
 
 def test_idn_host_normalization():

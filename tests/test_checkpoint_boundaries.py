@@ -184,10 +184,9 @@ def _assert_keeps_only_what_result_reads(spark, build):
     return out
 
 
-@pytest.mark.parametrize("algorithm", ["label", "star"])
-def test_dedup_clusters_releases_superseded_checkpoints(spark, algorithm):
-    # a 12-node path: label propagation runs 11 rounds, star contraction
-    # several — each round supersedes the previous checkpoint
+def test_dedup_clusters_releases_superseded_checkpoints(spark):
+    # a 12-node path: label propagation runs 12 rounds, each of which
+    # supersedes the previous checkpoint
     n = 12
     ids = spark.range(n).toDF("doc_id")
     pairs = spark.range(n - 1).toDF("doc_a").select(
@@ -195,7 +194,7 @@ def test_dedup_clusters_releases_superseded_checkpoints(spark, algorithm):
     )
     out = _assert_keeps_only_what_result_reads(
         spark,
-        lambda: cl.dedup_clusters(ids, pairs, algorithm=algorithm),
+        lambda: cl.dedup_clusters(ids, pairs),
     )
     assert {r.cluster for r in out.collect()} == {0}
 

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-import pytest
+import random
+
 from pyspark.sql import functions as F
 
 from hiispider_spark.operators import clusters as cl
@@ -52,32 +53,45 @@ ARBITRARY = [
 ARBITRARY = [(a, b) for a, b in ARBITRARY if a != b]
 
 
-def _assert_matches_union_find(spark, pairs, algorithm):
-    ids = spark.range(N_ARBITRARY).toDF("doc_id")
+def _assert_matches_union_find(spark, pairs, n=N_ARBITRARY):
+    ids = spark.range(n).toDF("doc_id")
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
         r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, df, algorithm=algorithm).collect()
+        for r in cl.dedup_clusters(ids, df).collect()
     }
-    assert got == _union_find(N_ARBITRARY, pairs)
+    assert got == _union_find(n, pairs)
 
 
 def test_matches_union_find_on_arbitrary_graph(spark):
-    _assert_matches_union_find(spark, ARBITRARY, "label")
+    _assert_matches_union_find(spark, ARBITRARY)
 
 
-@pytest.mark.parametrize("algorithm", ["label", "star"])
-def test_messy_pairs_match_union_find(spark, algorithm):
-    """The label path propagates over the raw pairs, with no dedup of
-    edges: repeated edges, both orientations of one edge and self-loops
-    must give the components of the clean edge set."""
+def test_messy_pairs_match_union_find(spark):
+    """Propagation runs over the raw pairs, with no dedup of edges:
+    repeated edges, both orientations of one edge and self-loops must
+    give the components of the clean edge set."""
     messy = (
         ARBITRARY
         + [(b, a) for a, b in ARBITRARY[::2]]
         + ARBITRARY[::5]
         + [(i, i) for i in range(0, N_ARBITRARY, 11)]
     )
-    _assert_matches_union_find(spark, messy, algorithm)
+    _assert_matches_union_find(spark, messy)
+
+
+def test_random_graph_matches_union_find(spark):
+    # 400 nodes, 300 random edges: a sparse graph whose largest
+    # component needs 28 rounds, more than any fixed cap of 20
+    rng = random.Random(3)
+    pairs = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
+    _assert_matches_union_find(spark, pairs, n=400)
+
+
+def test_long_path_matches_union_find(spark):
+    # a 30-node path: diameter 29, so label 0 needs 29 rounds to reach
+    # node 29 — the loop must run to convergence, not to a round count
+    _assert_matches_union_find(spark, [(i, i + 1) for i in range(29)], n=30)
 
 
 def test_singletons_and_empty_pairs(spark):
@@ -104,71 +118,3 @@ def test_survivors_by_quality_and_representative(spark):
         for r in cl.dedup_survivors(docs, clusters).collect()
     }
     assert rep == {0: True, 1: False, 2: True, 3: False}
-
-
-def test_star_matches_union_find_on_arbitrary_graph(spark):
-    _assert_matches_union_find(spark, ARBITRARY, "star")
-
-
-def test_star_beats_diameter_on_long_chain(spark):
-    # path graph of 256 nodes: diameter 255. Label propagation needs
-    # 255 rounds; star contraction must land in O(log^2 n) — well
-    # under 20 — and still produce the exact component min everywhere.
-    n = 256
-    ids = spark.range(n).toDF("doc_id")
-    pairs = (
-        spark.range(n - 1)
-        .toDF("doc_a")
-        .select("doc_a", (F.col("doc_a") + 1).alias("doc_b"))
-    )
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, pairs, max_iter=20, algorithm="star").collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-    # round-count evidence via the internal contraction
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    _, rounds = cl._star_contract(edges, max_rounds=30)
-    assert rounds <= 12, rounds
-
-
-def test_star_singletons_and_empty(spark):
-    ids = spark.range(5).toDF("doc_id")
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, empty, algorithm="star").collect()
-    }
-    assert got == {i: i for i in range(5)}
-
-
-def test_unknown_algorithm_raises(spark):
-    ids = spark.range(2).toDF("doc_id")
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    with pytest.raises(ValueError):
-        cl.dedup_clusters(ids, empty, algorithm="bogus")
-
-
-def test_max_iter_guard(spark):
-    # chain of diameter 9 with max_iter=3: must NOT converge to the
-    # component min everywhere (proves iterations actually bound work)
-    ids = spark.range(10).toDF("doc_id")
-    pairs = (
-        spark.range(9)
-        .toDF("doc_a")
-        .select("doc_a", (F.col("doc_a") + 1).alias("doc_b"))
-    )
-    got = {
-        r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, pairs, max_iter=3).collect()
-    }
-    assert got[9] != 0  # label 0 cannot travel 9 hops in 3 iterations
-    full = {
-        r["doc_id"]: r["cluster"]
-        for r in cl.dedup_clusters(ids, pairs, max_iter=20).collect()
-    }
-    assert full == {i: 0 for i in range(10)}

@@ -312,7 +312,9 @@ def _nodes(plan) -> list:
 def test_shingle_generators_split_no_text(spark):
     """Every shingle explode reads a projected token column: a
     ``split(`` inside the Generate's lambda re-tokenizes the whole text
-    once per shingle, O(T²) per document."""
+    once per shingle, O(T²) per document. No filter rebuilds the
+    shingles from the text either (Catalyst infers one from an explode
+    of a column and pushes it below the projections)."""
     from hiispider_spark.operators import contamination, dedup, quality
 
     docs = spark.createDataFrame(
@@ -333,6 +335,40 @@ def test_shingle_generators_split_no_text(spark):
         assert gens
         for g in gens:
             assert "split(" not in g.generator().toString()
+        for f in _nodes(df._jdf.queryExecution().optimizedPlan()):
+            if f.nodeName() == "Filter":
+                assert "split(" not in f.condition().toString()
+
+
+def test_document_profile_splits_each_text_at_most_twice(spark):
+    """The token arrays (as is and lowered) are projected once and every
+    statistic reads them; building each from the text would split it
+    once per statistic."""
+    from hiispider_spark.operators import textstats
+
+    docs = spark.createDataFrame(
+        [(0, "The quick brown fox.")], "doc_id long, text string"
+    )
+    df = textstats.document_profile(docs, "doc_id", "text")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") <= 2, plan.count("split(")
+
+
+def test_contamination_shingles_each_input_once(spark):
+    """One shingle Generate per input: the eval side's shingle count
+    rides on its exploded rows, not on a second explode."""
+    from hiispider_spark.operators import contamination
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d e f g h i j")], "doc_id long, text string"
+    )
+    ev = spark.createDataFrame([(9, "c d e f g")], "eval_id long, text string")
+    df = contamination.ngram_contamination(docs, ev, n=4)
+    gens = [
+        n for n in _nodes(df._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "Generate"
+    ]
+    assert len(gens) == 2, len(gens)
 
 
 def test_decontaminate_corpus_side_never_shuffles(spark):
