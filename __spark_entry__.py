@@ -8,16 +8,14 @@ deterministically from the driver's ``lineitem``/``documents`` views by
 :mod:`hiispider_spark.sources.synth`, whose rules are mirrored SQL-side
 by ``oracle_ctes()`` — so crawl operators get real value-level oracles.
 
-Non-SQL-expressible ops (SipHash identity, bloom bytes, the xxhash64
-SimHash bits, IVF ANN, multimodal featurization, the stateful epoch
-loop) appear in ``queries()`` without an oracle entry → they get
-rows-only checks; their exact semantics are covered by
-`python -m pytest -x -q` instead (tests/golden/). MinHash+LSH has one
-implementation over a hash family DuckDB mirrors, value-oracle-checked
-at 16 hashes / 4 bands (``dedup_minhash_portable``); the xxhash64
-SimHash ships an engine-portable twin (``dedup_simhash_portable``)
-whose full pipeline IS value-oracle-checked, and the hyperplane LSH +
-BPE counting queries carry value oracles directly.
+Every query has a value oracle. The hash-based dedup operators hash
+with families DuckDB computes value for value: MinHash+LSH and the
+64-bit SimHash are checked together at the production shape (32
+hashes / 8 bands, hamming ≤ 8: ``dedup_lsh_fast``) and at a smaller
+one (16 / 4, hamming ≤ 6: ``dedup_fingerprint_portable``). What the
+SQL twins do not mirror (SipHash bytes, bloom filter bits, the
+stateful epoch loop) is covered by `python -m pytest -x -q`
+(tests/golden/).
 """
 
 from __future__ import annotations
@@ -476,40 +474,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=2, threshold=0.08)
 
     q["dedup_ngram_jaccard"] = q_dedup_ngram_jaccard
-
-    def q_dedup_minhash_lsh(spark, sf):  # oracle-checked at (16, 4) below
-        docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
-        return dd.minhash_lsh_pairs(docs, "doc_id", "text")
-
-    q["dedup_minhash_lsh"] = q_dedup_minhash_lsh
-
-    def q_dedup_minhash_portable(spark, sf):
-        # the same MinHash at 16 hashes / 4 bands: DuckDB mirrors the
-        # full MinHash+LSH pipeline at this shape value for value
-        docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
-        return dd.minhash_lsh_pairs(docs, "doc_id", "text", n_hashes=16, bands=4)
-
-    q["dedup_minhash_portable"] = q_dedup_minhash_portable
-
-    def q_dedup_simhash(spark, sf):  # no SQL oracle (xxhash64 bits)
-        docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
-        return dd.simhash_near_dups(docs, "doc_id", "text", max_hamming=8)
-
-    q["dedup_simhash"] = q_dedup_simhash
-
-    def q_dedup_simhash_portable(spark, sf):
-        # portable per-bit hash family → DuckDB mirrors the FULL 32-bit
-        # SimHash signature value-for-value (the 64-bit xxhash64 variant
-        # above stays the production path, graded rows-only)
-        # t=3 on 32 bits: 4 blocks of 8 bits — selective join keys and
-        # a discriminative threshold (t=8/32 matches most of this
-        # templated corpus)
-        docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
-        return dd.simhash_near_dups_portable(
-            docs, "doc_id", "text", max_hamming=3
-        )
-
-    q["dedup_simhash_portable"] = q_dedup_simhash_portable
 
     def q_text_profile(spark, sf):
         return ts.document_profile(_docs(spark, sf), "doc_id", "text")
@@ -1396,27 +1360,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return a.unionByName(b)
 
-    def q_dedup_lsh_fast(spark, sf):  # rows-only (xxhash64 SimHash half)
-        a = q["dedup_minhash_lsh"](spark, sf).select(
-            F.lit("minhash").alias("variant"), "doc_a", "doc_b",
-            F.col("n_bands_hit").cast("double").alias("score"),
-        )
-        b = q["dedup_simhash"](spark, sf).select(
-            F.lit("simhash").alias("variant"), "doc_a", "doc_b",
-            F.col("hamming").cast("double").alias("score"),
-        )
-        return a.unionByName(b)
+    def q_fingerprint_suite(n_hashes, bands, max_hamming):
+        # MinHash+LSH and SimHash pairs of the first 200 documents
+        def run(spark, sf):
+            docs = _docs(spark, sf).filter(F.col("doc_id") < 200)
+            a = dd.minhash_lsh_pairs(
+                docs, "doc_id", "text", n_hashes=n_hashes, bands=bands
+            ).select(
+                F.lit("minhash").alias("variant"), "doc_a", "doc_b",
+                F.col("n_bands_hit").cast("double").alias("score"),
+            )
+            b = dd.simhash_near_dups(docs, "doc_id", "text", max_hamming).select(
+                F.lit("simhash").alias("variant"), "doc_a", "doc_b",
+                F.col("hamming").cast("double").alias("score"),
+            )
+            return a.unionByName(b)
 
-    def q_dedup_fp_portable(spark, sf):
-        a = q["dedup_minhash_portable"](spark, sf).select(
-            F.lit("minhash").alias("variant"), "doc_a", "doc_b",
-            F.col("n_bands_hit").cast("double").alias("score"),
-        )
-        b = q["dedup_simhash_portable"](spark, sf).select(
-            F.lit("simhash").alias("variant"), "doc_a", "doc_b",
-            F.col("hamming").cast("double").alias("score"),
-        )
-        return a.unionByName(b)
+        return run
 
     def q_text_profile_suite(spark, sf):
         return q["text_profile"](spark, sf).join(
@@ -1540,8 +1500,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_stats": q_host_stats_suite,
         "plugin_routing": q_extract_suite,
         "canonicalize_dedup": q_canon_suite,
-        "dedup_lsh_fast": q_dedup_lsh_fast,
-        "dedup_fingerprint_portable": q_dedup_fp_portable,
+        # the production shape, and a smaller one: 16 hashes / 4 bands
+        # and hamming ≤ 6 of 64 bits
+        "dedup_lsh_fast": q_fingerprint_suite(32, 8, 8),
+        "dedup_fingerprint_portable": q_fingerprint_suite(16, 4, 6),
         "text_profile": q_text_profile_suite,
         "quality_gopher": q_quality_suite,
         "stratified_sample": q_sample_suite,
@@ -1764,35 +1726,36 @@ JOIN sizes sa ON sa.doc_id = i.doc_a
 JOIN sizes sb ON sb.doc_id = i.doc_b
 WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_grams + sb.n_grams - i.n_inter) >= 0.08"""
 
-    # portable MinHash+LSH twin: coefficients, banding and shingle
-    # width generated from the SAME module constants the numpy UDF uses
-    _K = dd.SHINGLE_K
+    # MinHash+LSH twin: coefficients, banding and shingle width
+    # generated from the SAME module constants the numpy UDF uses
     _P = dd.MINHASH_P
-    _coeffs = dd.minhash_coeffs(16)
-    _mh_exprs = ",\n    ".join(
-        f"list_min([({a} * x + {b}) % {_P} FOR x IN fps]) AS mh_{i}"
-        for i, (a, b) in enumerate(_coeffs)
-    )
-    _band_exprs = []
-    for _b in range(4):
-        _acc = "CAST(7 AS BIGINT)"
-        for _r in range(4):
-            _acc = f"(({_acc}) * 31 + mh_{_b * 4 + _r}) % {_P}"
-        _band_exprs.append(f"{_acc} AS band_{_b}")
-    _bands_sql = ",\n    ".join(_band_exprs)
-    _stack_sql = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-        for b in range(4)
-    )
-    o["dedup_minhash_portable"] = f"""
+
+    def minhash_sql(n_hashes, bands):
+        per_band = n_hashes // bands
+        mh = ",\n    ".join(
+            f"list_min([({a} * x + {b}) % {_P} FOR x IN fps]) AS mh_{i}"
+            for i, (a, b) in enumerate(dd.minhash_coeffs(n_hashes))
+        )
+        band_exprs = []
+        for band in range(bands):
+            acc = "CAST(7 AS BIGINT)"
+            for r in range(per_band):
+                acc = f"(({acc}) * 31 + mh_{band * per_band + r}) % {_P}"
+            band_exprs.append(f"{acc} AS band_{band}")
+        bands_sql = ",\n    ".join(band_exprs)
+        stack = " UNION ALL ".join(
+            f"SELECT doc_id, {band} AS band_idx, band_{band} AS bh FROM bands"
+            for band in range(bands)
+        )
+        return f"""
 WITH base AS (
   SELECT doc_id, regexp_replace(text, ' #\\d+$', '') AS t
   FROM documents WHERE doc_id < 200
 ),
 sh AS (
   SELECT doc_id,
-    list_distinct([substr(t, i+1, {_K})
-                   FOR i IN range(greatest(length(t) - {_K}, 0) + 1)]) AS shs
+    list_distinct([substr(t, i+1, {dd.SHINGLE_K})
+                   FOR i IN range(greatest(length(t) - {dd.SHINGLE_K}, 0) + 1)]) AS shs
   FROM base
 ),
 fp AS (
@@ -1804,30 +1767,32 @@ fp AS (
   FROM sh
 ),
 sig AS (
-  SELECT doc_id, {_mh_exprs}
+  SELECT doc_id, {mh}
   FROM fp
 ),
 bands AS (
-  SELECT doc_id, {_bands_sql} FROM sig
+  SELECT doc_id, {bands_sql} FROM sig
 ),
-stacked AS ({_stack_sql})
+stacked AS ({stack})
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands_hit
 FROM stacked a JOIN stacked b
   ON a.band_idx = b.band_idx AND a.bh = b.bh AND a.doc_id < b.doc_id
 GROUP BY 1, 2"""
 
-    # portable SimHash twin: 32 signature bits, each an independent
-    # universal hash of the token char-fp — coefficients generated from
-    # the SAME module constants the Spark exprs use. The oracle skips
-    # the (lossless) pigeonhole block prefilter and verifies all pairs
-    # directly: identical result set by construction.
-    _sh_bits = "\n     + ".join(
-        f"(CASE WHEN coalesce(list_sum([CASE WHEN (({a} * fp + {c}) % {_P}) % 2 = 1 "
+    # SimHash twin: the 64 signature bits, each the high bit of a
+    # universal hash of the token char-fp, with the Spark side's
+    # coefficients. Bit 63 does not fit BIGINT, so the signature is a
+    # UBIGINT. The oracle skips the (lossless) pigeonhole block
+    # prefilter and verifies all pairs directly.
+    _sh_bits = "\n     | ".join(
+        f"(CASE WHEN coalesce(list_sum([CASE WHEN (({a} * fp + {c}) % {_P}) * 2 >= {_P} "
         f"THEN 1 ELSE -1 END FOR fp IN fps]), 0) > 0 "
-        f"THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for b, (a, c) in enumerate(dd.simhash_coeffs(32))
+        f"THEN CAST({1 << b} AS UBIGINT) ELSE CAST(0 AS UBIGINT) END)"
+        for b, (a, c) in enumerate(dd.SIMHASH_COEFFS)
     )
-    o["dedup_simhash_portable"] = f"""
+
+    def simhash_sql(max_hamming):
+        return f"""
 WITH base AS (
   SELECT doc_id, regexp_replace(text, ' #\\d+$', '') AS t
   FROM documents WHERE doc_id < 200
@@ -1851,7 +1816,19 @@ sig AS (
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.sig, b.sig)) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sig, b.sig)) <= 3"""
+WHERE bit_count(xor(a.sig, b.sig)) <= {max_hamming}"""
+
+    def fingerprint_sql(n_hashes, bands, max_hamming):
+        return f"""
+SELECT 'minhash' AS variant, doc_a, doc_b,
+       CAST(n_bands_hit AS DOUBLE) AS score
+FROM ({minhash_sql(n_hashes, bands)})
+UNION ALL
+SELECT 'simhash' AS variant, doc_a, doc_b, CAST(hamming AS DOUBLE) AS score
+FROM ({simhash_sql(max_hamming)})"""
+
+    o["dedup_lsh_fast"] = fingerprint_sql(32, 8, 8)
+    o["dedup_fingerprint_portable"] = fingerprint_sql(16, 4, 6)
 
     stop = {
         lang: ", ".join(f"'{w}'" for w in ws)
@@ -2953,14 +2930,6 @@ SELECT 'seeds' AS variant, CAST(NULL AS VARCHAR) AS sitemap_url, url,
        CAST(NULL AS VARCHAR) AS warc_file,
        CAST(NULL AS VARCHAR) AS redirect
 FROM ({_cdx_seeds_sql})"""
-
-    o["dedup_fingerprint_portable"] = f"""
-SELECT 'minhash' AS variant, doc_a, doc_b,
-       CAST(n_bands_hit AS DOUBLE) AS score
-FROM ({o.pop("dedup_minhash_portable")})
-UNION ALL
-SELECT 'simhash' AS variant, doc_a, doc_b, CAST(hamming AS DOUBLE) AS score
-FROM ({o.pop("dedup_simhash_portable")})"""
 
     o["text_profile"] = f"""
 SELECT t.*, s.* EXCLUDE (doc_id)

@@ -13,8 +13,9 @@ corpus needs content-level dedup before training. Four tiers, each a
                 scale path); one Arrow UDF computes a batch's band
                 hashes in numpy over a hash family DuckDB mirrors
                 value for value, one shuffle for the band join
-- SimHash:      64-bit sign-sum fingerprint; near-dups differ in few
-                bits (hamming ≤ t)
+- SimHash:      64-bit sign-sum fingerprint over a portable hash
+                family DuckDB mirrors; near-dups differ in few bits
+                (hamming ≤ t)
 
 Scale notes: MinHash/LSH is the only one that survives 10^9 docs —
 band-bucket join keys are (band_idx, band_hash), high-cardinality and
@@ -388,74 +389,102 @@ def minhash_lsh_pairs(
     return _banded_pairs(stacked, bucket_cap)
 
 
-def simhash_col(tokens: Column) -> Column:
-    """64-bit SimHash: per-bit sign-sum of token xxhash64 values.
+# ---- SimHash over the portable hash family ----
+# A 64-bit sign-sum signature (Charikar '02) whose bit b, per token, is
+# the high bit of a universal hash of the token's character polynomial:
+#   bit_b(token) = 1 iff 2·((a_b·fp(token) + c_b) mod p) ≥ p
+# with fp the rolling polynomial of the MinHash family above, so DuckDB
+# computes every signature bit identically (the SimHash SQL of
+# ``oracle_sql()``). The high bit, not the low one: tokens such as tok0,
+# tok1, ... have fingerprints in arithmetic progression, over which the
+# low bit of a linear map alternates, the sign sums sit near 0 and one
+# extra token flips many bits.
 
-    bit_b(sig) = 1 iff sum over tokens of (+1 if bit b of hash else -1) > 0.
 
-    Single-pass fold: ONE aggregate over the token hashes carrying a
-    64-counter array accumulator (transform-with-index updates all 64
-    sign-sums per token), instead of 64 separate aggregates that each
-    re-traverse the array. Higher-order functions are interpreted per
-    element, so traversal count is the cost driver: measured 8× faster
-    (10.9 s → 1.3 s, 5 k docs × 80 tokens) and bit-identical — per bit
-    the ±1 sum accumulates in the same token order.
-    """
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    one = F.lit(1).cast("long")
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.transform(
-            acc,
-            # shiftright via call_function: the index is a Column and
-            # F.shiftright only takes a literal bit count
-            lambda x, i: x
-            + F.when(
-                F.call_function("shiftright", h, i).bitwiseAND(F.lit(1))
-                == 1,
-                one,
-            ).otherwise(-one),
+def char_fp_col(s: Column) -> Column:
+    """Engine-portable polynomial hash of a string's characters:
+    acc = (acc·31 + codepoint) mod p, acc₀ = 7. Every intermediate
+    stays within int64. Empty string → 7 (the seed), matching the SQL
+    twin's empty list_reduce prepend."""
+    codes = F.when(
+        F.length(s) >= 1,
+        F.transform(
+            F.sequence(F.lit(1), F.length(s)),
+            lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"),
         ),
-    )
+    ).otherwise(F.array().cast("array<long>"))
     return F.aggregate(
-        F.zip_with(
-            counts,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda c, b: F.when(
-                c > 0, F.call_function("shiftleft", one, b)
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
+        codes,
+        F.lit(7).cast("long"),
+        lambda acc, c: (acc * 31 + c) % MINHASH_P,
     )
+
+
+#: (a_b, c_b) of each of the 64 signature bits, a ∈ [1, p-1],
+#: c ∈ [0, p-1]: a splitmix stream disjoint from minhash_coeffs'
+SIMHASH_COEFFS = [
+    (
+        (_mh_splitmix(1000 + 2 * b) % (MINHASH_P - 1)) + 1,
+        _mh_splitmix(1000 + 2 * b + 1) % MINHASH_P,
+    )
+    for b in range(64)
+]
 
 
 def simhash_near_dups(
     docs: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """SimHash near-duplicate pairs within hamming distance ≤ t.
+    """SimHash near-duplicate pairs (doc_a < doc_b, hamming ≤ t).
 
-    Pigeonhole prefilter: with B > t blocks, any pair within hamming t
-    shares at least one identical block, so the block equi-join is a
-    lossless candidate generator; exact hamming filters after. B adapts
-    to t (B = t+1, capped at 16 so blocks stay ≥4 bits and the join
-    keys stay selective).
+    The signature is one aggregate over the token fingerprints carrying
+    64 sign-sums (one transform-with-index updates them all per token),
+    not 64 aggregates that each re-traverse the tokens: higher-order
+    functions are interpreted per element, so traversals are the cost.
+    The coefficients ride as literal arrays indexed by the position.
+    Every intermediate is below p² < 2⁶³; bit 63 is the sign bit.
+
+    Pigeonhole prefilter: with B > t blocks (B = t+1, at least 2), any
+    pair within hamming t shares at least one identical block, so the
+    block equi-join is a lossless candidate generator; exact hamming
+    filters after. A larger t makes narrower blocks and less selective
+    join keys; t ≥ 64 (every pair) has no lossless split and is refused.
     """
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"),
-        simhash_col(tokens_col(normalized_text(F.col(text_col)))).alias("sig"),
+    if not 0 <= max_hamming < 64:
+        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
+    fps = F.transform(
+        tokens_col(normalized_text(F.col(text_col))), char_fp_col
     )
-    return _blocked_hamming_pairs(sig, max_hamming, n_bits=64)
-
-
-def _blocked_hamming_pairs(
-    sig: DataFrame, max_hamming: int, n_bits: int
-) -> DataFrame:
-    """(doc_a, doc_b, hamming ≤ max_hamming) from a (doc_id, sig) frame
-    via the pigeonhole block equi-join (see simhash_near_dups)."""
-    n_blocks = min(max(max_hamming + 1, 2), 16)
-    base, rem = divmod(n_bits, n_blocks)
+    av = F.array(*[F.lit(a).cast("long") for a, _ in SIMHASH_COEFFS])
+    cv = F.array(*[F.lit(c).cast("long") for _, c in SIMHASH_COEFFS])
+    one = F.lit(1).cast("long")
+    counts = F.aggregate(
+        fps,
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, h: F.transform(
+            acc,
+            lambda x, i: x
+            + F.when(
+                ((F.get(av, i) * h + F.get(cv, i)) % MINHASH_P) * 2
+                >= MINHASH_P,
+                one,
+            ).otherwise(-one),
+        ),
+    )
+    sig_col = F.aggregate(
+        F.zip_with(
+            counts,
+            F.sequence(F.lit(0), F.lit(63)),
+            # shiftleft via call_function: the bit index is a Column
+            lambda c, b: F.when(
+                c > 0, F.call_function("shiftleft", one, b)
+            ).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda s, x: s.bitwiseOR(x),
+    )
+    sig = docs.select(F.col(id_col).alias("doc_id"), sig_col.alias("sig"))
+    n_blocks = max(max_hamming + 1, 2)  # one 64-bit block's mask overflows
+    base, rem = divmod(64, n_blocks)
     widths = [base + (i < rem) for i in range(n_blocks)]
     starts = [sum(widths[:i]) for i in range(n_blocks)]
     blk = [
@@ -487,108 +516,3 @@ def _blocked_hamming_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-# ---- portable-hash SimHash (engine-portable → real value oracle) ----
-# The xxhash64 SimHash above is the fast JVM path (rows-only grading).
-# This variant derives each signature bit from an independent portable
-# universal hash — bit_b(token) = ((a_b·fp(token) + c_b) mod p) mod 2,
-# fp = the char-rolling polynomial both engines compute identically —
-# so DuckDB mirrors the signature bit-for-bit and the pair set is value
-# oracle-checked. 32 bits (not 64): the oracle reassembles sig as a sum
-# of 1<<b terms, which must stay inside BIGINT on both engines. The
-# per-bit sign-sum construction is standard SimHash (Charikar '02) with
-# an explicit hash family instead of "bits of one 64-bit hash". Both
-# families stay: this bit is weak — at 64 bits it puts the near-dup
-# pair of test_simhash_near_dup_small_hamming at hamming 14, where the
-# xxhash64 bits give 5.
-
-
-def char_fp_col(s: Column) -> Column:
-    """Engine-portable polynomial hash of a string's characters:
-    acc = (acc·31 + codepoint) mod p, acc₀ = 7. Every intermediate
-    stays within int64. Empty string → 7 (the seed), matching the SQL
-    twin's empty list_reduce prepend."""
-    codes = F.when(
-        F.length(s) >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.length(s)),
-            lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.aggregate(
-        codes,
-        F.lit(7).cast("long"),
-        lambda acc, c: (acc * 31 + c) % MINHASH_P,
-    )
-
-
-def simhash_coeffs(n_bits: int) -> list[tuple[int, int]]:
-    """Deterministic (a_b, c_b), a ∈ [1,p-1], c ∈ [0,p-1] — disjoint
-    splitmix stream from minhash_coeffs (offset 1000)."""
-    return [
-        (
-            (_mh_splitmix(1000 + 2 * b) % (MINHASH_P - 1)) + 1,
-            _mh_splitmix(1000 + 2 * b + 1) % MINHASH_P,
-        )
-        for b in range(n_bits)
-    ]
-
-
-def simhash_portable_col(tokens: Column, n_bits: int = 32) -> Column:
-    """Engine-portable SimHash signature (pure integer arithmetic, all
-    intermediates < p² < 2⁶³).
-
-    Same single-pass fold as :func:`simhash_col` — one aggregate with
-    an n_bits-counter accumulator; the per-bit (a_b, c_b) coefficients
-    ride as literal arrays indexed by the transform's position column
-    (bit-identical: each bit's ±1 sum accumulates in token order)."""
-    fps = F.transform(tokens, char_fp_col)
-    coeffs = simhash_coeffs(n_bits)
-    av = F.array(*[F.lit(a).cast("long") for a, _ in coeffs])
-    cv = F.array(*[F.lit(c).cast("long") for _, c in coeffs])
-    one = F.lit(1).cast("long")
-    counts = F.aggregate(
-        fps,
-        F.array_repeat(F.lit(0).cast("long"), n_bits),
-        lambda acc, h: F.transform(
-            acc,
-            lambda x, i: x
-            + F.when(
-                ((F.get(av, i) * h + F.get(cv, i)) % MINHASH_P) % 2 == 1,
-                one,
-            ).otherwise(-one),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            F.sequence(F.lit(0), F.lit(n_bits - 1)),
-            lambda c, b: F.when(
-                c > 0, F.call_function("shiftleft", one, b)
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-
-
-def simhash_near_dups_portable(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 8,
-    n_bits: int = 32,
-) -> DataFrame:
-    """SimHash near-dups with the portable hash family — identical
-    output computable by the DuckDB oracle (which skips the lossless
-    block prefilter and verifies all pairs directly; same result set).
-    Same (doc_a, doc_b, hamming) contract as :func:`simhash_near_dups`.
-    """
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"),
-        simhash_portable_col(
-            tokens_col(normalized_text(F.col(text_col))), n_bits
-        ).alias("sig"),
-    )
-    return _blocked_hamming_pairs(sig, max_hamming, n_bits=n_bits)

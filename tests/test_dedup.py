@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,6 +94,67 @@ def _ref_fp(s):
     for ch in s:
         acc = (acc * 31 + ord(ch)) % dd.MINHASH_P
     return acc
+
+
+def _ref_simhash(t):
+    """Pure-Python 64-bit SimHash of the portable family: bit b is set
+    when most tokens have 2·((a_b·fp + c_b) mod p) ≥ p. None for null."""
+    if t is None:
+        return None
+    toks = [w for w in re.sub(dd.UNIQ_SUFFIX_RE, "", t).split(" ") if w]
+    sig = 0
+    for b, (a, c) in enumerate(dd.SIMHASH_COEFFS):
+        votes = sum(
+            1 if (a * _ref_fp(w) + c) % dd.MINHASH_P * 2 >= dd.MINHASH_P else -1
+            for w in toks
+        )
+        if votes > 0:
+            sig |= 1 << b
+    return sig
+
+
+def test_simhash_matches_python_reference(spark):
+    """simhash_near_dups returns exactly the pairs, and hammings, of an
+    independent pure-Python SimHash: signatures that set bit 63 (the
+    sign bit of Spark's long), the uniqueness suffix, empty and null
+    texts, CJK and a character above U+FFFF. At t = 40 the block
+    prefilter splits 64 bits into 41 blocks and must still lose no
+    pair."""
+    import itertools
+
+    words = " ".join(f"tok{i}" for i in range(60))
+    texts = {
+        1: words,
+        2: words + " extra",
+        3: " ".join(f"z{i}" for i in range(60)),
+        4: "alpha beta gamma",
+        5: "hello world #17",
+        6: "hello world",
+        7: "",
+        8: None,
+        9: "漢字 かな",
+        10: "a😀b c",
+        11: "  spaced   out  ",
+        12: "x",
+    }
+    sigs = {d: _ref_simhash(t) for d, t in texts.items()}
+    assert sigs[4] >> 63 and sigs[6] >> 63 and not sigs[1] >> 63
+    docs = _docs(spark, sorted(texts.items()))
+    for t in (10, 40):
+        got = {
+            (r.doc_a, r.doc_b): r.hamming
+            for r in dd.simhash_near_dups(docs, "doc_id", "text", t).collect()
+        }
+        expected = {}
+        for a, b in itertools.combinations(sorted(texts), 2):
+            if sigs[a] is not None and sigs[b] is not None:
+                h = bin(sigs[a] ^ sigs[b]).count("1")
+                if h <= t:
+                    expected[(a, b)] = h
+        assert got == expected
+    assert got[(1, 2)] == 6 and got[(5, 6)] == 0
+    with pytest.raises(ValueError):
+        dd.simhash_near_dups(docs, "doc_id", "text", 64)
 
 
 def _ref_band_vals(t, n_hashes, bands):
